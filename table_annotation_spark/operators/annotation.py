@@ -1,34 +1,47 @@
 """Stage 4 — annotate: CEA / CTA / CPA via the reference's exactly-4-pass
-dataflow, expressed entirely as DataFrame transformations.
+dataflow (the reference's annotation/table_annotation.py:51-112).
 
-Pass structure (mirrors /root/reference/annotation/table_annotation.py:51-112):
+Two halves:
 
-  pass 1: entity_scores¹ = 0.1·sim (context weights not yet known)
-          CEA¹ (all candidates) → CPA¹ (voting, all pairs)
-  pass 2: soft re-weighting (C10) + entity_scores² (CPA-scaled context)
-          CEA² (all) → CTA² (all)
-  pass 3: CEA³ (only_one, CTA²-boosted) → CTA³ (only_one) → CPA³ (from CEA³)
-  pass 4: literal-context restriction (C10 onlyLiteralContext) +
-          entity_scores³ (last_step: contextless cells, potential candidates)
-          CEA⁴ → CTA⁴ → CPA⁴ (all only_one)
+- ``build_inputs`` — the GLOBAL KG-side joins, as DataFrames in dependency
+  waves w0–w2: the per-table co-occurring entity pairs, the entity types and
+  pid sets, the literal-match kernel over distinct value tuples, and the
+  1/2-hop relations of every distinct co-occurring pair.
+- ``annotate_table`` — everything per table, as ONE grouped-map kernel
+  (``groupBy("table_id").applyInPandas``): context scoring (C6/C10, the row
+  pair gates, context entries and relation sets) and passes 1–4. Nothing in
+  them crosses tables, so each table's candidates and its slice of the
+  KG-side inputs travel as one pandas group and the passes run as vectorized
+  pandas (merge / groupby / sort), no per-row Python:
 
-Every reference memo-dict is a join; every voting counter is a groupBy; every
-ranking is a window. Where the reference breaks ties by dict/stable-sort
-order we add deterministic tie-breaks (entity/rel ascending) — documented
-deviation, SURVEY §3.1.
+    pass 1: entity_scores¹ = 0.1·sim (context weights not yet known)
+            CEA¹ (all candidates) → CPA¹ (voting, all pairs)
+    pass 2: soft re-weighting (C10) + entity_scores² (CPA-scaled context)
+            CEA² (all) → CTA² (all)
+    pass 3: CEA³ (only_one, CTA²-boosted) → CTA³ (only_one) → CPA³ (from CEA³)
+    pass 4: literal-context restriction (C10 onlyLiteralContext) +
+            entity_scores³ (last_step: contextless cells, potential candidates)
+            CEA⁴ → CTA⁴ → CPA⁴ (all only_one)
 
-Scale notes: all intermediates are keyed by (table_id, …) and the KG-side
-inputs arrive pre-deduped from annotation_context (global distinct pairs /
-entities). No driver-side loops; the 4 passes are a fixed-depth DAG,
-checkpointable between passes.
+Where the reference breaks ties by dict/stable-sort order we add
+deterministic tie-breaks (entity / rel / type ascending; rank 1 = output) —
+documented deviation, SURVEY §3.1. Sums run in row / context-column order,
+so equal vote sequences give bit-equal totals and ties stay ties.
+
+Limit: one table's annotation state (candidates × context columns) must fit
+in one Python worker — see RUNBOOK.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..session import bcast
 
@@ -37,28 +50,25 @@ from . import annotation_context as ctx
 SEMANTIC_W = 1.0   # annotation_models.py:110
 LITERAL_W = 0.3    # annotation_models.py:111
 CTA_LEVEL_W = {1: 1.0, 2: 0.7, 3: 0.2}  # annotation_models.py:151
+LIT_CLASSES = ("date", "numeral_unit", "numeral", "textual")
 
 
 # --------------------------------------------------------------------- inputs
 @dataclass
 class AnnotInputs:
-    cand: DataFrame = None        # (table_id,row_idx,col_idx,cell,entity,sim)
-    ecols: DataFrame = None       # (table_id,col_idx)
-    lcols: DataFrame = None       # (table_id,col_idx,lit_class)
-    tbl: DataFrame = None         # (table_id,n_cols,n_data_rows)
-    ecol_pairs: DataFrame = None  # (table_id,head_col,tail_col) entity-entity, head<tail
-    el_pairs: DataFrame = None    # (table_id,head_col,tail_col) entity-literal, tail>head
-    row_pairs: DataFrame = None   # per-row candidate pairs with gated ctx scores
-    pair_rel: DataFrame = None    # (head_ent,tail_ent,rel,prox) all co-occurring pairs
-    cached_rel: DataFrame = None  # pair_rel restricted to reliably-connected pairs
-    lit_cpa: DataFrame = None     # (entity,lit_cell,pid) literal CPA cache
-    lit_cells: DataFrame = None   # (table_id,row_idx,lit_col,lit_cell)
-    ctx_entries: DataFrame = None # (t,r,c,entity,ctx_col,ctx_kind,score)
-    ctx_rels: DataFrame = None    # (t,r,c,entity,ctx_col,rel)
-    types: DataFrame = None       # (entity,type,level,rank)
-    super_t: DataFrame = None     # (type,supertype)
-    ent_pids: DataFrame = None    # (entity,pid)
-    edges: DataFrame = None
+    cand: DataFrame = None         # (table_id,row_idx,col_idx,cell,entity,sim)
+    col_classes: DataFrame = None  # (table_id,col_idx,col_class)
+    tbl: DataFrame = None          # (table_id,n_cols,n_data_rows)
+    ecol_pairs: DataFrame = None   # (table_id,head_col,tail_col) entity-entity, head<tail
+    el_pairs: DataFrame = None     # (table_id,head_col,tail_col) entity-literal, tail>head
+    lit_cells: DataFrame = None    # (table_id,row_idx,lit_col,lit_cell)
+    table_pairs: DataFrame = None  # (table_id,head_ent,tail_ent) co-occurring on a row
+    pair_rel: DataFrame = None     # (head_ent,tail_ent,rel,prox) all co-occurring pairs
+    lit_match: DataFrame = None    # (t,r,col_idx,entity,lit_col,lit_class,pid,match_score,lit_cell)
+    types: DataFrame = None        # (entity,type,level,rank)
+    super_t: DataFrame = None      # (type,supertype)
+    type_nb: DataFrame = None      # (type,neighbor)
+    ent_pids: DataFrame = None     # (entity,pid)
 
 
 def _frame_inputs(body: DataFrame, col_classes: DataFrame) -> dict:
@@ -67,9 +77,9 @@ def _frame_inputs(body: DataFrame, col_classes: DataFrame) -> dict:
     ecols = col_classes.where(F.col("col_class") == "entity").select(
         "table_id", "col_idx"
     )
-    lcols = col_classes.where(
-        F.col("col_class").isin("date", "numeral_unit", "numeral", "textual")
-    ).select("table_id", "col_idx", F.col("col_class").alias("lit_class"))
+    lcols = col_classes.where(F.col("col_class").isin(*LIT_CLASSES)).select(
+        "table_id", "col_idx", F.col("col_class").alias("lit_class")
+    )
 
     e1 = ecols.select("table_id", F.col("col_idx").alias("head_col"))
     e2 = ecols.select("table_id", F.col("col_idx").alias("tail_col"))
@@ -89,8 +99,8 @@ def _frame_inputs(body: DataFrame, col_classes: DataFrame) -> dict:
         .select("table_id", "row_idx", F.col("col_idx").alias("lit_col"), "lit_cell")
     )
     return {
-        "ecols": ecols, "lcols": lcols, "ecol_pairs": ecol_pairs,
-        "el_pairs": el_pairs, "tbl": tbl, "lit_cells": lit_cells,
+        "ecol_pairs": ecol_pairs, "el_pairs": el_pairs, "tbl": tbl,
+        "lit_cells": lit_cells,
     }
 
 
@@ -100,7 +110,6 @@ def build_light_inputs(body: DataFrame, col_classes: DataFrame) -> AnnotInputs:
     annotate() is skipped entirely."""
     fr = _frame_inputs(body, col_classes)
     return AnnotInputs(
-        ecols=fr["ecols"], lcols=fr["lcols"], tbl=fr["tbl"],
         ecol_pairs=fr["ecol_pairs"], el_pairs=fr["el_pairs"],
         lit_cells=fr["lit_cells"],
     )
@@ -110,18 +119,12 @@ def _localize(df: DataFrame) -> DataFrame:
     """Driver-localize a tiny dim frame under the small-corpus posture:
     collect it once and rebuild it as a LocalRelation. Every later broadcast
     of the frame then costs a no-job local copy instead of a re-evaluated
-    plan + collect job — the per-table / per-column-pair dims are hinted into
-    ~20 joins across the 4 passes, and each hint used to re-run the dim's
-    aggregation inside serial broadcast evaluation (the main per-job driver
-    latency term at bench scale). Gated on the same conf as ``bcast``: in the
+    plan + collect job. Gated on the same conf as ``bcast``: in the
     large-corpus posture these frames grow with the corpus (O(#tables) rows)
     and must stay distributed — AQE picks their join strategies there."""
     spark = df.sparkSession
-    try:
-        if spark.conf.get("spark.graft.forcedBroadcast", "true") == "false":
-            return df
-    except Exception:
-        pass
+    if spark.conf.get("spark.graft.forcedBroadcast", "true") == "false":
+        return df
     return spark.createDataFrame(df.collect(), schema=df.schema)
 
 
@@ -134,13 +137,8 @@ def build_inputs(
     multihop: bool = True,
     timings: dict | None = None,
 ) -> AnnotInputs:
-    """Assemble all pass-invariant inputs (the scale-heavy KG joins)."""
-    # ONE upfront exchange on table_id: every annotation-side join, groupBy
-    # and window clusters on (table_id, ...), and HashPartitioning(table_id)
-    # satisfies clustering on any superset of keys — so this single shuffle
-    # replaces the per-operator exchanges across all four passes (the small
-    # dims that join in are explicitly broadcast below; lazily-checkpointed
-    # frames carry no stats, so auto-broadcast never fires with AQE off).
+    """Assemble the pass-invariant KG-side inputs (the scale-heavy global
+    joins). Per-table work is left to ``annotate_table``."""
     import time as _t
 
     _marks: list[tuple[str, float]] = [("start", _t.time())]
@@ -148,15 +146,14 @@ def build_inputs(
     def _mark(label: str) -> None:
         _marks.append((label, _t.time()))
 
+    # ONE upfront exchange on table_id: the per-table pair join below and the
+    # kernel's groupBy both cluster on table_id and reuse it
     cand = cand.select(
         "table_id", "row_idx", "col_idx", "cell", "entity",
         F.col("score").alias("sim"),
     ).repartition("table_id")
     fr = _frame_inputs(body, col_classes)
-    lit_cells = fr["lit_cells"]
-    ecols, lcols = _localize(fr["ecols"]), _localize(fr["lcols"])
     ecol_pairs, el_pairs = _localize(fr["ecol_pairs"]), _localize(fr["el_pairs"])
-    tbl = _localize(fr["tbl"])
     _mark("localize")
 
     # Construction is INTERLEAVED with wave forcing: Dataset.localCheckpoint
@@ -164,58 +161,60 @@ def build_inputs(
     # any broadcast child on the spot — so a frame's plan must only be built
     # once every heavy frame its broadcasts read is already materialized,
     # else the broadcast evaluation recomputes that ancestor serially at
-    # plan-construction time (measured: bcast(best) inside row_pairs used to
-    # recompute pair_rel + rp_base before wave 2 ever ran). Wave membership
-    # still honors the force_parallel independence contract.
+    # plan-construction time. Wave membership honors the force_parallel
+    # independence contract.
 
     # wave 0: the shared ancestors. edges arrives as a LAZY checkpoint from
     # the pipeline — nothing has materialized it yet, so its readers can't
-    # go in the same wave; rp_base (the per-row candidate pair frame, C6
-    # domain) reads only the eager candidates checkpoint and localized dims,
-    # so it rides along. rp_base is computed ONCE and shared by BOTH
-    # consumers of the row-level self-join — the distinct co-occurring pair
-    # set that seeds pair_rel, and row_pairs (previously each ran its own
-    # h ⋈ t ⋈ ecol_pairs, the single most expensive join here, twice).
+    # go in the same wave; the per-table co-occurring pair set (C6 domain)
+    # reads only the eager candidates checkpoint and a localized dim, so it
+    # rides along. It seeds the global pair_rel and picks each table's slice
+    # of pair_rel for the kernel.
     h = cand.select(
         "table_id", "row_idx", F.col("col_idx").alias("head_col"),
-        F.col("entity").alias("head_ent"), F.col("sim").alias("head_sim"),
-        F.length("cell").alias("head_len"),
+        F.col("entity").alias("head_ent"),
     )
     t = cand.select(
         "table_id", "row_idx", F.col("col_idx").alias("tail_col"),
-        F.col("entity").alias("tail_ent"), F.col("sim").alias("tail_sim"),
-        F.length("cell").alias("tail_len"),
+        F.col("entity").alias("tail_ent"),
     )
-    rp_base = _mat(
+    table_pairs = _mat(
         h.join(t, ["table_id", "row_idx"])
         .join(bcast(ecol_pairs), ["table_id", "head_col", "tail_col"])
         .where(F.col("head_ent") != F.col("tail_ent"))
+        .select("table_id", "head_ent", "tail_ent")
+        .distinct()
     )
-    _force_wave("w0_edges_rpbase", [edges, rp_base], timings)
+    _force_wave("w0_edges_pairs", [edges, table_pairs], timings)
     _mark("w0")
 
     # wave 1: KG-side inputs — all read the now-materialized edges (degrees
     # is DERIVED from the checkpointed edges; j_lit's unit-symbol broadcast
     # scans edges at plan time, after wave 0)
-    degrees_w = degrees
     j_lit = _mat(ctx.literal_match_join(cand, body, col_classes, edges))
     ents = cand.select("entity").distinct()
     types = _mat(ctx.entity_types(ents, edges))
-    # pass-4's potential-candidates rule is ent_pids' only consumer, but it
-    # sits under a wide edges join+distinct — materialize it with the other
-    # KG-side inputs instead of inside pass 4's s3/ctxless/potential wave
     ent_pids = _mat(ctx.entity_pids(ents, edges))
-    _force_wave("w1_kg_side", [degrees_w, j_lit, types, ent_pids], timings)
+    _force_wave("w1_kg_side", [degrees, j_lit, types, ent_pids], timings)
     _mark("w1")
 
+    # supertypes and type neighbours, once over the candidate type
+    # vocabulary; a neighbour only ever counts when it is a level-1/2 type of
+    # some candidate (cea neighbour credit), so the fan-in of hub types
+    # (e.g. every holder of an occupation) never leaves this join
+    vocab = types.select("type").distinct()
     super_t = ctx.supertypes(types, edges)
+    type_nb = ctx.type_neighbors(vocab, edges).join(
+        types.where(F.col("level").isin(1, 2)).select(F.col("type").alias("neighbor")),
+        "neighbor", "left_semi",
+    )
 
     # wave 2: pair relations over the distinct co-occurring pair set (its
     # degree-damping broadcast reads wave-1's degrees) ∥ the C7 match kernel
     # over wave-1's distinct literal value tuples
     pair_rel = _mat(
         ctx.pair_relations_for_pairs(
-            rp_base.select("head_ent", "tail_ent").distinct(),
+            table_pairs.select("head_ent", "tail_ent").distinct(),
             edges, degrees, multihop,
         )
     )
@@ -223,661 +222,555 @@ def build_inputs(
     _force_wave("w2_pair_rel", [pair_rel, lit_keys], timings)
     _mark("w2")
 
-    # the rejoin is a broadcast-hash lookup over the cached row-scale domain
-    lit_match = _mat(ctx.literal_matches_from(j_lit, lit_keys))
-    lit_cpa = lit_match.select("entity", "lit_cell", "pid").distinct()
-
-    # wave 3: per-row context gates (C6, annotation_models.py:536-556).
-    # best/cached_pairs/pair_rel are bounded by the DISTINCT co-occurring
-    # pair set (not by rows), so under the small-corpus posture they
-    # broadcast and the 100×-larger row-level frames never re-shuffle.
-    best = pair_rel.groupBy("head_ent", "tail_ent").agg(F.max("prox").alias("best_prox"))
-    rp = rp_base.join(bcast(best), ["head_ent", "tail_ent"], "left")
-    thr_tail = F.when(F.col("tail_len") > 5, 0.7).otherwise(0.9)
-    thr_head = F.when(F.col("head_len") > 5, 0.7).otherwise(0.9)
-    head_score = F.when(
-        F.col("best_prox").isNotNull() & (F.col("tail_sim") >= thr_tail),
-        F.greatest(F.lit(0.1), F.col("best_prox") * F.col("tail_sim")),
-    ).otherwise(0.1)
-    tail_score = F.when(
-        F.col("best_prox").isNotNull() & (F.col("head_sim") >= thr_head),
-        F.greatest(F.lit(0.1), F.col("best_prox") * F.col("head_sim")),
-    ).otherwise(0.1)
-    row_pairs = rp.withColumn("head_score", head_score).withColumn(
-        "tail_score", tail_score
-    ).withColumn(
-        "reliable", (F.col("head_score") > 0.1) | (F.col("tail_score") > 0.1)
-    )
-    # head_len/tail_len/best_prox are consumed by the score expressions
-    # above; dropping them before the checkpoint saves their bytes in the
-    # biggest materialized frame of the engine (row-pair scale)
-    row_pairs = _mat(row_pairs.drop("head_len", "tail_len", "best_prox"))
-    _force_wave("w3_row_pairs", [row_pairs, lit_match], timings)
-    _mark("w3")
-
-    # wave 4: everything derived from row_pairs + lit_match + pair_rel
-    cached_pairs = (
-        row_pairs.where("reliable").select("head_ent", "tail_ent").distinct()
-    )
-    # materialized: cpa_task joins this in passes 1, 3 AND 4 — without the
-    # checkpoint each pass re-runs the pair_rel ⋈ reliable-pairs join
-    cached_rel = _mat(pair_rel.join(bcast(cached_pairs), ["head_ent", "tail_ent"]))
-
-    # context entries: domain = candidate × other entity cols ∪ literal cols ≥ col
-    dom_e = cand.join(
-        ecols.withColumnRenamed("col_idx", "ctx_col"), "table_id"
-    ).where(F.col("ctx_col") != F.col("col_idx"))
-    head_side = row_pairs.select(
-        "table_id", "row_idx", F.col("head_col").alias("col_idx"),
-        F.col("head_ent").alias("entity"), F.col("tail_col").alias("ctx_col"),
-        F.col("head_score").alias("s"),
-    )
-    tail_side = row_pairs.select(
-        "table_id", "row_idx", F.col("tail_col").alias("col_idx"),
-        F.col("tail_ent").alias("entity"), F.col("head_col").alias("ctx_col"),
-        F.col("tail_score").alias("s"),
-    )
-    scores_e = (
-        head_side.unionByName(tail_side)
-        .groupBy("table_id", "row_idx", "col_idx", "entity", "ctx_col")
-        .agg(F.max("s").alias("s"))
-    )
-    ctx_e = (
-        dom_e.join(scores_e, ["table_id", "row_idx", "col_idx", "entity", "ctx_col"], "left")
-        .select(
-            "table_id", "row_idx", "col_idx", "entity", "ctx_col",
-            F.lit("entity").alias("ctx_kind"),
-            F.coalesce("s", F.lit(0.1)).alias("score"),
-        )
-    )
-    dom_l = cand.join(
-        lcols.select("table_id", F.col("col_idx").alias("ctx_col")), "table_id"
-    ).where(F.col("ctx_col") >= F.col("col_idx"))
-    scores_l = lit_match.groupBy(
-        "table_id", "row_idx", "col_idx", "entity", F.col("lit_col").alias("ctx_col")
-    ).agg(F.max("match_score").alias("s"))
-    ctx_l = (
-        dom_l.join(scores_l, ["table_id", "row_idx", "col_idx", "entity", "ctx_col"], "left")
-        .select(
-            "table_id", "row_idx", "col_idx", "entity", "ctx_col",
-            F.lit("literal").alias("ctx_kind"),
-            F.coalesce("s", F.lit(0.1)).alias("score"),
-        )
-    )
-    ctx_entries = _mat(ctx_e.unionByName(ctx_l))
-
-    # one reliable-pairs ⋈ pair_rel join, cached, feeding BOTH orientations
-    # (previously computed twice — once per side)
-    rp_rel = _mat(
-        row_pairs.where("reliable")
-        .join(bcast(pair_rel), ["head_ent", "tail_ent"])
-        .select("table_id", "row_idx", "head_col", "tail_col",
-                "head_ent", "tail_ent", "rel")
-    )
-    # ctx_rels carries the ORIENTED pair columns (head_col, tail_col) from
-    # birth: they are pure functions of the entry geometry (ecol_pairs is
-    # built head<tail, el_pairs head=entity col — so rels_h/rels_t inherit
-    # row_pairs' orientation and a literal entry's head is its entity col),
-    # which lets entity_scores_soft's scale-factor lookup join ctx_rels
-    # straight against the broadcast CPA pair set instead of first joining
-    # the row-scale weighted-entries frame on the 5-column entry key (a
-    # big-big sort-merge join that ran once per soft-scoring pass).
-    rels_h = rp_rel.select(
-        "table_id", "row_idx", F.col("head_col").alias("col_idx"),
-        F.col("head_ent").alias("entity"), F.col("tail_col").alias("ctx_col"),
-        "rel", "head_col", "tail_col",
-    )
-    rels_t = rp_rel.select(
-        "table_id", "row_idx", F.col("tail_col").alias("col_idx"),
-        F.col("tail_ent").alias("entity"), F.col("head_col").alias("ctx_col"),
-        "rel", "head_col", "tail_col",
-    )
-    rels_l = lit_match.select(
-        "table_id", "row_idx", "col_idx", "entity",
-        F.col("lit_col").alias("ctx_col"), F.col("pid").alias("rel"),
-        F.col("col_idx").alias("head_col"), F.col("lit_col").alias("tail_col"),
-    )
-    ctx_rels = _mat(rels_h.unionByName(rels_t).unionByName(rels_l).distinct())
-    _force_wave("w4_ctx", [ctx_entries, ctx_rels, cached_rel], timings)
-    _mark("w4")
-
     if timings is not None:
         for (lbl, tm), (_, prev) in zip(_marks[1:], _marks[:-1]):
             timings[f"bi_seg_{lbl}"] = round(tm - prev, 2)
 
     return AnnotInputs(
-        cand=cand, ecols=ecols, lcols=lcols, tbl=tbl,
-        ecol_pairs=ecol_pairs, el_pairs=el_pairs, row_pairs=row_pairs,
-        pair_rel=pair_rel, cached_rel=cached_rel, lit_cpa=lit_cpa,
-        lit_cells=lit_cells, ctx_entries=ctx_entries, ctx_rels=ctx_rels,
-        types=types, super_t=super_t, ent_pids=ent_pids, edges=edges,
+        cand=cand, col_classes=col_classes, tbl=fr["tbl"],
+        ecol_pairs=ecol_pairs, el_pairs=el_pairs, lit_cells=fr["lit_cells"],
+        table_pairs=table_pairs, pair_rel=pair_rel,
+        # the rejoin is a broadcast-hash lookup over the row-scale domain
+        lit_match=ctx.literal_matches_from(j_lit, lit_keys),
+        types=types, super_t=super_t, type_nb=type_nb, ent_pids=ent_pids,
     )
 
 
-# --------------------------------------------------------------------- scores
-def entity_scores_pass1(inp: AnnotInputs) -> DataFrame:
-    """entity_scoring_task(first_step=True) BEFORE any CPA exists: with >1
-    column the context loop contributes nothing (cpa_annot empty) →
-    score = 0.1·sim; single-column tables → sim
-    (annotation_models.py:782-798)."""
-    return inp.cand.join(bcast(inp.tbl), "table_id").select(
-        "table_id", "row_idx", "col_idx", "entity", "sim",
-        F.when(F.col("n_cols") > 1, 0.1 * F.col("sim"))
-        .otherwise(F.col("sim"))
-        .alias("score"),
+# --------------------------------------------------------------------- packing
+# One table's kernel input is ONE pandas group: a long frame whose ``kind``
+# column names the part a row belongs to and which columns it sets (the
+# others are null).
+KERNEL_PARTS = {
+    "cand": ("row_idx", "col_idx", "entity", "sim", "cell_len"),
+    "col": ("col_idx", "col_class"),
+    "shape": ("n_cols", "n_data_rows"),
+    "lit_cell": ("row_idx", "lit_col", "lit_cell"),
+    "lit_match": ("row_idx", "col_idx", "entity", "lit_col", "lit_cell", "rel",
+                  "match_score"),
+    "pair_rel": ("head_ent", "tail_ent", "rel", "prox"),
+    "type": ("entity", "type", "level", "rank"),
+    "supertype": ("type", "supertype"),
+    "type_nb": ("type", "neighbor"),
+    "pid": ("entity", "rel"),
+}
+_INT = ("row_idx", "col_idx", "lit_col", "cell_len", "n_cols", "n_data_rows",
+        "level", "rank")
+_DOUBLE = ("sim", "match_score", "prox")
+_PANDAS_DTYPE = {
+    c: "int64" if c in _INT else "float64" if c in _DOUBLE else object
+    for part in KERNEL_PARTS.values() for c in part
+}
+_PACK_TYPES = {
+    c: T.IntegerType() if c in _INT else
+    T.DoubleType() if c in _DOUBLE else T.StringType()
+    for part in KERNEL_PARTS.values() for c in part
+}
+
+CEA_COLS = ["row_idx", "col_idx", "entity", "sim", "score", "rank"]
+CTA_COLS = ["col_idx", "type", "score", "coverage", "rank"]
+CPA_COLS = ["head_col", "tail_col", "rel", "score", "coverage", "prox", "rank"]
+_OUT_TYPES = {
+    "kind": T.StringType(), "row_idx": T.IntegerType(),
+    "col_idx": T.IntegerType(), "head_col": T.IntegerType(),
+    "tail_col": T.IntegerType(), "entity": T.StringType(),
+    "type": T.StringType(), "rel": T.StringType(), "sim": T.DoubleType(),
+    "score": T.DoubleType(), "coverage": T.DoubleType(),
+    "prox": T.DoubleType(), "rank": T.IntegerType(),
+}
+
+
+def pack_tables(inp: AnnotInputs) -> DataFrame:
+    """Each table's candidates plus its slice of the KG-side inputs, as the
+    tagged union the kernel reads (``KERNEL_PARTS``)."""
+    tbl_ents = inp.cand.select("table_id", "entity").distinct()
+    tbl_types = tbl_ents.join(inp.types, "entity")
+    tbl_type_set = tbl_types.select("table_id", "type").distinct()
+    parts = {
+        "cand": inp.cand.withColumn("cell_len", F.length("cell")),
+        "col": inp.col_classes,
+        "shape": inp.tbl,
+        "lit_cell": inp.lit_cells,
+        "lit_match": inp.lit_match.withColumnRenamed("pid", "rel"),
+        "pair_rel": inp.table_pairs.join(inp.pair_rel, ["head_ent", "tail_ent"]),
+        "type": tbl_types,
+        "supertype": tbl_type_set.join(inp.super_t, "type"),
+        "type_nb": tbl_type_set.join(inp.type_nb, "type"),
+        "pid": tbl_ents.join(inp.ent_pids, "entity").withColumnRenamed("pid", "rel"),
+    }
+    frames = [
+        df.select(
+            "table_id", F.lit(kind).alias("kind"),
+            *[F.col(c).cast(_PACK_TYPES[c]) for c in KERNEL_PARTS[kind]],
+        )
+        for kind, df in parts.items()
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
+# --------------------------------------------------------------------- kernel
+PAIR = ["head_col", "tail_col"]
+CAND_KEY = ["row_idx", "col_idx", "entity"]
+ENTRY_KEY = CAND_KEY + ["ctx_col"]
+
+
+@dataclass
+class _Table:
+    """One table's kernel state (pandas frames, no table_id column)."""
+    cand: pd.DataFrame        # row_idx,col_idx,entity,sim,cell_len
+    n_cols: int
+    n_rows: int
+    ecols: list
+    ecol_pairs: pd.DataFrame  # head_col,tail_col
+    el_pairs: pd.DataFrame    # head_col,tail_col
+    lit_cells: pd.DataFrame   # row_idx,tail_col,lit_cell
+    lit_cpa: pd.DataFrame     # head_ent,lit_cell,rel
+    types: pd.DataFrame       # entity,type,level,rank
+    super_t: pd.DataFrame     # type,supertype
+    type_nb: pd.DataFrame     # type,neighbor
+    ent_pids: pd.DataFrame    # entity,pid
+    cached_rel: pd.DataFrame = None  # head_ent,tail_ent,rel,prox (reliable pairs)
+    entries: pd.DataFrame = None     # ENTRY_KEY,is_ent,score,head_col,tail_col
+    ctx_rels: pd.DataFrame = None    # ENTRY_KEY,rel,head_col,tail_col
+
+
+def _typed(df: pd.DataFrame) -> pd.DataFrame:
+    """Output dtypes: nullable ints, floats, objects (strings)."""
+    return df.astype({
+        c: "Int32" if isinstance(_OUT_TYPES[c], T.IntegerType) else
+        "float64" if isinstance(_OUT_TYPES[c], T.DoubleType) else object
+        for c in df.columns
+    })
+
+
+def _parts(pdf: pd.DataFrame) -> dict:
+    """The packed group split into its KERNEL_PARTS frames."""
+    by_kind = dict(tuple(pdf.groupby("kind", sort=False)))
+    out = {}
+    for kind, cols in KERNEL_PARTS.items():
+        p = by_kind.get(kind, pdf.iloc[0:0]).reindex(columns=list(cols))
+        out[kind] = p.astype({c: _PANDAS_DTYPE[c] for c in cols})
+    return out
+
+
+def _cols(df: pd.DataFrame, **named: str) -> pd.DataFrame:
+    """Projection with renames, allowing one source column under two names."""
+    return pd.DataFrame({new: df[old].to_numpy() for new, old in named.items()})
+
+
+def _anti(df: pd.DataFrame, other: pd.DataFrame, keys: list) -> pd.DataFrame:
+    """Rows of df whose keys do not occur in other (left anti join)."""
+    k = pd.MultiIndex.from_frame(df[keys])
+    return df[~k.isin(pd.MultiIndex.from_frame(other[keys]))]
+
+
+def _agg(df: pd.DataFrame, keys: list, **named: tuple) -> pd.DataFrame:
+    """groupBy(keys).agg(name=(column, func), ...) with the keys as columns,
+    in key order — so a later groupby over a key prefix sums its groups in
+    the order of the remaining keys."""
+    g = df.groupby(keys, sort=True)
+    return pd.DataFrame(
+        {name: getattr(g[col], fn)() for name, (col, fn) in named.items()}
+    ).reset_index()
+
+
+def _ranked(df: pd.DataFrame, part: list, order: list, desc: list) -> pd.DataFrame:
+    """row_number() over (partition by part order by order) plus the rank-1
+    row's cnt/ct as top_cnt/top_ct (the reference's thresholds come from the
+    TOP-ranked entry, annotation_models.py:869-898 / 1108-1130)."""
+    df = df.sort_values(
+        part + order, ascending=[True] * len(part) + [not d for d in desc],
+        kind="mergesort",
+    )
+    g = df.groupby(part, sort=False)
+    df["rank"] = g.cumcount() + 1
+    df["top_cnt"] = g["cnt"].transform("first")
+    df["top_ct"] = g["ct"].transform("first")
+    return df
+
+
+def _unpack(pdf: pd.DataFrame) -> _Table | None:
+    p = _parts(pdf)
+    cand = p["cand"]
+    if cand.empty:
+        return None
+    shape, cols, lit_match = p["shape"], p["col"], p["lit_match"]
+    ecols = sorted(cols.loc[cols["col_class"] == "entity", "col_idx"])
+    lcols = sorted(cols.loc[cols["col_class"].isin(LIT_CLASSES), "col_idx"])
+    t = _Table(
+        cand=cand,
+        n_cols=int(shape["n_cols"].iloc[0]),
+        n_rows=int(shape["n_data_rows"].iloc[0]),
+        ecols=ecols,
+        ecol_pairs=pd.DataFrame(
+            [(h, tc) for i, h in enumerate(ecols) for tc in ecols[i + 1:]],
+            columns=PAIR, dtype="int64",
+        ),
+        el_pairs=pd.DataFrame(
+            [(h, tc) for h in ecols for tc in lcols if tc > h],
+            columns=PAIR, dtype="int64",
+        ),
+        lit_cells=p["lit_cell"].rename(columns={"lit_col": "tail_col"}),
+        # the literal CPA cache: (entity, mention) → matched pids
+        lit_cpa=_cols(lit_match, head_ent="entity", lit_cell="lit_cell", rel="rel")
+        .drop_duplicates(),
+        types=p["type"],
+        super_t=p["supertype"],
+        type_nb=p["type_nb"],
+        ent_pids=p["pid"].rename(columns={"rel": "pid"}),
+    )
+    _context(t, p["pair_rel"], lit_match, lcols)
+    return t
+
+
+def _context(t: _Table, pair_rel: pd.DataFrame, lit_match: pd.DataFrame,
+             lcols: list) -> None:
+    """C6/C7 context scoring (annotation_models.py:536-556): per-row
+    candidate pair gates, the context entries of every candidate, their
+    relation sets, and the reliably-connected pair relations (cached_rel)."""
+    c = t.cand
+    rp = (
+        _cols(c, row_idx="row_idx", head_col="col_idx", head_ent="entity",
+              head_sim="sim", head_len="cell_len")
+        .merge(_cols(c, row_idx="row_idx", tail_col="col_idx", tail_ent="entity",
+                     tail_sim="sim", tail_len="cell_len"), on="row_idx")
+        .merge(t.ecol_pairs, on=PAIR)
+    )
+    rp = rp[rp["head_ent"] != rp["tail_ent"]]
+    best = _agg(pair_rel, ["head_ent", "tail_ent"], best=("prox", "max"))
+    rp = rp.merge(best, on=["head_ent", "tail_ent"], how="left")
+    known = rp["best"].notna()
+    thr_tail = np.where(rp["tail_len"] > 5, 0.7, 0.9)
+    thr_head = np.where(rp["head_len"] > 5, 0.7, 0.9)
+    rp["head_score"] = np.where(
+        known & (rp["tail_sim"] >= thr_tail),
+        np.maximum(0.1, rp["best"] * rp["tail_sim"]), 0.1,
+    )
+    rp["tail_score"] = np.where(
+        known & (rp["head_sim"] >= thr_head),
+        np.maximum(0.1, rp["best"] * rp["head_sim"]), 0.1,
+    )
+    reliable = rp[(rp["head_score"] > 0.1) | (rp["tail_score"] > 0.1)]
+    t.cached_rel = pair_rel.merge(
+        reliable[["head_ent", "tail_ent"]].drop_duplicates(), on=["head_ent", "tail_ent"]
     )
 
+    # context entries: candidate × other entity cols ∪ literal cols ≥ col
+    cells = c[CAND_KEY]
+    dom_e = cells.merge(pd.DataFrame({"ctx_col": np.array(t.ecols, "int64")}), how="cross")
+    dom_e = dom_e[dom_e["ctx_col"] != dom_e["col_idx"]]
+    sides = pd.concat([
+        _cols(rp, row_idx="row_idx", col_idx="head_col", entity="head_ent",
+              ctx_col="tail_col", s="head_score"),
+        _cols(rp, row_idx="row_idx", col_idx="tail_col", entity="tail_ent",
+              ctx_col="head_col", s="tail_score"),
+    ])
+    ent = dom_e.merge(_agg(sides, ENTRY_KEY, s=("s", "max")), on=ENTRY_KEY, how="left")
+    dom_l = cells.merge(pd.DataFrame({"ctx_col": np.array(lcols, "int64")}), how="cross")
+    dom_l = dom_l[dom_l["ctx_col"] >= dom_l["col_idx"]]
+    lit_s = _cols(lit_match, row_idx="row_idx", col_idx="col_idx", entity="entity",
+                  ctx_col="lit_col", s="match_score")
+    lit = dom_l.merge(_agg(lit_s, ENTRY_KEY, s=("s", "max")), on=ENTRY_KEY, how="left")
+    e = pd.concat([ent.assign(is_ent=True), lit.assign(is_ent=False)], ignore_index=True)
+    e["score"] = e["s"].fillna(0.1)
+    # orientation of the (candidate col, context col) pair: (o,c) when o<c
+    # and o is an entity col, else (c,o) (annotation_models.py:725-728)
+    flip = e["is_ent"] & (e["ctx_col"] < e["col_idx"])
+    e["head_col"] = np.where(flip, e["ctx_col"], e["col_idx"])
+    e["tail_col"] = np.where(flip, e["col_idx"], e["ctx_col"])
+    t.entries = e.drop(columns="s")
 
-def _orient_pairs(inp: AnnotInputs):
-    """Column-pair orientation for a (candidate col c, context col o) entry:
-    (o,c) when o<c and o is an entity col, else (c,o)
-    (annotation_models.py:725-728)."""
-    is_entity_ctx = F.col("ctx_kind") == "entity"
-    head = F.when(is_entity_ctx & (F.col("ctx_col") < F.col("col_idx")), F.col("ctx_col")).otherwise(F.col("col_idx"))
-    tail = F.when(is_entity_ctx & (F.col("ctx_col") < F.col("col_idx")), F.col("col_idx")).otherwise(F.col("ctx_col"))
-    return head.alias("head_col"), tail.alias("tail_col")
+    # relation set per entry, carrying the entry's oriented pair
+    rr = reliable.merge(pair_rel, on=["head_ent", "tail_ent"])
+    t.ctx_rels = pd.concat([
+        _cols(rr, row_idx="row_idx", col_idx="head_col", entity="head_ent",
+              ctx_col="tail_col", rel="rel", head_col="head_col", tail_col="tail_col"),
+        _cols(rr, row_idx="row_idx", col_idx="tail_col", entity="tail_ent",
+              ctx_col="head_col", rel="rel", head_col="head_col", tail_col="tail_col"),
+        _cols(lit_match, row_idx="row_idx", col_idx="col_idx", entity="entity",
+              ctx_col="lit_col", rel="rel", head_col="col_idx", tail_col="lit_col"),
+    ]).drop_duplicates()
 
 
-def update_context_weights(inp: AnnotInputs, cpa: DataFrame) -> DataFrame:
+def _weights(t: _Table, cpa: pd.DataFrame) -> pd.DataFrame:
     """C10 soft re-weighting (annotation_models.py:352-379): per ctx entry,
     weight = max(floor, base·coverage·proximity·df) from the TOP CPA of the
-    oriented pair; floor 0.05 (entity ctx) / 0.01 (literal ctx). Returns
-    ctx_entries + (head_col, tail_col, weight)."""
-    hc, tc = _orient_pairs(inp)
-    entries = inp.ctx_entries.select("*", hc, tc)
-    top_cpa = cpa.where(F.col("rank") == 1).select(
-        "table_id", "head_col", "tail_col",
-        F.col("coverage").alias("cpa_cov"), F.col("prox").alias("cpa_prox"),
+    oriented pair; floor 0.05 (entity ctx) / 0.01 (literal ctx)."""
+    if not t.ecols:
+        return t.entries.iloc[0:0].assign(weight=0.0)
+    top = cpa.loc[cpa["rank"] == 1, PAIR + ["coverage", "prox"]]
+    e = t.entries.merge(top, on=PAIR, how="left")
+    min_e = t.ecols[0]
+    df_col = 1.0 / (1.0 + 4.0 * np.minimum(
+        (e["ctx_col"] - min_e).abs(), (e["col_idx"] - min_e).abs()
+    ))
+    base = np.where(e["is_ent"], SEMANTIC_W, LITERAL_W)
+    floor = np.where(e["is_ent"], 0.05, 0.01)
+    e["weight"] = np.where(
+        e["coverage"].notna(),
+        np.maximum(floor, base * e["coverage"] * e["prox"] * df_col), floor,
     )
-    min_ecol = inp.ecols.groupBy("table_id").agg(F.min("col_idx").alias("min_ecol"))
-    e = entries.join(bcast(top_cpa), ["table_id", "head_col", "tail_col"], "left").join(
-        bcast(min_ecol), "table_id"
-    )
-    df_col = 1.0 / (
-        1.0
-        + 4.0
-        * F.least(
-            F.abs(F.col("ctx_col") - F.col("min_ecol")),
-            F.abs(F.col("col_idx") - F.col("min_ecol")),
-        )
-    )
-    base = F.when(F.col("ctx_kind") == "entity", SEMANTIC_W).otherwise(LITERAL_W)
-    floor = F.when(F.col("ctx_kind") == "entity", 0.05).otherwise(0.01)
-    weight = F.when(
-        F.col("cpa_cov").isNotNull(),
-        F.greatest(floor, base * F.col("cpa_cov") * F.col("cpa_prox") * df_col),
-    ).otherwise(floor)
-    # pruned to what the soft-scoring passes read: this frame is
-    # ctx-entries-scale and checkpointed once for passes 2+4, so every
-    # column it carries is serialized + shuffled at row scale twice
-    return e.withColumn("weight", weight).select(
-        "table_id", "row_idx", "col_idx", "entity", "ctx_col",
-        "ctx_kind", "score", "head_col", "tail_col", "weight",
-    )
+    return e.drop(columns=["coverage", "prox"])
 
 
-def entity_scores_soft(
-    inp: AnnotInputs,
-    weighted_entries: DataFrame,
-    cpa: DataFrame,
-    unrelated_pairs: DataFrame | None = None,
-    last_step: bool = False,
-) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+def _soft_scores(t: _Table, we: pd.DataFrame, cpa: pd.DataFrame,
+                 unrelated: pd.DataFrame | None = None, last_step: bool = False):
     """entity_scoring_task(first_step=False) (annotation_models.py:714-798).
 
-    Only ctx entries whose oriented pair IS in cpa_annot (and not unrelated)
+    Only ctx entries whose oriented pair IS in cpa (and not unrelated)
     participate. scale = (coverage·proximity) of the lowest-ranked CPA of the
-    pair whose id appears in the entry's relation set, else 0.
+    pair whose rel is in the entry's relation set, else 0;
     scaled = max(0.1, scale·score); numerator Σ weight·scaled, denominator
     Σ base_weight; final = ctx̄·σ(sim) when max weight>0.1 else 0.1·sim.
 
-    Returns (scores, contextless, potential, scored) — contextless/potential
-    only when last_step (loop 4, annotation_models.py:743-765); scored is
-    the materialized shared interior frame (last_step only) so the caller
-    can force it in its own wave before the three consumers run."""
-    e = weighted_entries
-    if unrelated_pairs is not None:
-        e = e.join(
-            bcast(unrelated_pairs), ["table_id", "head_col", "tail_col"],
-            "left_anti",
-        )
-    cpa_k = cpa.select(
-        "table_id", "head_col", "tail_col", "rel", "coverage", "prox", "rank"
-    )
-    considered = e.join(
-        bcast(cpa_k.select("table_id", "head_col", "tail_col").distinct()),
-        ["table_id", "head_col", "tail_col"],
-    )
-
-    key = ["table_id", "row_idx", "col_idx", "entity", "ctx_col"]
-    # scale factor: first (lowest-rank) CPA of the pair present in entry
-    # rels. ctx_rels carries its oriented (head_col, tail_col) from build
-    # time, so this is ONE broadcast-hash join against the tiny CPA set plus
-    # a map-side-combinable agg — no row-scale join with `considered`. Keys
-    # outside `considered` (pair not in cpa_k is already excluded by the
-    # join; pass-4 unrelated pairs) drop out in the left join below: a key
-    # pins its (head_col, tail_col), so an excluded pair's keys simply never
-    # appear on the `considered` side.
+    Returns (scores, contextless, potential) — the last two only when
+    last_step (loop 4, annotation_models.py:743-765)."""
+    e = we if unrelated is None else _anti(we, unrelated, PAIR)
+    considered = e.merge(cpa[PAIR].drop_duplicates(), on=PAIR)
     rel_match = (
-        inp.ctx_rels.withColumnRenamed("rel", "ctx_rel")
-        .join(bcast(cpa_k), ["table_id", "head_col", "tail_col"])
-        .where(F.col("rel") == F.col("ctx_rel"))
-        .groupBy(*key)
-        .agg(F.min(F.struct("rank", "coverage", "prox")).alias("m"))
-        .select(*key, (F.col("m.coverage") * F.col("m.prox")).alias("scale"))
+        t.ctx_rels.merge(cpa[PAIR + ["rel", "coverage", "prox", "rank"]],
+                         on=PAIR + ["rel"])
+        .sort_values(ENTRY_KEY + ["rank"])
+        .drop_duplicates(ENTRY_KEY)
     )
-    scored = considered.join(rel_match, key, "left").withColumn(
-        "scaled",
-        F.greatest(F.lit(0.1), F.coalesce("scale", F.lit(0.0)) * F.col("score")),
+    rel_match["scale"] = rel_match["coverage"] * rel_match["prox"]
+    scored = considered.merge(rel_match[ENTRY_KEY + ["scale"]], on=ENTRY_KEY,
+                              how="left").sort_values(ENTRY_KEY)
+    scored["scaled"] = np.maximum(0.1, scored["scale"].fillna(0.0) * scored["score"])
+    scored["wx"] = scored["weight"] * scored["scaled"]
+    scored["base"] = np.where(scored["is_ent"], SEMANTIC_W, LITERAL_W)
+    agg = _agg(scored, CAND_KEY, num=("wx", "sum"), den=("base", "sum"),
+               max_w=("weight", "max"))
+    s = t.cand[CAND_KEY + ["sim"]].merge(agg, on=CAND_KEY, how="left")
+    ctx_score = np.where(s["den"].notna() & (s["den"] > 0), s["num"] / s["den"], 0.01)
+    logistic = 1.0 / (1.0 + np.exp(-(s["sim"] ** 2.5 / 0.5 - 1.0) / 0.2))
+    s["score"] = np.where(
+        t.n_cols <= 1, s["sim"],
+        np.where(s["max_w"].fillna(0.0) > 0.1, ctx_score * logistic, 0.1 * s["sim"]),
     )
-    if last_step:
-        # three outputs (scores, contextless, potential) consume this frame;
-        # without a checkpoint each one re-derives the whole considered ⋈
-        # rel_match ⋈ cpa subtree in its own job (the scored subtree is the
-        # dominant pass-4 cost — measured 3× recompute at replicate-4).
-        # Pruned to the union of the three consumers' columns before the
-        # checkpoint: score/scale/sim never leave this function.
-        scored = _mat(scored.select(
-            "table_id", "row_idx", "col_idx", "entity", "ctx_col",
-            "ctx_kind", "head_col", "tail_col", "weight", "scaled",
-        ))
-    base = F.when(F.col("ctx_kind") == "entity", SEMANTIC_W).otherwise(LITERAL_W)
-    agg = scored.groupBy("table_id", "row_idx", "col_idx", "entity").agg(
-        F.sum(F.col("weight") * F.col("scaled")).alias("num"),
-        F.sum(base).alias("den"),
-        F.max("weight").alias("max_w"),
-    )
-    cand_key = ["table_id", "row_idx", "col_idx", "entity"]
-    s = inp.cand.join(agg, cand_key, "left").join(bcast(inp.tbl), "table_id")
-    ctx_score = F.when(
-        F.col("den").isNotNull() & (F.col("den") > 0), F.col("num") / F.col("den")
-    ).otherwise(0.01)
-    logistic = 1.0 / (
-        1.0 + F.exp(-(F.pow(F.col("sim"), 2.5) / 0.5 - 1.0) / 0.2)
-    )
-    final = F.when(F.col("n_cols") <= 1, F.col("sim")).when(
-        F.coalesce("max_w", F.lit(0.0)) > 0.1, ctx_score * logistic
-    ).otherwise(0.1 * F.col("sim"))
-    scores = s.select(*cand_key, "sim", final.alias("score"))
-
+    s = s[CAND_KEY + ["sim", "score"]]
     if not last_step:
-        return scores, None, None, None
+        return s, None, None
 
-    # contextless cells: max scaled per CELL; cells with no considered entries → 0.1
-    ctxless = (
-        inp.cand.select("table_id", "row_idx", "col_idx")
-        .distinct()
-        .join(
-            scored.groupBy("table_id", "row_idx", "col_idx").agg(
-                F.max("scaled").alias("ctxless")
-            ),
-            ["table_id", "row_idx", "col_idx"],
-            "left",
+    # contextless cells: max scaled per CELL; cells with no considered entries → 0.1.
+    # The reference judges contextlessness only once some cell has recorded
+    # a value — a considered entry, or a candidate without any entry; when
+    # none has, no cell is contextless.
+    if scored.empty and _anti(t.cand, t.entries, CAND_KEY).empty:
+        ctxless = None
+    else:
+        ctxless = t.cand[["row_idx", "col_idx"]].drop_duplicates().merge(
+            _agg(scored, ["row_idx", "col_idx"], ctxless=("scaled", "max")),
+            on=["row_idx", "col_idx"], how="left",
         )
-        .fillna({"ctxless": 0.1})
-    )
+        ctxless["ctxless"] = ctxless["ctxless"].fillna(0.1)
 
     # potential candidates: candidate has a (direction-adjusted) CPA pid in its
-    # pid set (annotation_models.py:750-765); composite "::" ids never match.
-    # Derived from the MATERIALIZED scored frame (same columns as considered
-    # plus score fields) so this consumer shares the checkpoint too.
-    cand_pairs = scored.select(
-        *cand_key, "ctx_col", "ctx_kind", "head_col", "tail_col"
-    ).distinct()
-    pc = cand_pairs.join(bcast(cpa_k), ["table_id", "head_col", "tail_col"]).where(
-        ~F.col("rel").contains("::")
+    # pid set (annotation_models.py:750-765); composite "::" ids never match
+    pc = scored[ENTRY_KEY + ["is_ent"] + PAIR].drop_duplicates().merge(
+        cpa[PAIR + ["rel", "coverage"]], on=PAIR
     )
-    is_tail = (F.col("ctx_kind") == "entity") & (F.col("ctx_col") < F.col("col_idx"))
-    adjusted = F.when(
-        is_tail & F.col("rel").startswith("(-)"), F.expr("substring(rel, 4)")
-    ).when(is_tail, F.concat(F.lit("(-)"), F.col("rel"))).otherwise(F.col("rel"))
-    pc = pc.withColumn("need_pid", adjusted)
-    ep = bcast(inp.ent_pids)
-    matched = pc.join(
-        ep,
-        (pc["entity"] == ep["entity"]) & (pc["need_pid"] == ep["pid"]),
-    ).select(pc["table_id"], pc["row_idx"], pc["col_idx"], pc["entity"],
-             "coverage", "rel")
-    potential = matched.groupBy(*cand_key).agg(
-        F.max("coverage").alias("cpa_coeff"),
-        F.count(F.lit(1)).alias("n_potential"),
-    )
-    return scores, ctxless, potential, scored
+    pc = pc[~pc["rel"].str.contains("::", regex=False)]
+    is_tail = pc["is_ent"] & (pc["ctx_col"] < pc["col_idx"])
+    rev = pc["rel"].str.startswith("(-)")
+    pc = pc.assign(pid=np.where(
+        is_tail & rev, pc["rel"].str[3:],
+        np.where(is_tail, "(-)" + pc["rel"], pc["rel"]),
+    ).astype(object))
+    potential = _agg(pc.merge(t.ent_pids, on=["entity", "pid"]), CAND_KEY,
+                     cpa_coeff=("coverage", "max"), n_potential=("coverage", "size"))
+    return s, ctxless, potential
 
 
-# --------------------------------------------------------------------- CEA
-def cea_task(
-    inp: AnnotInputs,
-    scores: DataFrame,
-    cta: DataFrame | None = None,
-    only_one: bool = True,
-    contextless: DataFrame | None = None,
-    potential: DataFrame | None = None,
-) -> DataFrame:
-    """C12 (annotation_models.py:904-1031). Returns per-cell kept candidates:
-    (table_id,row_idx,col_idx,entity,score,rank)."""
-    cand_key = ["table_id", "row_idx", "col_idx", "entity"]
-    s = scores
+def _cea(t: _Table, s: pd.DataFrame, cta: pd.DataFrame | None = None,
+         only_one: bool = True, ctxless: pd.DataFrame | None = None,
+         potential: pd.DataFrame | None = None) -> pd.DataFrame:
+    """C12 (annotation_models.py:904-1031): per-cell ranked candidates
+    (CEA_COLS); only_one keeps the cell's top-score ties."""
+    s = s.assign(n_potential=np.nan)
     if cta is not None:
-        # per (column, candidate): best level-weighted CTA match.
-        # The whole disambiguation credit is ROW-INDEPENDENT — cta_score is
-        # per (table, col, type) and the level weight per (entity, type) —
-        # so it is computed at the (table_id, col_idx, entity) grain
-        # (bounded by column × candidate-entity combinations, ~100× smaller
-        # than the candidate frame) and broadcast back onto the row-scale
-        # scores; the row-scale frame never shuffles for CTA credit.
-        cta_c = cta.select(
-            "table_id", F.col("col_idx"), F.col("type").alias("cta_type"),
-            F.col("score").alias("cta_score"), F.col("coverage").alias("cta_cov"),
+        # per (column, candidate): best level-weighted CTA match — the
+        # candidate's own 3-level types, or a CTA type's neighbour among its
+        # level-1/2 types (one level down)
+        cta_c = cta.rename(columns={"type": "cta_type", "score": "cta_score",
+                                    "coverage": "cta_cov"})
+        cmatch = s[["col_idx", "entity"]].drop_duplicates().merge(
+            cta_c[["col_idx", "cta_type", "cta_score"]], on="col_idx"
         )
-        col_ent = s.select("table_id", "col_idx", "entity").distinct()
-        cmatch = col_ent.join(bcast(cta_c), ["table_id", "col_idx"])
-        # candidate's own 3-level types (entity-bounded side frames —
-        # size-gated broadcasts; large posture: AQE decides)
-        own = inp.types.select(
-            F.col("entity"), F.col("type").alias("cta_type"),
-            F.col("level").alias("own_level"),
-        )
-        direct = cmatch.join(bcast(own), ["entity", "cta_type"], "left")
-        # neighbor credit: cta_type neighbors ∩ candidate level-1/2 types
-        ce_key = ["table_id", "col_idx", "entity"]
-        tn = ctx.type_neighbors(
-            cta_c.select(F.col("cta_type").alias("type")), inp.edges
-        ).select(F.col("type").alias("cta_type"), "neighbor")
+        own = _cols(t.types, entity="entity", cta_type="type", own_level="level")
+        lvl12 = t.types[t.types["level"].isin([1, 2])]
         nb = (
-            cmatch.join(bcast(tn), "cta_type")
-            .join(
-                bcast(inp.types.where(F.col("level").isin(1, 2)).select(
-                    "entity", F.col("type").alias("neighbor"),
-                    F.col("level").alias("nb_level"),
-                )),
-                ["entity", "neighbor"],
-            )
-            .groupBy(*ce_key, "cta_type")
-            .agg(F.min("nb_level").alias("nb_level"))
+            cmatch.merge(_cols(t.type_nb, cta_type="type", neighbor="neighbor"),
+                         on="cta_type")
+            .merge(_cols(lvl12, entity="entity", neighbor="type", nb_level="level"),
+                   on=["entity", "neighbor"])
         )
-        j = direct.join(nb, ce_key + ["cta_type"], "left")
-        eff_level = (
-            F.when(F.col("own_level") == 1, 1)
-            .when((F.col("own_level") == 2) | (F.col("nb_level") == 1), 2)
-            .when((F.col("own_level") == 3) | (F.col("nb_level") == 2), 3)
+        nb = _agg(nb, ["col_idx", "entity", "cta_type"], nb_level=("nb_level", "min"))
+        j = cmatch.merge(own, on=["entity", "cta_type"], how="left").merge(
+            nb, on=["col_idx", "entity", "cta_type"], how="left"
         )
-        lvl_w = (
-            F.when(eff_level == 1, CTA_LEVEL_W[1])
-            .when(eff_level == 2, CTA_LEVEL_W[2])
-            .when(eff_level == 3, CTA_LEVEL_W[3])
-            .otherwise(F.lit(None))
+        own_l, nb_l = j["own_level"].fillna(0), j["nb_level"].fillna(0)
+        lvl_w = np.select(
+            [own_l == 1, (own_l == 2) | (nb_l == 1), (own_l == 3) | (nb_l == 2)],
+            [CTA_LEVEL_W[1], CTA_LEVEL_W[2], CTA_LEVEL_W[3]], np.nan,
         )
-        disamb = j.withColumn("d", lvl_w * F.col("cta_score")).groupBy(*ce_key).agg(
-            F.coalesce(F.max("d"), F.lit(0.0)).alias("cta_d")
+        j["cta_d"] = lvl_w * j["cta_score"]
+        disamb = _agg(j, ["col_idx", "entity"], cta_d=("cta_d", "max"))
+        cov_mean = _agg(cta_c, ["col_idx"], cta_cov=("cta_cov", "mean"))
+        s = s.merge(disamb, on=["col_idx", "entity"], how="left").merge(
+            cov_mean, on="col_idx", how="left"
         )
-        cov_mean = cta_c.groupBy("table_id", "col_idx").agg(
-            F.avg("cta_cov").alias("cov_mean")
-        )
-        s = (
-            s.join(bcast(disamb), ce_key, "left")
-            .join(bcast(cov_mean), ["table_id", "col_idx"], "left")
-            .fillna({"cta_d": 0.0})
-        )
-        if contextless is not None:
-            s = s.join(contextless, ["table_id", "row_idx", "col_idx"], "left")
-            if potential is not None:
-                s = s.join(potential, cand_key, "left")
-            else:
-                s = s.withColumn("cpa_coeff", F.lit(None)).withColumn(
-                    "n_potential", F.lit(None)
-                )
-            is_ctxless = F.col("ctxless") <= 0.1
-            boosted = F.when(
-                is_ctxless & F.col("cpa_coeff").isNotNull(),
-                F.least(F.lit(1.0), F.col("score") * (1.0 + F.col("cpa_coeff"))),
-            ).otherwise(F.col("score"))
-            coeff = F.when(is_ctxless, F.col("cov_mean")).otherwise(
-                F.col("cov_mean") / 2.0
-            )
-            s = s.withColumn("score", boosted).withColumn("coeff", coeff)
+        s["cta_d"] = s["cta_d"].fillna(0.0)
+        if ctxless is None:
+            coeff = s["cta_cov"] / 2.0
         else:
-            s = s.withColumn("coeff", F.col("cov_mean") / 2.0).withColumn(
-                "n_potential", F.lit(None)
+            s = s.drop(columns="n_potential").merge(
+                ctxless, on=["row_idx", "col_idx"], how="left"
+            ).merge(potential, on=CAND_KEY, how="left")
+            is_ctxless = s["ctxless"] <= 0.1
+            s["score"] = np.where(
+                is_ctxless & s["cpa_coeff"].notna(),
+                np.minimum(1.0, s["score"] * (1.0 + s["cpa_coeff"])), s["score"],
             )
-        s = s.withColumn(
-            "score",
-            F.when(
-                F.col("cov_mean").isNotNull(),
-                (F.col("score") + F.col("coeff") * F.col("cta_d"))
-                / (1.0 + F.col("coeff")),
-            ).otherwise(F.col("score")),
+            coeff = np.where(is_ctxless, s["cta_cov"], s["cta_cov"] / 2.0)
+        s["score"] = np.where(
+            s["cta_cov"].notna(), (s["score"] + coeff * s["cta_d"]) / (1.0 + coeff),
+            s["score"],
         )
-    else:
-        s = s.withColumn("n_potential", F.lit(None))
-
-    w = Window.partitionBy("table_id", "row_idx", "col_idx").orderBy(
-        F.desc("score"),
-        F.desc(F.coalesce("n_potential", F.lit(0))),
-        F.desc("sim"),
-        F.asc("entity"),
+    s["npot"] = s["n_potential"].fillna(0)
+    s = s.sort_values(
+        ["row_idx", "col_idx", "score", "npot", "sim", "entity"],
+        ascending=[True, True, False, False, False, True], kind="mergesort",
     )
-    w_max = Window.partitionBy("table_id", "row_idx", "col_idx")
-    ranked = s.withColumn("rank", F.row_number().over(w)).withColumn(
-        "max_score", F.max("score").over(w_max)
-    )
+    s["rank"] = s.groupby(["row_idx", "col_idx"], sort=False).cumcount() + 1
     if only_one:
-        ranked = ranked.where(F.col("score") == F.col("max_score"))
-    return ranked.select(*cand_key, "sim", "score", "rank")
+        s = s[s["score"] == s.groupby(["row_idx", "col_idx"])["score"].transform("max")]
+    return s[CEA_COLS]
 
 
-# --------------------------------------------------------------------- CPA
-def cpa_task(
-    inp: AnnotInputs,
-    cea: DataFrame,
-    only_one: bool,
-    unrelated_pairs: DataFrame | None = None,
-    sim_scores: bool = False,
-) -> DataFrame:
-    """C13 voting (annotation_models.py:1033-1131). Returns kept CPAs:
-    (table_id,head_col,tail_col,rel,score,coverage,prox,rank).
-
-    ``sim_scores``: pass-1 mode. Pass-1 confidences are a pure function of
-    sim (0.1·sim; sim on single-column tables) and the materialized row_pairs
-    frame already carries both sides' sims for every co-occurring candidate
-    pair, so the entity votes come straight off it — no re-run of the
-    full-candidate-set self-join. Only valid with no unrelated_pairs (pass 1
-    has none); ``cea`` still feeds the literal-vote head side."""
-    pairs = inp.ecol_pairs.withColumn("tail_kind", F.lit("entity")).unionByName(
-        inp.el_pairs.withColumn("tail_kind", F.lit("literal"))
+def _cpa(t: _Table, cea: pd.DataFrame, only_one: bool,
+         unrelated: pd.DataFrame | None = None) -> pd.DataFrame:
+    """C13 voting (annotation_models.py:1033-1131) over entity-entity pairs
+    (cached relations) and entity-literal pairs (the literal CPA cache keyed
+    (entity, mention), tail confidence 0). Returns kept CPAs (CPA_COLS)."""
+    ent_pairs, lit_pairs = t.ecol_pairs, t.el_pairs
+    if unrelated is not None:
+        ent_pairs = _anti(ent_pairs, unrelated, PAIR)
+        lit_pairs = _anti(lit_pairs, unrelated, PAIR)
+    head = _cols(cea, row_idx="row_idx", head_col="col_idx", head_ent="entity",
+                 head_conf="score")
+    tail = _cols(cea, row_idx="row_idx", tail_col="col_idx", tail_ent="entity",
+                 tail_conf="score")
+    je = (
+        head.merge(ent_pairs, on="head_col")
+        .merge(tail, on=["row_idx", "tail_col"])
+        .merge(t.cached_rel, on=["head_ent", "tail_ent"])
     )
-    if unrelated_pairs is not None:
-        assert not sim_scores, "sim_scores is a pass-1 mode (no unrelated set)"
-        pairs = pairs.join(
-            bcast(unrelated_pairs), ["table_id", "head_col", "tail_col"],
-            "left_anti",
-        )
-
-    head = cea.select(
-        "table_id", "row_idx", F.col("col_idx").alias("head_col"),
-        F.col("entity").alias("head_ent"), F.col("score").alias("head_conf"),
-    )
-
-    # entity-tail votes
-    if sim_scores:
-        # greatest(f(hs), f(ts)) = f(greatest(hs, ts)) — f monotone per table
-        conf = lambda c: F.when(F.col("n_cols") > 1, 0.1 * c).otherwise(c)  # noqa: E731
-        je = inp.row_pairs.join(bcast(inp.tbl), "table_id").join(
-            bcast(inp.cached_rel), ["head_ent", "tail_ent"]
-        )
-        pair_score = F.col("prox") * conf(F.greatest("head_sim", "tail_sim"))
-    else:
-        tail_e = cea.select(
-            "table_id", "row_idx", F.col("col_idx").alias("tail_col"),
-            F.col("entity").alias("tail_ent"), F.col("score").alias("tail_conf"),
-        )
-        je = (
-            head.join(
-                bcast(pairs.where(F.col("tail_kind") == "entity")),
-                ["table_id", "head_col"],
-            )
-            .join(tail_e, ["table_id", "row_idx", "tail_col"])
-            .join(bcast(inp.cached_rel), ["head_ent", "tail_ent"])
-        )
-        pair_score = F.col("prox") * F.greatest("head_conf", "tail_conf")
-    ve = je.select(
-        "table_id", "head_col", "tail_col", "row_idx", "rel", "prox",
-        pair_score.alias("pair_score"),
-    )
-
-    # literal-tail votes: tail "candidate" = raw mention with conf 0,
-    # relation from the literal CPA cache keyed (entity, mention)
+    je["pair_score"] = je["prox"] * np.maximum(je["head_conf"], je["tail_conf"])
     jl = (
-        head.join(
-            bcast(pairs.where(F.col("tail_kind") == "literal")),
-            ["table_id", "head_col"],
-        )
-        .join(
-            bcast(inp.lit_cpa.select(
-                F.col("entity").alias("head_ent"), "lit_cell",
-                F.col("pid").alias("rel"),
-            )),
-            "head_ent",
-        )
-        .join(
-            inp.lit_cells.select(
-                "table_id", "row_idx", F.col("lit_col").alias("tail_col"), "lit_cell"
-            ),
-            ["table_id", "row_idx", "tail_col", "lit_cell"],
-        )
+        head.merge(lit_pairs, on="head_col")
+        .merge(t.lit_cpa, on="head_ent")
+        .merge(t.lit_cells, on=["row_idx", "tail_col", "lit_cell"])
     )
-    vl = jl.select(
-        "table_id", "head_col", "tail_col", "row_idx", "rel",
-        F.lit(1.0).alias("prox"),
-        (1.0 * F.greatest(F.col("head_conf"), F.lit(0.0))).alias("pair_score"),
-    )
+    jl["prox"] = 1.0
+    jl["pair_score"] = 1.0 * np.maximum(jl["head_conf"], 0.0)
+    vote = PAIR + ["rel", "row_idx"]
+    votes = pd.concat([je[vote + ["prox", "pair_score"]], jl[vote + ["prox", "pair_score"]]])
+    if votes.empty:
+        return _typed(pd.DataFrame(columns=CPA_COLS))
+    per_row = _agg(votes, vote, row_score=("pair_score", "max"), row_prox=("prox", "min"))
+    agg = _agg(per_row, PAIR + ["rel"], cnt=("row_score", "size"),
+               total=("row_score", "sum"), prox=("row_prox", "min"))
+    agg["ct"] = agg["cnt"] * agg["total"]
+    agg["direct"] = ~agg["rel"].str.contains("::", regex=False)
+    agg["forward"] = ~agg["rel"].str.contains("(-)", regex=False)
+    agg = _ranked(agg, PAIR, ["ct", "cnt", "prox", "direct", "forward", "rel"],
+                  [True, True, True, True, True, False])
+    kept = agg[agg["ct"] >= agg["top_ct"]] if only_one else agg[agg["cnt"] >= agg["top_cnt"]]
+    kept = kept.assign(score=kept["total"] / t.n_rows, coverage=kept["cnt"] / t.n_rows)
+    return kept[CPA_COLS]
 
-    votes = ve.unionByName(vl)
-    per_row = votes.groupBy(
-        "table_id", "head_col", "tail_col", "row_idx", "rel"
-    ).agg(F.max("pair_score").alias("row_score"), F.min("prox").alias("row_prox"))
-    agg = per_row.groupBy("table_id", "head_col", "tail_col", "rel").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("row_score").alias("total"),
-        F.min("row_prox").alias("prox"),
-    )
-    w = Window.partitionBy("table_id", "head_col", "tail_col").orderBy(
-        F.desc(F.col("cnt") * F.col("total")),
-        F.desc("cnt"),
-        F.desc("prox"),
-        F.desc((~F.col("rel").contains("::")).cast("int")),
-        F.desc((~F.col("rel").contains("(-)")).cast("int")),
-        F.asc("rel"),
-    )
-    wp = Window.partitionBy("table_id", "head_col", "tail_col")
-    # thresholds come from the TOP-ranked entry (reference threshold =
-    # sorted[0], annotation_models.py:1108-1130), not from column-wide maxima
-    ranked = (
-        agg.withColumn("rank", F.row_number().over(w))
-        .withColumn(
-            "top_ct",
-            F.max(F.when(F.col("rank") == 1, F.col("cnt") * F.col("total"))).over(wp),
-        )
-        .withColumn("top_cnt", F.max(F.when(F.col("rank") == 1, F.col("cnt"))).over(wp))
-    )
+
+def _cta(t: _Table, cea: pd.DataFrame, only_one: bool) -> pd.DataFrame:
+    """C11 voting (annotation_models.py:800-902). Returns kept CTAs
+    (CTA_COLS); only_one keeps the top-score ties plus their supertypes."""
+    j = cea[CAND_KEY + ["score"]].merge(t.types, on="entity")
+    j["w"] = np.select(
+        [j["level"] == 1, j["level"] == 2], [CTA_LEVEL_W[1], CTA_LEVEL_W[2]],
+        CTA_LEVEL_W[3],
+    ) * j["score"]
+    per_row = _agg(j, ["col_idx", "type", "row_idx"], row_score=("w", "max"),
+                   row_rank=("rank", "max"))
+    agg = _agg(per_row, ["col_idx", "type"], cnt=("row_score", "size"),
+               total=("row_score", "sum"), total_ranks=("row_rank", "sum"))
+    agg["ct"] = agg["cnt"] * agg["total"]
+    agg = _ranked(agg, ["col_idx"], ["ct", "total_ranks", "type"], [True, True, False])
     if only_one:
-        kept = ranked.where(F.col("cnt") * F.col("total") >= F.col("top_ct"))
+        top = agg[agg["ct"] >= agg["top_ct"]]
+        sups = _cols(top.merge(t.super_t, on="type"), col_idx="col_idx",
+                     type="supertype")
+        extra = _anti(agg.merge(sups.drop_duplicates(), on=["col_idx", "type"]),
+                      top, ["col_idx", "type"])
+        kept = pd.concat([top, extra])
     else:
-        kept = ranked.where(F.col("cnt") >= F.col("top_cnt"))
-    return kept.join(bcast(inp.tbl), "table_id").select(
-        "table_id", "head_col", "tail_col", "rel",
-        (F.col("total") / F.col("n_data_rows")).alias("score"),
-        (F.col("cnt") / F.col("n_data_rows")).alias("coverage"),
-        "prox", "rank",
-    )
+        kept = agg[agg["cnt"] >= agg["top_cnt"]]
+    kept = kept.assign(score=kept["total"] / t.n_rows, coverage=kept["cnt"] / t.n_rows)
+    return kept[CTA_COLS]
 
 
-# --------------------------------------------------------------------- CTA
-def cta_task(inp: AnnotInputs, cea: DataFrame, only_one: bool) -> DataFrame:
-    """C11 voting (annotation_models.py:800-902). Returns kept CTAs:
-    (table_id,col_idx,type,score,coverage,rank)."""
-    types = inp.types.select(
-        "entity", "type", "level", F.col("rank").alias("type_rank")
-    )
-    # types is entity-bounded — broadcast under the small posture so the
-    # row-scale CEA side (all candidates in pass 2) doesn't shuffle
-    j = cea.select(
-        "table_id", "row_idx", "col_idx", "entity", "score"
-    ).join(bcast(types), "entity")
-    lvl_w = (
-        F.when(F.col("level") == 1, CTA_LEVEL_W[1])
-        .when(F.col("level") == 2, CTA_LEVEL_W[2])
-        .otherwise(CTA_LEVEL_W[3])
-    )
-    per_row = j.groupBy("table_id", "col_idx", "row_idx", "type").agg(
-        F.max(lvl_w * F.col("score")).alias("row_score"),
-        F.max("type_rank").alias("row_rank"),
-    )
-    agg = per_row.groupBy("table_id", "col_idx", "type").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("row_score").alias("total"),
-        F.sum("row_rank").alias("total_ranks"),
-    )
-    w = Window.partitionBy("table_id", "col_idx").orderBy(
-        F.desc(F.col("cnt") * F.col("total")), F.desc("total_ranks"), F.asc("type")
-    )
-    wp = Window.partitionBy("table_id", "col_idx")
-    # thresholds from the TOP-ranked entry (annotation_models.py:869-898)
-    ranked = (
-        agg.withColumn("rank", F.row_number().over(w))
-        .withColumn(
-            "top_ct",
-            F.max(F.when(F.col("rank") == 1, F.col("cnt") * F.col("total"))).over(wp),
-        )
-        .withColumn("top_cnt", F.max(F.when(F.col("rank") == 1, F.col("cnt"))).over(wp))
-    )
-    if only_one:
-        top = ranked.where(F.col("cnt") * F.col("total") >= F.col("top_ct"))
-        sups = (
-            top.join(inp.super_t, "type")
-            .select("table_id", "col_idx", F.col("supertype").alias("type"))
-            .distinct()
-        )
-        extra = ranked.join(sups, ["table_id", "col_idx", "type"]).join(
-            top.select("table_id", "col_idx", "type"),
-            ["table_id", "col_idx", "type"],
-            "left_anti",
-        )
-        kept = top.unionByName(extra)
-    else:
-        kept = ranked.where(F.col("cnt") >= F.col("top_cnt"))
-    return kept.join(bcast(inp.tbl), "table_id").select(
-        "table_id", "col_idx", "type",
-        (F.col("total") / F.col("n_data_rows")).alias("score"),
-        (F.col("cnt") / F.col("n_data_rows")).alias("coverage"),
-        "rank",
-    )
-
-
-# --------------------------------------------------------------------- loop 4
-def literal_context_restriction(inp: AnnotInputs, cpa: DataFrame) -> DataFrame:
+def _unrelated_pairs(t: _Table, cpa: pd.DataFrame) -> pd.DataFrame:
     """C10 onlyLiteralContext (annotation_models.py:380-395): per literal col
     keep only the entity col whose TOP CPA has the best coverage (ties → the
     lowest entity col, matching the reference's strict-> scan); every other
-    (entity, literal) pair becomes unrelated. Returns unrelated pairs."""
-    top = cpa.where(F.col("rank") == 1).select(
-        "table_id", "head_col", "tail_col", "coverage"
+    (entity, literal) pair becomes unrelated."""
+    top = cpa.loc[cpa["rank"] == 1, PAIR + ["coverage"]]
+    j = t.el_pairs.merge(top, on=PAIR, how="left")
+    j["coverage"] = j["coverage"].fillna(-1.0)
+    j = j.sort_values(["tail_col", "coverage", "head_col"],
+                      ascending=[True, False, True], kind="mergesort")
+    best = j[(j.groupby("tail_col").cumcount() == 0) & (j["coverage"] > 0)]
+    return _anti(t.el_pairs, best, PAIR)
+
+
+def annotate_table(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The grouped-map kernel: one table's packed inputs (``KERNEL_PARTS``)
+    → its final CEA / CTA / CPA rows, tagged by ``kind``."""
+    t = _unpack(pdf)
+    if t is None:
+        return _output(None, [])
+    # pass 1: CEA¹ (only_one=False, no CTA) is the identity on the candidate
+    # set plus a rank that CPA voting never reads
+    s1 = t.cand[CAND_KEY + ["sim"]].assign(
+        score=0.1 * t.cand["sim"] if t.n_cols > 1 else t.cand["sim"]
     )
-    lit_pairs = inp.el_pairs
-    j = lit_pairs.join(bcast(top), ["table_id", "head_col", "tail_col"], "left").fillna(
-        {"coverage": -1.0}
-    )
-    w = Window.partitionBy("table_id", "tail_col").orderBy(
-        F.desc("coverage"), F.asc("head_col")
-    )
-    ranked = j.withColumn("r", F.row_number().over(w))
-    # match_column exists only when some coverage > 0
-    keep = ranked.where((F.col("r") == 1) & (F.col("coverage") > 0))
-    return lit_pairs.join(
-        bcast(keep.select("table_id", "head_col", "tail_col")),
-        ["table_id", "head_col", "tail_col"],
-        "left_anti",
-    )
+    cpa1 = _cpa(t, s1, only_one=False)
+    # pass 2: soft re-weighting; the weights from CPA¹ also serve pass 4.
+    # Same identity: CTA² votes straight over the scores.
+    we = _weights(t, cpa1)
+    s2, _, _ = _soft_scores(t, we, cpa1)
+    cta2 = _cta(t, s2, only_one=False)
+    # pass 3: disambiguation
+    cea3 = _cea(t, s2, cta=cta2, only_one=True)
+    cta3 = _cta(t, cea3, only_one=True)
+    cpa3 = _cpa(t, cea3, only_one=False)
+    # pass 4: reinforced disambiguation. The reference's
+    # update_context_weight(onlyLiteralContext=True) only populates the
+    # unrelated pairs — the entry weights stay the CPA¹ ones; only the CPA
+    # used for scale factors advances to CPA³.
+    unrelated = _unrelated_pairs(t, cpa3)
+    s3, ctxless, potential = _soft_scores(t, we, cpa3, unrelated, last_step=True)
+    cea4 = _cea(t, s3, cta=cta3, only_one=True, ctxless=ctxless, potential=potential)
+    cta4 = _cta(t, cea4, only_one=True)
+    cpa4 = _cpa(t, cea4, only_one=True, unrelated=unrelated)
+    return _output(pdf["table_id"].iloc[0],
+                   [("cea", cea4), ("cta", cta4), ("cpa", cpa4)])
+
+
+def _output(table_id, frames: list) -> pd.DataFrame:
+    parts = [f.assign(kind=kind) for kind, f in frames if len(f)]
+    out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+    out = _typed(out.reindex(columns=list(_OUT_TYPES)))
+    out.insert(0, "table_id", table_id)
+    return out
 
 
 # --------------------------------------------------------------------- driver
@@ -894,19 +787,14 @@ def _mat(df: DataFrame) -> DataFrame:
 
     Two properties, both needed:
     - **Logical-plan truncation** — downstream DataFrames see a LogicalRDD
-      leaf, so analyzer/optimizer cost stays bounded per pass instead of
-      accreting across the 4-pass DAG (a lazy ``persist()`` does NOT give
-      this: cache substitution happens after analysis, so every withColumn
-      re-analyzes the full tree — measured minutes of CheckAnalysis time).
-    - **No blocking job per intermediate** — unlike the old eager variant
-      (r1: ~20 serialized materialization jobs floored 8→32 end-to-end
-      scaling efficiency at 0.29), eager=False defers execution: the shared
-      RDD is computed ONCE inside the first job that needs it (the RDD DAG
-      dedupes stages), checkpointed at that point, and reused by later jobs.
-
-    On a cluster the pass OUTPUTS (cea/cta/cpa) additionally flow through the
-    pipeline's reliable parquet checkpoints for resume; intermediates only
-    need lineage-truncation semantics.
+      leaf, so analyzer/optimizer cost stays bounded instead of accreting
+      across the input DAG (a lazy ``persist()`` does NOT give this: cache
+      substitution happens after analysis, so every withColumn re-analyzes
+      the full tree — measured minutes of CheckAnalysis time).
+    - **No blocking job per intermediate** — eager=False defers execution:
+      the shared RDD is computed ONCE inside the first job that needs it
+      (the RDD DAG dedupes stages), checkpointed at that point, and reused
+      by later jobs.
 
     Storage level: serialized memory+disk via session.ckpt — see its
     docstring (measured 10% off the replicate-4 flagship vs deserialized
@@ -933,12 +821,10 @@ def force_parallel(*dfs: DataFrame | None) -> None:
     Why: a lazily-checkpointed frame executes the first time an action
     touches it — and with the forced-broadcast hints on the small dims, that
     first touch used to happen inside *broadcast evaluation*, where Spark
-    collects each broadcast child serially on a driver thread. At r2 scale
-    that serial evaluation of the fused input DAG was the dominant
-    wall-clock term of the flagship and the main scaling-efficiency sink.
-    One union-of-counts job runs every frame's stages concurrently at full
-    cluster parallelism and checkpoints them at job end; later passes'
-    broadcast evaluations then collect from already-materialized RDDs.
+    collects each broadcast child serially on a driver thread. One
+    union-of-counts job runs every frame's stages concurrently at full
+    cluster parallelism and checkpoints them at job end; later broadcast
+    evaluations then collect from already-materialized RDDs.
 
     INDEPENDENCE CONTRACT: frames in one call must not share UNMATERIALIZED
     ancestors. Concurrent stages of one job race to compute uncached
@@ -947,8 +833,7 @@ def force_parallel(*dfs: DataFrame | None) -> None:
     it duplicates the whole parent computation — measured 937 s vs 731 s on
     the replicate-4 flagship when the input frames were forced in one flat
     call. Dependent frames go in SEPARATE calls, in dependency order
-    (``force_waves``). ``None`` entries are skipped so optional frames
-    (ctxless/potential) can be passed unconditionally.
+    (``force_waves``). ``None`` entries are skipped.
 
     The contract is ENFORCED, not just documented: before submitting the
     union-of-counts job, ``_wave_violations`` walks each member's RDD
@@ -957,24 +842,15 @@ def force_parallel(*dfs: DataFrame | None) -> None:
     ancestor shared by ≥2 members. Violations warn by default and raise
     under ``SPARK_GRAFT_WAVE_ASSERT=1`` (set in tests), so a future edit
     that moves a frame into its parent's wave fails tests instead of
-    silently recomputing the parent (the measured 937-vs-731 s class of
-    regression)."""
+    silently recomputing the parent."""
     import os
     import warnings
 
-    if os.environ.get("SPARK_GRAFT_NO_FORCE") == "1":
-        return
     frames = [d for d in dfs if d is not None]
     if not frames:
         return
-    try:
-        if (
-            frames[0].sparkSession.conf.get("spark.graft.forceMaterialize", "true")
-            == "false"
-        ):
-            return  # fixture scale: per-job latency outweighs the wave win
-    except Exception:
-        pass
+    if frames[0].sparkSession.conf.get("spark.graft.forceMaterialize", "true") == "false":
+        return  # fixture scale: per-job latency outweighs the wave win
     bad = _wave_violations(frames)
     if bad:
         msg = "force_parallel independence contract violated: " + "; ".join(bad)
@@ -1076,10 +952,11 @@ def annotate(
     multihop: bool = True,
     timings: dict | None = None,
 ) -> AnnotationResult:
-    """Full 4-pass annotation (table_annotation.py:51-112)."""
+    """Full 4-pass annotation (table_annotation.py:51-112): the global
+    KG-side inputs, then one grouped-map job running every table's passes."""
     import time as _t
 
-    from ..session import job_group
+    from ..session import ckpt, job_group
 
     timings = timings if timings is not None else {}
     spark = cand.sparkSession
@@ -1091,78 +968,22 @@ def annotate(
         )
     timings["build_inputs"] = round(_t.time() - t0, 2)
 
-    # pass 1.
-    # CEA¹ with only_one=False and no CTA is the IDENTITY on the candidate
-    # set plus a per-cell rank that CPA voting never reads
-    # (annotation_models.py:904-1031 vs :1033-1131 — the vote joins only on
-    # (cell, entity, score)), so the scores frame feeds CPA¹ directly and
-    # the full-candidate-set sort window is skipped.
     t0 = _t.time()
     with job_group(spark, "annot_pass1"):
-        s1 = entity_scores_pass1(inp)
-        cpa1 = _mat(cpa_task(inp, s1, only_one=False, sim_scores=True))
-        force_parallel(cpa1)
-    timings["pass1"] = round(_t.time() - t0, 2)
-
-    # pass 2: soft re-weighting. Same identity: CEA² (only_one=False, no
-    # CTA) adds only an unread rank, so CTA² votes straight over s2.
-    # ``we`` is shared by pass 2 (s2) and pass 4 (the scored frame) — the
-    # lazy checkpoint materializes inside s2's wave and pass 4 reuses the
-    # blocks instead of re-deriving the ctx_entries ⋈ top-CPA join.
-    t0 = _t.time()
-    with job_group(spark, "annot_pass2"):
-        we = _mat(update_context_weights(inp, cpa1))
-        s2, _, _, _ = entity_scores_soft(inp, we, cpa1)
-        s2 = _mat(s2)
-        cta2 = _mat(cta_task(inp, s2, only_one=False))
-        force_waves([s2], [cta2])  # cta2 reads s2
-    timings["pass2"] = round(_t.time() - t0, 2)
-
-    # pass 3: disambiguation
-    t0 = _t.time()
-    with job_group(spark, "annot_pass3"):
-        cea3 = _mat(cea_task(inp, s2, cta=cta2, only_one=True))
-        cta3 = _mat(cta_task(inp, cea3, only_one=True))
-        cpa3 = _mat(cpa_task(inp, cea3, only_one=False))
-        force_waves([cea3], [cta3, cpa3])  # cta3 ∥ cpa3, both read cea3
-    timings["pass3"] = round(_t.time() - t0, 2)
-
-    # pass 4: reinforced disambiguation.
-    # NOTE: update_context_weight(onlyLiteralContext=True) in the reference
-    # (annotation_models.py:380-395) only populates unrelated_col_pairs — the
-    # entry WEIGHTS remain the ones computed from CPA¹ in pass 2; only the
-    # CPA used for scale factors advances to CPA³.
-    t0 = _t.time()
-    with job_group(spark, "annot_pass4"):
-        unrelated = _mat(literal_context_restriction(inp, cpa3))
-        s3, ctxless, potential, scored = entity_scores_soft(
-            inp, we, cpa3, unrelated_pairs=unrelated, last_step=True
+        schema = T.StructType(
+            [inp.cand.schema["table_id"]]
+            + [T.StructField(c, t) for c, t in _OUT_TYPES.items()]
         )
-        s3 = _mat(s3)
-        if ctxless is not None:
-            ctxless = _mat(ctxless)
-        if potential is not None:
-            potential = _mat(potential)
-        # the shared interior `scored` frame is checkpointed inside
-        # entity_scores_soft and forced in its own wave (it reads
-        # `unrelated`), so s3/ctxless/potential become mutually independent
-        # consumers of a materialized ancestor — one parallel wave instead
-        # of three sequential recomputes of the scored subtree
-        force_waves([unrelated], [scored])
-        timings["pass4_scored"] = round(_t.time() - t0, 2)
-        t1 = _t.time()
-        force_waves([s3, ctxless, potential])
-        timings["pass4_s3wave"] = round(_t.time() - t1, 2)
-        t1 = _t.time()
-        cea4 = _mat(
-            cea_task(
-                inp, s3, cta=cta3, only_one=True, contextless=ctxless,
-                potential=potential,
-            )
+        out = ckpt(
+            pack_tables(inp).groupBy("table_id").applyInPandas(annotate_table, schema),
+            eager=True,
         )
-        force_parallel(cea4)
-        timings["pass4_cea4"] = round(_t.time() - t1, 2)
-        cta4 = _mat(cta_task(inp, cea4, only_one=True))
-        cpa4 = _mat(cpa_task(inp, cea4, only_one=True, unrelated_pairs=unrelated))
-    timings["pass4"] = round(_t.time() - t0, 2)
-    return AnnotationResult(cea=cea4, cta=cta4, cpa=cpa4, inputs=inp)
+    timings["annotate_kernel"] = round(_t.time() - t0, 2)
+
+    def split(kind: str, cols: list) -> DataFrame:
+        return out.where(F.col("kind") == kind).select("table_id", *cols)
+
+    return AnnotationResult(
+        cea=split("cea", CEA_COLS), cta=split("cta", CTA_COLS),
+        cpa=split("cpa", CPA_COLS), inputs=inp,
+    )

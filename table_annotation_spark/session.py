@@ -194,8 +194,8 @@ from contextlib import contextmanager
 # count) is legible round-over-round in the bench artifact (VERDICT r4 #7)
 JOB_GROUPS = [
     "stage_prep", "stage_lookup",
-    "annot_build_inputs", "annot_pass1", "annot_pass2", "annot_pass3",
-    "annot_pass4",
+    # annot_pass1 holds the one grouped-map job that runs passes 1–4
+    "annot_build_inputs", "annot_pass1",
     "stage_materialize",
 ]
 

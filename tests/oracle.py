@@ -12,7 +12,8 @@ lookup sims (the lookup stage is validated separately against its own
 goldens), and the raw fixture KG rows.
 
 Used by tests/test_oracle_parity.py to measure CEA/CTA/CPA P/R of the Spark
-engine against reference semantics (target ≥ 0.95).
+engine against reference semantics (gate: exact equality), and by
+tests/test_annotation_kernel.py as the spec of the per-table kernel.
 """
 
 from __future__ import annotations

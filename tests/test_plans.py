@@ -235,7 +235,7 @@ class TestWaveContract:
         old = self._forced(spark, monkeypatch)
         try:
             inp = build_inputs(cand, body, classes, edges_c, degrees_c)
-            assert inp.row_pairs is not None
+            assert inp.table_pairs is not None
         finally:
             spark.conf.set("spark.graft.forceMaterialize", old)
 
