@@ -7,12 +7,14 @@ Two halves:
   waves w0–w2: the per-table co-occurring entity pairs, the entity types and
   pid sets, the literal-match kernel over distinct value tuples, and the
   1/2-hop relations of every distinct co-occurring pair.
-- ``annotate_table`` — everything per table, as ONE grouped-map kernel
-  (``groupBy("table_id").applyInPandas``): context scoring (C6/C10, the row
-  pair gates, context entries and relation sets) and passes 1–4. Nothing in
-  them crosses tables, so each table's candidates and its slice of the
-  KG-side inputs travel as one pandas group and the passes run as vectorized
-  pandas (merge / groupby / sort), no per-row Python:
+- ``annotate_tables`` — everything per table, as ONE pandas kernel call per
+  Spark partition (``repartition("table_id").mapInPandas``): context scoring
+  (C6/C10, the row pair gates, context entries and relation sets) and passes
+  1–4. Nothing in them crosses tables, so each table's candidates and its
+  slice of the KG-side inputs travel to one partition, and the passes run as
+  vectorized pandas (merge / groupby / sort, no per-row Python) over all of
+  the partition's tables at once, with ``table_id`` as the leading key of
+  every frame, join, group and sort:
 
     pass 1: entity_scores¹ = 0.1·sim (context weights not yet known)
             CEA¹ (all candidates) → CPA¹ (voting, all pairs)
@@ -26,10 +28,12 @@ Two halves:
 Where the reference breaks ties by dict/stable-sort order we add
 deterministic tie-breaks (entity / rel / type ascending; rank 1 = output) —
 documented deviation, SURVEY §3.1. Sums run in row / context-column order,
-so equal vote sequences give bit-equal totals and ties stay ties.
+so equal vote sequences give bit-equal totals and ties stay ties; with
+``table_id`` leading, a table's output does not depend on which tables share
+its partition.
 
-Limit: one table's annotation state (candidates × context columns) must fit
-in one Python worker — see RUNBOOK.
+Limit: one shuffle partition's annotation state (candidates × context
+columns of its tables) must fit in one Python worker — see RUNBOOK.
 """
 
 from __future__ import annotations
@@ -42,8 +46,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..session import bcast
 
 from . import annotation_context as ctx
 
@@ -59,8 +61,6 @@ class AnnotInputs:
     cand: DataFrame = None         # (table_id,row_idx,col_idx,cell,entity,sim)
     col_classes: DataFrame = None  # (table_id,col_idx,col_class)
     tbl: DataFrame = None          # (table_id,n_cols,n_data_rows)
-    ecol_pairs: DataFrame = None   # (table_id,head_col,tail_col) entity-entity, head<tail
-    el_pairs: DataFrame = None     # (table_id,head_col,tail_col) entity-literal, tail>head
     lit_cells: DataFrame = None    # (table_id,row_idx,lit_col,lit_cell)
     table_pairs: DataFrame = None  # (table_id,head_ent,tail_ent) co-occurring on a row
     pair_rel: DataFrame = None     # (head_ent,tail_ent,rel,prox) all co-occurring pairs
@@ -71,61 +71,22 @@ class AnnotInputs:
     ent_pids: DataFrame = None     # (entity,pid)
 
 
-def _frame_inputs(body: DataFrame, col_classes: DataFrame) -> dict:
-    """Column-pair / table-shape inputs derived from body + column classes
-    alone (no candidates, no KG) — cheap enough to rebuild on resume."""
-    ecols = col_classes.where(F.col("col_class") == "entity").select(
-        "table_id", "col_idx"
-    )
-    lcols = col_classes.where(F.col("col_class").isin(*LIT_CLASSES)).select(
-        "table_id", "col_idx", F.col("col_class").alias("lit_class")
-    )
-
-    e1 = ecols.select("table_id", F.col("col_idx").alias("head_col"))
-    e2 = ecols.select("table_id", F.col("col_idx").alias("tail_col"))
-    ecol_pairs = e1.join(e2, "table_id").where(F.col("head_col") < F.col("tail_col"))
-    el_pairs = (
-        ecols.select("table_id", F.col("col_idx").alias("head_col"))
-        .join(lcols.select("table_id", F.col("col_idx").alias("tail_col")), "table_id")
-        .where(F.col("tail_col") > F.col("head_col"))
-    )
-    tbl = body.groupBy("table_id").agg(
-        (F.max("col_idx") + 1).alias("n_cols"),
-        F.countDistinct("row_idx").alias("n_data_rows"),
-    )
-    lit_cells = (
+def _lit_cells(body: DataFrame, col_classes: DataFrame) -> DataFrame:
+    """The cells of literal-class columns (no candidates, no KG) — cheap
+    enough to rebuild on resume."""
+    lcols = col_classes.where(F.col("col_class").isin(*LIT_CLASSES))
+    return (
         body.withColumnRenamed("cell", "lit_cell")
         .join(lcols.select("table_id", "col_idx"), ["table_id", "col_idx"])
         .select("table_id", "row_idx", F.col("col_idx").alias("lit_col"), "lit_cell")
     )
-    return {
-        "ecol_pairs": ecol_pairs, "el_pairs": el_pairs, "tbl": tbl,
-        "lit_cells": lit_cells,
-    }
 
 
 def build_light_inputs(body: DataFrame, col_classes: DataFrame) -> AnnotInputs:
-    """Just the inputs emit_triples() consumes (ecol_pairs, el_pairs,
-    lit_cells) — used on resume when cea/cta/cpa are already checkpointed and
-    annotate() is skipped entirely."""
-    fr = _frame_inputs(body, col_classes)
-    return AnnotInputs(
-        ecol_pairs=fr["ecol_pairs"], el_pairs=fr["el_pairs"],
-        lit_cells=fr["lit_cells"],
-    )
-
-
-def _localize(df: DataFrame) -> DataFrame:
-    """Driver-localize a tiny dim frame under the small-corpus posture:
-    collect it once and rebuild it as a LocalRelation. Every later broadcast
-    of the frame then costs a no-job local copy instead of a re-evaluated
-    plan + collect job. Gated on the same conf as ``bcast``: in the
-    large-corpus posture these frames grow with the corpus (O(#tables) rows)
-    and must stay distributed — AQE picks their join strategies there."""
-    spark = df.sparkSession
-    if spark.conf.get("spark.graft.forcedBroadcast", "true") == "false":
-        return df
-    return spark.createDataFrame(df.collect(), schema=df.schema)
+    """Just the input emit_triples() consumes (lit_cells) — used on resume
+    when cea/cta/cpa are already checkpointed and annotate() is skipped
+    entirely."""
+    return AnnotInputs(lit_cells=_lit_cells(body, col_classes))
 
 
 def build_inputs(
@@ -138,7 +99,7 @@ def build_inputs(
     timings: dict | None = None,
 ) -> AnnotInputs:
     """Assemble the pass-invariant KG-side inputs (the scale-heavy global
-    joins). Per-table work is left to ``annotate_table``."""
+    joins). Per-table work is left to ``annotate_tables``."""
     import time as _t
 
     _marks: list[tuple[str, float]] = [("start", _t.time())]
@@ -146,15 +107,12 @@ def build_inputs(
     def _mark(label: str) -> None:
         _marks.append((label, _t.time()))
 
-    # ONE upfront exchange on table_id: the per-table pair join below and the
-    # kernel's groupBy both cluster on table_id and reuse it
+    # ONE upfront exchange on table_id: the per-table pair join below
+    # clusters on table_id and reuses it
     cand = cand.select(
         "table_id", "row_idx", "col_idx", "cell", "entity",
         F.col("score").alias("sim"),
     ).repartition("table_id")
-    fr = _frame_inputs(body, col_classes)
-    ecol_pairs, el_pairs = _localize(fr["ecol_pairs"]), _localize(fr["el_pairs"])
-    _mark("localize")
 
     # Construction is INTERLEAVED with wave forcing: Dataset.localCheckpoint
     # plans eagerly even with eager=False, and physical planning evaluates
@@ -167,9 +125,10 @@ def build_inputs(
     # wave 0: the shared ancestors. edges arrives as a LAZY checkpoint from
     # the pipeline — nothing has materialized it yet, so its readers can't
     # go in the same wave; the per-table co-occurring pair set (C6 domain)
-    # reads only the eager candidates checkpoint and a localized dim, so it
-    # rides along. It seeds the global pair_rel and picks each table's slice
-    # of pair_rel for the kernel.
+    # reads only the eager candidates checkpoint, so it rides along. It seeds
+    # the global pair_rel and picks each table's slice of pair_rel for the
+    # kernel. Lookup emits candidates only in entity-class columns, so every
+    # ordered column pair of a row is an entity-entity pair.
     h = cand.select(
         "table_id", "row_idx", F.col("col_idx").alias("head_col"),
         F.col("entity").alias("head_ent"),
@@ -180,7 +139,7 @@ def build_inputs(
     )
     table_pairs = _mat(
         h.join(t, ["table_id", "row_idx"])
-        .join(bcast(ecol_pairs), ["table_id", "head_col", "tail_col"])
+        .where(F.col("head_col") < F.col("tail_col"))
         .where(F.col("head_ent") != F.col("tail_ent"))
         .select("table_id", "head_ent", "tail_ent")
         .distinct()
@@ -227,8 +186,12 @@ def build_inputs(
             timings[f"bi_seg_{lbl}"] = round(tm - prev, 2)
 
     return AnnotInputs(
-        cand=cand, col_classes=col_classes, tbl=fr["tbl"],
-        ecol_pairs=ecol_pairs, el_pairs=el_pairs, lit_cells=fr["lit_cells"],
+        cand=cand, col_classes=col_classes,
+        tbl=body.groupBy("table_id").agg(
+            (F.max("col_idx") + 1).alias("n_cols"),
+            F.countDistinct("row_idx").alias("n_data_rows"),
+        ),
+        lit_cells=_lit_cells(body, col_classes),
         table_pairs=table_pairs, pair_rel=pair_rel,
         # the rejoin is a broadcast-hash lookup over the row-scale domain
         lit_match=ctx.literal_matches_from(j_lit, lit_keys),
@@ -237,9 +200,9 @@ def build_inputs(
 
 
 # --------------------------------------------------------------------- packing
-# One table's kernel input is ONE pandas group: a long frame whose ``kind``
-# column names the part a row belongs to and which columns it sets (the
-# others are null).
+# The kernel input is a long frame keyed by table_id whose ``kind`` column
+# names the part a row belongs to and which columns it sets (the others are
+# null); every row of a table lands in the same partition.
 KERNEL_PARTS = {
     "cand": ("row_idx", "col_idx", "entity", "sim", "cell_len"),
     "col": ("col_idx", "col_class"),
@@ -308,53 +271,69 @@ def pack_tables(inp: AnnotInputs) -> DataFrame:
 
 
 # --------------------------------------------------------------------- kernel
-PAIR = ["head_col", "tail_col"]
-CAND_KEY = ["row_idx", "col_idx", "entity"]
+# Every kernel frame carries table_id as its leading key, so one call
+# annotates a batch of tables and each table's sorts and sums run exactly as
+# they would alone. The per-entity frames (types, supertypes, type
+# neighbours, pids) are the same for every table: the batch shares one
+# de-duplicated copy, joined on entity or type alone.
+TID = "table_id"
+PAIR = [TID, "head_col", "tail_col"]
+CELL = [TID, "row_idx", "col_idx"]
+CAND_KEY = CELL + ["entity"]
 ENTRY_KEY = CAND_KEY + ["ctx_col"]
+_SHARED = ("type", "supertype", "type_nb", "pid")
 
 
 @dataclass
-class _Table:
-    """One table's kernel state (pandas frames, no table_id column)."""
-    cand: pd.DataFrame        # row_idx,col_idx,entity,sim,cell_len
-    n_cols: int
-    n_rows: int
-    ecols: list
-    ecol_pairs: pd.DataFrame  # head_col,tail_col
-    el_pairs: pd.DataFrame    # head_col,tail_col
-    lit_cells: pd.DataFrame   # row_idx,tail_col,lit_cell
-    lit_cpa: pd.DataFrame     # head_ent,lit_cell,rel
+class _Batch:
+    """A batch of tables' kernel state: pandas frames keyed by table_id, but
+    for the shared per-entity frames."""
+    cand: pd.DataFrame        # table_id,row_idx,col_idx,entity,sim,cell_len,n_cols
+    n_rows: pd.Series         # table_id → data rows (CTA/CPA denominator)
+    ecols: pd.DataFrame       # table_id,col_idx — entity columns
+    lcols: pd.DataFrame       # table_id,col_idx — literal columns
+    ecol_pairs: pd.DataFrame  # table_id,head_col,tail_col
+    el_pairs: pd.DataFrame    # table_id,head_col,tail_col
+    lit_cells: pd.DataFrame   # table_id,row_idx,tail_col,lit_cell
+    lit_cpa: pd.DataFrame     # table_id,head_ent,lit_cell,rel
     types: pd.DataFrame       # entity,type,level,rank
     super_t: pd.DataFrame     # type,supertype
     type_nb: pd.DataFrame     # type,neighbor
     ent_pids: pd.DataFrame    # entity,pid
-    cached_rel: pd.DataFrame = None  # head_ent,tail_ent,rel,prox (reliable pairs)
+    cached_rel: pd.DataFrame = None  # table_id,head_ent,tail_ent,rel,prox (reliable pairs)
     entries: pd.DataFrame = None     # ENTRY_KEY,is_ent,score,head_col,tail_col
     ctx_rels: pd.DataFrame = None    # ENTRY_KEY,rel,head_col,tail_col
 
 
 def _typed(df: pd.DataFrame) -> pd.DataFrame:
-    """Output dtypes: nullable ints, floats, objects (strings)."""
+    """Output dtypes: nullable ints, floats, objects (strings); table_id is
+    left as it came."""
     return df.astype({
         c: "Int32" if isinstance(_OUT_TYPES[c], T.IntegerType) else
         "float64" if isinstance(_OUT_TYPES[c], T.DoubleType) else object
-        for c in df.columns
+        for c in df.columns if c in _OUT_TYPES
     })
 
 
 def _parts(pdf: pd.DataFrame) -> dict:
-    """The packed group split into its KERNEL_PARTS frames."""
+    """The packed batch split into its KERNEL_PARTS frames; the shared parts
+    lose table_id and their per-table copies."""
     by_kind = dict(tuple(pdf.groupby("kind", sort=False)))
     out = {}
     for kind, cols in KERNEL_PARTS.items():
-        p = by_kind.get(kind, pdf.iloc[0:0]).reindex(columns=list(cols))
-        out[kind] = p.astype({c: _PANDAS_DTYPE[c] for c in cols})
+        p = by_kind.get(kind, pdf.iloc[0:0]).reindex(columns=[TID, *cols])
+        p = p.astype({c: _PANDAS_DTYPE[c] for c in cols})
+        if kind in _SHARED:
+            p = p[list(cols)].drop_duplicates()
+        out[kind] = p.reset_index(drop=True)
     return out
 
 
 def _cols(df: pd.DataFrame, **named: str) -> pd.DataFrame:
-    """Projection with renames, allowing one source column under two names."""
-    return pd.DataFrame({new: df[old].to_numpy() for new, old in named.items()})
+    """Projection with renames, allowing one source column under two names;
+    table_id, when df has it, is kept as the first column."""
+    keep = {TID: df[TID].to_numpy()} if TID in df.columns else {}
+    return pd.DataFrame({**keep, **{new: df[old].to_numpy() for new, old in named.items()}})
 
 
 def _anti(df: pd.DataFrame, other: pd.DataFrame, keys: list) -> pd.DataFrame:
@@ -388,27 +367,30 @@ def _ranked(df: pd.DataFrame, part: list, order: list, desc: list) -> pd.DataFra
     return df
 
 
-def _unpack(pdf: pd.DataFrame) -> _Table | None:
+def _col_pairs(heads: pd.DataFrame, tails: pd.DataFrame) -> pd.DataFrame:
+    """(table_id, head_col, tail_col) of one table's columns, head < tail."""
+    j = _cols(heads, head_col="col_idx").merge(_cols(tails, tail_col="col_idx"), on=TID)
+    return j[j["head_col"] < j["tail_col"]].reset_index(drop=True)
+
+
+def _unpack(pdf: pd.DataFrame) -> _Batch | None:
     p = _parts(pdf)
     cand = p["cand"]
     if cand.empty:
         return None
-    shape, cols, lit_match = p["shape"], p["col"], p["lit_match"]
-    ecols = sorted(cols.loc[cols["col_class"] == "entity", "col_idx"])
-    lcols = sorted(cols.loc[cols["col_class"].isin(LIT_CLASSES), "col_idx"])
-    t = _Table(
+    shape = p["shape"].set_index(TID)
+    cand["n_cols"] = cand[TID].map(shape["n_cols"])
+    cols = p["col"].sort_values([TID, "col_idx"])
+    ecols = cols.loc[cols["col_class"] == "entity", [TID, "col_idx"]]
+    lcols = cols.loc[cols["col_class"].isin(LIT_CLASSES), [TID, "col_idx"]]
+    lit_match = p["lit_match"]
+    t = _Batch(
         cand=cand,
-        n_cols=int(shape["n_cols"].iloc[0]),
-        n_rows=int(shape["n_data_rows"].iloc[0]),
+        n_rows=shape["n_data_rows"],
         ecols=ecols,
-        ecol_pairs=pd.DataFrame(
-            [(h, tc) for i, h in enumerate(ecols) for tc in ecols[i + 1:]],
-            columns=PAIR, dtype="int64",
-        ),
-        el_pairs=pd.DataFrame(
-            [(h, tc) for h in ecols for tc in lcols if tc > h],
-            columns=PAIR, dtype="int64",
-        ),
+        lcols=lcols,
+        ecol_pairs=_col_pairs(ecols, ecols),
+        el_pairs=_col_pairs(ecols, lcols),
         lit_cells=p["lit_cell"].rename(columns={"lit_col": "tail_col"}),
         # the literal CPA cache: (entity, mention) → matched pids
         lit_cpa=_cols(lit_match, head_ent="entity", lit_cell="lit_cell", rel="rel")
@@ -418,26 +400,26 @@ def _unpack(pdf: pd.DataFrame) -> _Table | None:
         type_nb=p["type_nb"],
         ent_pids=p["pid"].rename(columns={"rel": "pid"}),
     )
-    _context(t, p["pair_rel"], lit_match, lcols)
+    _context(t, p["pair_rel"], lit_match)
     return t
 
 
-def _context(t: _Table, pair_rel: pd.DataFrame, lit_match: pd.DataFrame,
-             lcols: list) -> None:
+def _context(t: _Batch, pair_rel: pd.DataFrame, lit_match: pd.DataFrame) -> None:
     """C6/C7 context scoring (annotation_models.py:536-556): per-row
     candidate pair gates, the context entries of every candidate, their
     relation sets, and the reliably-connected pair relations (cached_rel)."""
     c = t.cand
+    ents = [TID, "head_ent", "tail_ent"]
     rp = (
         _cols(c, row_idx="row_idx", head_col="col_idx", head_ent="entity",
               head_sim="sim", head_len="cell_len")
         .merge(_cols(c, row_idx="row_idx", tail_col="col_idx", tail_ent="entity",
-                     tail_sim="sim", tail_len="cell_len"), on="row_idx")
+                     tail_sim="sim", tail_len="cell_len"), on=[TID, "row_idx"])
         .merge(t.ecol_pairs, on=PAIR)
     )
     rp = rp[rp["head_ent"] != rp["tail_ent"]]
-    best = _agg(pair_rel, ["head_ent", "tail_ent"], best=("prox", "max"))
-    rp = rp.merge(best, on=["head_ent", "tail_ent"], how="left")
+    best = _agg(pair_rel, ents, best=("prox", "max"))
+    rp = rp.merge(best, on=ents, how="left")
     known = rp["best"].notna()
     thr_tail = np.where(rp["tail_len"] > 5, 0.7, 0.9)
     thr_head = np.where(rp["head_len"] > 5, 0.7, 0.9)
@@ -450,13 +432,11 @@ def _context(t: _Table, pair_rel: pd.DataFrame, lit_match: pd.DataFrame,
         np.maximum(0.1, rp["best"] * rp["head_sim"]), 0.1,
     )
     reliable = rp[(rp["head_score"] > 0.1) | (rp["tail_score"] > 0.1)]
-    t.cached_rel = pair_rel.merge(
-        reliable[["head_ent", "tail_ent"]].drop_duplicates(), on=["head_ent", "tail_ent"]
-    )
+    t.cached_rel = pair_rel.merge(reliable[ents].drop_duplicates(), on=ents)
 
     # context entries: candidate × other entity cols ∪ literal cols ≥ col
     cells = c[CAND_KEY]
-    dom_e = cells.merge(pd.DataFrame({"ctx_col": np.array(t.ecols, "int64")}), how="cross")
+    dom_e = cells.merge(_cols(t.ecols, ctx_col="col_idx"), on=TID)
     dom_e = dom_e[dom_e["ctx_col"] != dom_e["col_idx"]]
     sides = pd.concat([
         _cols(rp, row_idx="row_idx", col_idx="head_col", entity="head_ent",
@@ -465,7 +445,7 @@ def _context(t: _Table, pair_rel: pd.DataFrame, lit_match: pd.DataFrame,
               ctx_col="head_col", s="tail_score"),
     ])
     ent = dom_e.merge(_agg(sides, ENTRY_KEY, s=("s", "max")), on=ENTRY_KEY, how="left")
-    dom_l = cells.merge(pd.DataFrame({"ctx_col": np.array(lcols, "int64")}), how="cross")
+    dom_l = cells.merge(_cols(t.lcols, ctx_col="col_idx"), on=TID)
     dom_l = dom_l[dom_l["ctx_col"] >= dom_l["col_idx"]]
     lit_s = _cols(lit_match, row_idx="row_idx", col_idx="col_idx", entity="entity",
                   ctx_col="lit_col", s="match_score")
@@ -480,7 +460,7 @@ def _context(t: _Table, pair_rel: pd.DataFrame, lit_match: pd.DataFrame,
     t.entries = e.drop(columns="s")
 
     # relation set per entry, carrying the entry's oriented pair
-    rr = reliable.merge(pair_rel, on=["head_ent", "tail_ent"])
+    rr = reliable.merge(pair_rel, on=ents)
     t.ctx_rels = pd.concat([
         _cols(rr, row_idx="row_idx", col_idx="head_col", entity="head_ent",
               ctx_col="tail_col", rel="rel", head_col="head_col", tail_col="tail_col"),
@@ -491,17 +471,17 @@ def _context(t: _Table, pair_rel: pd.DataFrame, lit_match: pd.DataFrame,
     ]).drop_duplicates()
 
 
-def _weights(t: _Table, cpa: pd.DataFrame) -> pd.DataFrame:
+def _weights(t: _Batch, cpa: pd.DataFrame) -> pd.DataFrame:
     """C10 soft re-weighting (annotation_models.py:352-379): per ctx entry,
     weight = max(floor, base·coverage·proximity·df) from the TOP CPA of the
-    oriented pair; floor 0.05 (entity ctx) / 0.01 (literal ctx)."""
-    if not t.ecols:
-        return t.entries.iloc[0:0].assign(weight=0.0)
+    oriented pair; floor 0.05 (entity ctx) / 0.01 (literal ctx). The
+    distance decay runs from the table's first entity column; a table with
+    no entity column has no weighted entries."""
     top = cpa.loc[cpa["rank"] == 1, PAIR + ["coverage", "prox"]]
-    e = t.entries.merge(top, on=PAIR, how="left")
-    min_e = t.ecols[0]
+    origin = _agg(t.ecols, [TID], min_e=("col_idx", "min"))
+    e = t.entries.merge(origin, on=TID).merge(top, on=PAIR, how="left")
     df_col = 1.0 / (1.0 + 4.0 * np.minimum(
-        (e["ctx_col"] - min_e).abs(), (e["col_idx"] - min_e).abs()
+        (e["ctx_col"] - e["min_e"]).abs(), (e["col_idx"] - e["min_e"]).abs()
     ))
     base = np.where(e["is_ent"], SEMANTIC_W, LITERAL_W)
     floor = np.where(e["is_ent"], 0.05, 0.01)
@@ -509,10 +489,10 @@ def _weights(t: _Table, cpa: pd.DataFrame) -> pd.DataFrame:
         e["coverage"].notna(),
         np.maximum(floor, base * e["coverage"] * e["prox"] * df_col), floor,
     )
-    return e.drop(columns=["coverage", "prox"])
+    return e.drop(columns=["coverage", "prox", "min_e"])
 
 
-def _soft_scores(t: _Table, we: pd.DataFrame, cpa: pd.DataFrame,
+def _soft_scores(t: _Batch, we: pd.DataFrame, cpa: pd.DataFrame,
                  unrelated: pd.DataFrame | None = None, last_step: bool = False):
     """entity_scoring_task(first_step=False) (annotation_models.py:714-798).
 
@@ -540,11 +520,11 @@ def _soft_scores(t: _Table, we: pd.DataFrame, cpa: pd.DataFrame,
     scored["base"] = np.where(scored["is_ent"], SEMANTIC_W, LITERAL_W)
     agg = _agg(scored, CAND_KEY, num=("wx", "sum"), den=("base", "sum"),
                max_w=("weight", "max"))
-    s = t.cand[CAND_KEY + ["sim"]].merge(agg, on=CAND_KEY, how="left")
+    s = t.cand[CAND_KEY + ["sim", "n_cols"]].merge(agg, on=CAND_KEY, how="left")
     ctx_score = np.where(s["den"].notna() & (s["den"] > 0), s["num"] / s["den"], 0.01)
     logistic = 1.0 / (1.0 + np.exp(-(s["sim"] ** 2.5 / 0.5 - 1.0) / 0.2))
     s["score"] = np.where(
-        t.n_cols <= 1, s["sim"],
+        s["n_cols"] <= 1, s["sim"],
         np.where(s["max_w"].fillna(0.0) > 0.1, ctx_score * logistic, 0.1 * s["sim"]),
     )
     s = s[CAND_KEY + ["sim", "score"]]
@@ -552,21 +532,19 @@ def _soft_scores(t: _Table, we: pd.DataFrame, cpa: pd.DataFrame,
         return s, None, None
 
     # contextless cells: max scaled per CELL; cells with no considered entries → 0.1.
-    # The reference judges contextlessness only once some cell has recorded
-    # a value — a considered entry, or a candidate without any entry; when
-    # none has, no cell is contextless.
-    if scored.empty and _anti(t.cand, t.entries, CAND_KEY).empty:
-        ctxless = None
-    else:
-        ctxless = t.cand[["row_idx", "col_idx"]].drop_duplicates().merge(
-            _agg(scored, ["row_idx", "col_idx"], ctxless=("scaled", "max")),
-            on=["row_idx", "col_idx"], how="left",
-        )
-        ctxless["ctxless"] = ctxless["ctxless"].fillna(0.1)
+    # The reference judges a table's contextlessness only once some cell of
+    # it has recorded a value — a considered entry, or a candidate without
+    # any entry; a table where none has gets no rows (no cell is contextless).
+    recorded = pd.concat([scored[TID], _anti(t.cand, t.entries, CAND_KEY)[TID]]).unique()
+    cells = t.cand[CELL].drop_duplicates()
+    ctxless = cells[cells[TID].isin(recorded)].merge(
+        _agg(scored, CELL, ctxless=("scaled", "max")), on=CELL, how="left",
+    )
+    ctxless["ctxless"] = ctxless["ctxless"].fillna(0.1)
 
     # potential candidates: candidate has a (direction-adjusted) CPA pid in its
     # pid set (annotation_models.py:750-765); composite "::" ids never match
-    pc = scored[ENTRY_KEY + ["is_ent"] + PAIR].drop_duplicates().merge(
+    pc = scored[ENTRY_KEY + ["is_ent", "head_col", "tail_col"]].drop_duplicates().merge(
         cpa[PAIR + ["rel", "coverage"]], on=PAIR
     )
     pc = pc[~pc["rel"].str.contains("::", regex=False)]
@@ -581,20 +559,23 @@ def _soft_scores(t: _Table, we: pd.DataFrame, cpa: pd.DataFrame,
     return s, ctxless, potential
 
 
-def _cea(t: _Table, s: pd.DataFrame, cta: pd.DataFrame | None = None,
+def _cea(t: _Batch, s: pd.DataFrame, cta: pd.DataFrame | None = None,
          only_one: bool = True, ctxless: pd.DataFrame | None = None,
          potential: pd.DataFrame | None = None) -> pd.DataFrame:
     """C12 (annotation_models.py:904-1031): per-cell ranked candidates
-    (CEA_COLS); only_one keeps the cell's top-score ties."""
+    (table_id + CEA_COLS); only_one keeps the cell's top-score ties. A cell
+    without a ctxless row (its table recorded no context) is not
+    contextless."""
     s = s.assign(n_potential=np.nan)
     if cta is not None:
         # per (column, candidate): best level-weighted CTA match — the
         # candidate's own 3-level types, or a CTA type's neighbour among its
         # level-1/2 types (one level down)
+        col, col_ent = [TID, "col_idx"], [TID, "col_idx", "entity"]
         cta_c = cta.rename(columns={"type": "cta_type", "score": "cta_score",
                                     "coverage": "cta_cov"})
-        cmatch = s[["col_idx", "entity"]].drop_duplicates().merge(
-            cta_c[["col_idx", "cta_type", "cta_score"]], on="col_idx"
+        cmatch = s[col_ent].drop_duplicates().merge(
+            cta_c[col + ["cta_type", "cta_score"]], on=col
         )
         own = _cols(t.types, entity="entity", cta_type="type", own_level="level")
         lvl12 = t.types[t.types["level"].isin([1, 2])]
@@ -604,9 +585,9 @@ def _cea(t: _Table, s: pd.DataFrame, cta: pd.DataFrame | None = None,
             .merge(_cols(lvl12, entity="entity", neighbor="type", nb_level="level"),
                    on=["entity", "neighbor"])
         )
-        nb = _agg(nb, ["col_idx", "entity", "cta_type"], nb_level=("nb_level", "min"))
+        nb = _agg(nb, col_ent + ["cta_type"], nb_level=("nb_level", "min"))
         j = cmatch.merge(own, on=["entity", "cta_type"], how="left").merge(
-            nb, on=["col_idx", "entity", "cta_type"], how="left"
+            nb, on=col_ent + ["cta_type"], how="left"
         )
         own_l, nb_l = j["own_level"].fillna(0), j["nb_level"].fillna(0)
         lvl_w = np.select(
@@ -614,17 +595,15 @@ def _cea(t: _Table, s: pd.DataFrame, cta: pd.DataFrame | None = None,
             [CTA_LEVEL_W[1], CTA_LEVEL_W[2], CTA_LEVEL_W[3]], np.nan,
         )
         j["cta_d"] = lvl_w * j["cta_score"]
-        disamb = _agg(j, ["col_idx", "entity"], cta_d=("cta_d", "max"))
-        cov_mean = _agg(cta_c, ["col_idx"], cta_cov=("cta_cov", "mean"))
-        s = s.merge(disamb, on=["col_idx", "entity"], how="left").merge(
-            cov_mean, on="col_idx", how="left"
-        )
+        disamb = _agg(j, col_ent, cta_d=("cta_d", "max"))
+        cov_mean = _agg(cta_c, col, cta_cov=("cta_cov", "mean"))
+        s = s.merge(disamb, on=col_ent, how="left").merge(cov_mean, on=col, how="left")
         s["cta_d"] = s["cta_d"].fillna(0.0)
         if ctxless is None:
             coeff = s["cta_cov"] / 2.0
         else:
             s = s.drop(columns="n_potential").merge(
-                ctxless, on=["row_idx", "col_idx"], how="left"
+                ctxless, on=CELL, how="left"
             ).merge(potential, on=CAND_KEY, how="left")
             is_ctxless = s["ctxless"] <= 0.1
             s["score"] = np.where(
@@ -638,20 +617,21 @@ def _cea(t: _Table, s: pd.DataFrame, cta: pd.DataFrame | None = None,
         )
     s["npot"] = s["n_potential"].fillna(0)
     s = s.sort_values(
-        ["row_idx", "col_idx", "score", "npot", "sim", "entity"],
-        ascending=[True, True, False, False, False, True], kind="mergesort",
+        CELL + ["score", "npot", "sim", "entity"],
+        ascending=[True] * len(CELL) + [False, False, False, True], kind="mergesort",
     )
-    s["rank"] = s.groupby(["row_idx", "col_idx"], sort=False).cumcount() + 1
+    s["rank"] = s.groupby(CELL, sort=False).cumcount() + 1
     if only_one:
-        s = s[s["score"] == s.groupby(["row_idx", "col_idx"])["score"].transform("max")]
-    return s[CEA_COLS]
+        s = s[s["score"] == s.groupby(CELL)["score"].transform("max")]
+    return s[[TID, *CEA_COLS]]
 
 
-def _cpa(t: _Table, cea: pd.DataFrame, only_one: bool,
+def _cpa(t: _Batch, cea: pd.DataFrame, only_one: bool,
          unrelated: pd.DataFrame | None = None) -> pd.DataFrame:
     """C13 voting (annotation_models.py:1033-1131) over entity-entity pairs
     (cached relations) and entity-literal pairs (the literal CPA cache keyed
-    (entity, mention), tail confidence 0). Returns kept CPAs (CPA_COLS)."""
+    (entity, mention), tail confidence 0). Returns kept CPAs
+    (table_id + CPA_COLS)."""
     ent_pairs, lit_pairs = t.ecol_pairs, t.el_pairs
     if unrelated is not None:
         ent_pairs = _anti(ent_pairs, unrelated, PAIR)
@@ -661,22 +641,22 @@ def _cpa(t: _Table, cea: pd.DataFrame, only_one: bool,
     tail = _cols(cea, row_idx="row_idx", tail_col="col_idx", tail_ent="entity",
                  tail_conf="score")
     je = (
-        head.merge(ent_pairs, on="head_col")
-        .merge(tail, on=["row_idx", "tail_col"])
-        .merge(t.cached_rel, on=["head_ent", "tail_ent"])
+        head.merge(ent_pairs, on=[TID, "head_col"])
+        .merge(tail, on=[TID, "row_idx", "tail_col"])
+        .merge(t.cached_rel, on=[TID, "head_ent", "tail_ent"])
     )
     je["pair_score"] = je["prox"] * np.maximum(je["head_conf"], je["tail_conf"])
     jl = (
-        head.merge(lit_pairs, on="head_col")
-        .merge(t.lit_cpa, on="head_ent")
-        .merge(t.lit_cells, on=["row_idx", "tail_col", "lit_cell"])
+        head.merge(lit_pairs, on=[TID, "head_col"])
+        .merge(t.lit_cpa, on=[TID, "head_ent"])
+        .merge(t.lit_cells, on=[TID, "row_idx", "tail_col", "lit_cell"])
     )
     jl["prox"] = 1.0
     jl["pair_score"] = 1.0 * np.maximum(jl["head_conf"], 0.0)
     vote = PAIR + ["rel", "row_idx"]
     votes = pd.concat([je[vote + ["prox", "pair_score"]], jl[vote + ["prox", "pair_score"]]])
     if votes.empty:
-        return _typed(pd.DataFrame(columns=CPA_COLS))
+        return _typed(pd.DataFrame(columns=CPA_COLS)).assign(**{TID: cea[TID].iloc[0:0]})
     per_row = _agg(votes, vote, row_score=("pair_score", "max"), row_prox=("prox", "min"))
     agg = _agg(per_row, PAIR + ["rel"], cnt=("row_score", "size"),
                total=("row_score", "sum"), prox=("row_prox", "min"))
@@ -686,38 +666,41 @@ def _cpa(t: _Table, cea: pd.DataFrame, only_one: bool,
     agg = _ranked(agg, PAIR, ["ct", "cnt", "prox", "direct", "forward", "rel"],
                   [True, True, True, True, True, False])
     kept = agg[agg["ct"] >= agg["top_ct"]] if only_one else agg[agg["cnt"] >= agg["top_cnt"]]
-    kept = kept.assign(score=kept["total"] / t.n_rows, coverage=kept["cnt"] / t.n_rows)
-    return kept[CPA_COLS]
+    n_rows = kept[TID].map(t.n_rows)
+    kept = kept.assign(score=kept["total"] / n_rows, coverage=kept["cnt"] / n_rows)
+    return kept[[TID, *CPA_COLS]]
 
 
-def _cta(t: _Table, cea: pd.DataFrame, only_one: bool) -> pd.DataFrame:
+def _cta(t: _Batch, cea: pd.DataFrame, only_one: bool) -> pd.DataFrame:
     """C11 voting (annotation_models.py:800-902). Returns kept CTAs
-    (CTA_COLS); only_one keeps the top-score ties plus their supertypes."""
+    (table_id + CTA_COLS); only_one keeps the top-score ties plus their
+    supertypes."""
+    col, col_type = [TID, "col_idx"], [TID, "col_idx", "type"]
     j = cea[CAND_KEY + ["score"]].merge(t.types, on="entity")
     j["w"] = np.select(
         [j["level"] == 1, j["level"] == 2], [CTA_LEVEL_W[1], CTA_LEVEL_W[2]],
         CTA_LEVEL_W[3],
     ) * j["score"]
-    per_row = _agg(j, ["col_idx", "type", "row_idx"], row_score=("w", "max"),
+    per_row = _agg(j, col_type + ["row_idx"], row_score=("w", "max"),
                    row_rank=("rank", "max"))
-    agg = _agg(per_row, ["col_idx", "type"], cnt=("row_score", "size"),
+    agg = _agg(per_row, col_type, cnt=("row_score", "size"),
                total=("row_score", "sum"), total_ranks=("row_rank", "sum"))
     agg["ct"] = agg["cnt"] * agg["total"]
-    agg = _ranked(agg, ["col_idx"], ["ct", "total_ranks", "type"], [True, True, False])
+    agg = _ranked(agg, col, ["ct", "total_ranks", "type"], [True, True, False])
     if only_one:
         top = agg[agg["ct"] >= agg["top_ct"]]
         sups = _cols(top.merge(t.super_t, on="type"), col_idx="col_idx",
                      type="supertype")
-        extra = _anti(agg.merge(sups.drop_duplicates(), on=["col_idx", "type"]),
-                      top, ["col_idx", "type"])
+        extra = _anti(agg.merge(sups.drop_duplicates(), on=col_type), top, col_type)
         kept = pd.concat([top, extra])
     else:
         kept = agg[agg["cnt"] >= agg["top_cnt"]]
-    kept = kept.assign(score=kept["total"] / t.n_rows, coverage=kept["cnt"] / t.n_rows)
-    return kept[CTA_COLS]
+    n_rows = kept[TID].map(t.n_rows)
+    kept = kept.assign(score=kept["total"] / n_rows, coverage=kept["cnt"] / n_rows)
+    return kept[[TID, *CTA_COLS]]
 
 
-def _unrelated_pairs(t: _Table, cpa: pd.DataFrame) -> pd.DataFrame:
+def _unrelated_pairs(t: _Batch, cpa: pd.DataFrame) -> pd.DataFrame:
     """C10 onlyLiteralContext (annotation_models.py:380-395): per literal col
     keep only the entity col whose TOP CPA has the best coverage (ties → the
     lowest entity col, matching the reference's strict-> scan); every other
@@ -725,22 +708,24 @@ def _unrelated_pairs(t: _Table, cpa: pd.DataFrame) -> pd.DataFrame:
     top = cpa.loc[cpa["rank"] == 1, PAIR + ["coverage"]]
     j = t.el_pairs.merge(top, on=PAIR, how="left")
     j["coverage"] = j["coverage"].fillna(-1.0)
-    j = j.sort_values(["tail_col", "coverage", "head_col"],
-                      ascending=[True, False, True], kind="mergesort")
-    best = j[(j.groupby("tail_col").cumcount() == 0) & (j["coverage"] > 0)]
+    j = j.sort_values([TID, "tail_col", "coverage", "head_col"],
+                      ascending=[True, True, False, True], kind="mergesort")
+    best = j[(j.groupby([TID, "tail_col"]).cumcount() == 0) & (j["coverage"] > 0)]
     return _anti(t.el_pairs, best, PAIR)
 
 
-def annotate_table(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The grouped-map kernel: one table's packed inputs (``KERNEL_PARTS``)
-    → its final CEA / CTA / CPA rows, tagged by ``kind``."""
+def annotate_tables(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The kernel: a batch of tables' packed inputs (``KERNEL_PARTS``) →
+    their final CEA / CTA / CPA rows, tagged by ``kind``. Each table's output
+    is the same whichever tables share its batch."""
     t = _unpack(pdf)
     if t is None:
-        return _output(None, [])
+        return _output([])
     # pass 1: CEA¹ (only_one=False, no CTA) is the identity on the candidate
     # set plus a rank that CPA voting never reads
-    s1 = t.cand[CAND_KEY + ["sim"]].assign(
-        score=0.1 * t.cand["sim"] if t.n_cols > 1 else t.cand["sim"]
+    c = t.cand
+    s1 = c[CAND_KEY + ["sim"]].assign(
+        score=np.where(c["n_cols"] > 1, 0.1 * c["sim"], c["sim"])
     )
     cpa1 = _cpa(t, s1, only_one=False)
     # pass 2: soft re-weighting; the weights from CPA¹ also serve pass 4.
@@ -761,16 +746,22 @@ def annotate_table(pdf: pd.DataFrame) -> pd.DataFrame:
     cea4 = _cea(t, s3, cta=cta3, only_one=True, ctxless=ctxless, potential=potential)
     cta4 = _cta(t, cea4, only_one=True)
     cpa4 = _cpa(t, cea4, only_one=True, unrelated=unrelated)
-    return _output(pdf["table_id"].iloc[0],
-                   [("cea", cea4), ("cta", cta4), ("cpa", cpa4)])
+    return _output([("cea", cea4), ("cta", cta4), ("cpa", cpa4)])
 
 
-def _output(table_id, frames: list) -> pd.DataFrame:
+def _output(frames: list) -> pd.DataFrame:
     parts = [f.assign(kind=kind) for kind, f in frames if len(f)]
     out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-    out = _typed(out.reindex(columns=list(_OUT_TYPES)))
-    out.insert(0, "table_id", table_id)
-    return out
+    return _typed(out.reindex(columns=[TID, *_OUT_TYPES]))
+
+
+def _annotate_partition(batches):
+    """mapInPandas body: all of a partition's tables in one kernel call."""
+    pdfs = list(batches)
+    if pdfs:
+        out = annotate_tables(pd.concat(pdfs, ignore_index=True))
+        if len(out):
+            yield out
 
 
 # --------------------------------------------------------------------- driver
@@ -953,7 +944,8 @@ def annotate(
     timings: dict | None = None,
 ) -> AnnotationResult:
     """Full 4-pass annotation (table_annotation.py:51-112): the global
-    KG-side inputs, then one grouped-map job running every table's passes."""
+    KG-side inputs, then one job running every table's passes, one kernel
+    call per partition."""
     import time as _t
 
     from ..session import ckpt, job_group
@@ -975,7 +967,8 @@ def annotate(
             + [T.StructField(c, t) for c, t in _OUT_TYPES.items()]
         )
         out = ckpt(
-            pack_tables(inp).groupBy("table_id").applyInPandas(annotate_table, schema),
+            pack_tables(inp).repartition("table_id")
+            .mapInPandas(_annotate_partition, schema),
             eager=True,
         )
     timings["annotate_kernel"] = round(_t.time() - t0, 2)

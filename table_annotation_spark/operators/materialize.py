@@ -43,7 +43,9 @@ def _top1_cpa(cpa: DataFrame) -> DataFrame:
 
 def emit_triples(result: AnnotationResult) -> DataFrame:
     """(subj, pred, obj, obj_kind, table_id, row_idx, head_col, tail_col,
-    score) — one triple per annotated (pair, row)."""
+    score) — one triple per annotated (pair, row). Only entity columns have
+    CEA and only literal columns have literal cells, so the tail join alone
+    tells entity pairs from literal pairs."""
     inp = result.inputs
     cea = _top1(result.cea)
     cpa = _top1_cpa(result.cpa)
@@ -58,8 +60,7 @@ def emit_triples(result: AnnotationResult) -> DataFrame:
     )
 
     ent_pairs = (
-        cpa.join(inp.ecol_pairs, ["table_id", "head_col", "tail_col"])
-        .join(head, ["table_id", "head_col"])
+        cpa.join(head, ["table_id", "head_col"])
         .join(tail, ["table_id", "row_idx", "tail_col"])
         .select(
             "table_id", "row_idx", "head_col", "tail_col",
@@ -69,8 +70,7 @@ def emit_triples(result: AnnotationResult) -> DataFrame:
         )
     )
     lit_pairs = (
-        cpa.join(inp.el_pairs, ["table_id", "head_col", "tail_col"])
-        .join(head, ["table_id", "head_col"])
+        cpa.join(head, ["table_id", "head_col"])
         .join(
             inp.lit_cells.select(
                 "table_id", "row_idx", F.col("lit_col").alias("tail_col"),

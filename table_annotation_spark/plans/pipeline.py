@@ -28,6 +28,19 @@ from ..sources.embedded_tables import extract_manifest
 STAGES = ["prep", "candidates", "cea", "cta", "cpa", "triples"]
 
 
+def _localize(df: DataFrame) -> DataFrame:
+    """Driver-localize a tiny dim frame under the small-corpus posture:
+    collect it once and rebuild it as a LocalRelation. Every later broadcast
+    of the frame then costs a no-job local copy instead of a re-evaluated
+    plan + collect job. Gated on the same conf as ``bcast``: in the
+    large-corpus posture these frames grow with the corpus (O(#tables) rows)
+    and must stay distributed — AQE picks their join strategies there."""
+    spark = df.sparkSession
+    if spark.conf.get("spark.graft.forcedBroadcast", "true") == "false":
+        return df
+    return spark.createDataFrame(df.collect(), schema=df.schema)
+
+
 @dataclass
 class PipelineRun:
     spark: SparkSession
@@ -128,8 +141,6 @@ class PipelineRun:
         # single-task ordering window is bounded by #tables (not rows);
         # at true 100 TB table counts the map itself stays a few MB.
         from pyspark.sql import Window
-
-        from ..operators.annotation import _localize
 
         tid_map = _localize(
             prep.select("table_id")

@@ -13,7 +13,7 @@ goldens), and the raw fixture KG rows.
 
 Used by tests/test_oracle_parity.py to measure CEA/CTA/CPA P/R of the Spark
 engine against reference semantics (gate: exact equality), and by
-tests/test_annotation_kernel.py as the spec of the per-table kernel.
+tests/test_annotation_kernel.py as the spec of the annotation kernel.
 """
 
 from __future__ import annotations

@@ -1,12 +1,13 @@
-"""Spark-free test of the per-table annotation kernel
-(``annotation.annotate_table``, passes 1–4 as one pandas function).
+"""Spark-free test of the annotation kernel (``annotation.annotate_tables``,
+passes 1–4 as one pandas function over a batch of tables).
 
 Each fixture table is read with plain Python: the CSV grid, column classes
 from the cell typer, candidates from a fuzzy label match against the
 mini-KG, and the KG-side inputs from ``oracle.KG``. The same inputs are
-packed into the kernel's tagged-union group and handed to
+packed into the kernel's tagged-union frame and handed to
 ``oracle.TableOracle``; the final CEA tie sets, CTA types and CPA relations
-(with their scores) must be identical.
+(with their scores) must be identical. A table's output must also be the
+same whichever other tables share its kernel call.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from table_annotation_spark import fixtures
 from table_annotation_spark.functions import typing_fns as tf
 from table_annotation_spark.functions.similarity import ratio
-from table_annotation_spark.operators.annotation import annotate_table
+from table_annotation_spark.operators.annotation import annotate_tables
 from table_annotation_spark.operators.lookup import DATE_TYPES, NUM_NOUNIT, NUM_UNIT
 
 from oracle import KG, LIT_CLASSES, TableOracle
@@ -88,8 +89,8 @@ def _table(grid: list[list[str]], labels: dict, min_sim: float = MIN_SIM):
     return classes, cands
 
 
-def _packed(grid, classes, cands, kg: KG) -> pd.DataFrame:
-    """The kernel's input group, built from the oracle's KG view."""
+def _packed(grid, classes, cands, kg: KG, table_id="t") -> pd.DataFrame:
+    """One table's kernel input, built from the oracle's KG view."""
     helper = TableOracle(grid, classes, cands, kg)
     ecols = sorted(c for c, k in classes.items() if k == "entity")
     lcols = sorted(c for c, k in classes.items() if k in LIT_CLASSES)
@@ -138,12 +139,24 @@ def _packed(grid, classes, cands, kg: KG) -> pd.DataFrame:
     return pd.concat(
         [pd.DataFrame(rows).assign(kind=kind) for kind, rows in parts.items() if rows],
         ignore_index=True,
-    ).assign(table_id="t")
+    ).assign(table_id=table_id)
+
+
+_ALONE: dict[str, pd.DataFrame] = {}
+
+
+def _alone(grid, classes, cands, kg: KG) -> pd.DataFrame:
+    """The kernel's output for one table run alone, memoized so that the
+    batch test reuses the per-table tests' runs."""
+    key = repr((grid, sorted(classes.items()), sorted(cands.items())))
+    if key not in _ALONE:
+        _ALONE[key] = annotate_tables(_packed(grid, classes, cands, kg))
+    return _ALONE[key]
 
 
 def _run(grid, classes, cands):
     kg = KG(fixtures.mini_kg()[1])
-    out = annotate_table(_packed(grid, classes, cands, kg))
+    out = _alone(grid, classes, cands, kg)
     oracle = TableOracle(grid, classes, cands, kg)
     oracle.run()
     return out, oracle
@@ -282,8 +295,75 @@ def test_empty_candidate_set():
     classes, cands = _table(grid, _labels())
     assert not cands
     pdf = _packed(grid, classes, cands, KG(fixtures.mini_kg()[1]))
-    out = annotate_table(pdf)
+    out = annotate_tables(pdf)
     assert out.empty and list(out.columns)[0] == "table_id"
     oracle = TableOracle(grid, classes, cands, KG(fixtures.mini_kg()[1]))
     oracle.run()
     assert not oracle.cea and not oracle.cta and not oracle.cpa
+
+
+def _no_context_table():
+    """Films next to unrelated capitals: no CPA, so no cell records
+    context, and pass 4 must treat no cell as contextless."""
+    labels = {e: lbs[0] for e, lbs in _labels().items()}
+    grid = [[labels[f], labels[c]] for f, c in zip(sorted(FILMS), sorted(CAPITALS))]
+    return (grid, *_table(grid, _labels()))
+
+
+def _batch_cases() -> list[tuple]:
+    """(grid, classes, cands) of every fixture table at both candidate
+    floors, the seeded noisy tables and the edge cases: a single-column
+    table, entity-to-literal pairs only and an empty candidate set (both
+    fixture tables), and a table with no recorded context."""
+    cases = []
+    for path in sorted(TABLES):
+        grid = _grid(TABLES[path])
+        cases += [(grid, *_table(grid, _labels(), m)) for m in (MIN_SIM, NOISY_SIM)]
+    cases += [_random_table(seed) for seed in range(40)]
+    single = [[r[0]] for r in _grid(TABLES["data/capitals.csv"])]
+    cases += [(single, *_table(single, _labels())), _no_context_table()]
+    return cases
+
+
+def _canonical(out: pd.DataFrame) -> pd.DataFrame:
+    cols = [c for c in out.columns if c != "table_id"]
+    return out[cols].sort_values(cols, kind="mergesort").reset_index(drop=True)
+
+
+def test_no_context_table():
+    grid, classes, cands = _no_context_table()
+    out, oracle = _run(grid, classes, cands)
+    _assert_same(out, oracle)
+    assert cands and not oracle.contextless and not (out["kind"] == "cpa").any()
+
+
+def test_batch_invariance():
+    """Every table's output is identical, row for row and bit for bit,
+    whether it runs alone, in one batch with all the others, in a shuffled
+    batch or in random splits — no per-table flag leaks across tables."""
+    kg = KG(fixtures.mini_kg()[1])
+    cases = _batch_cases()
+    packed = [_packed(g, cl, ca, kg, table_id=i) for i, (g, cl, ca) in enumerate(cases)]
+    alone = [_canonical(_alone(g, cl, ca, kg)) for g, cl, ca in cases]
+    assert any(o.empty for o in alone)
+
+    rng = random.Random(0)
+    order = list(range(len(packed)))
+    shuffled = rng.sample(order, len(order))
+    batchings = [[order], [shuffled]]
+    for _ in range(2):
+        ids = rng.sample(order, len(order))
+        cuts = sorted(rng.sample(range(1, len(ids)), rng.randint(2, 6)))
+        batchings.append([ids[a:b] for a, b in zip([0, *cuts], [*cuts, len(ids)])])
+    for n, batches in enumerate(batchings):
+        for ids in batches:
+            out = annotate_tables(pd.concat([packed[i] for i in ids], ignore_index=True))
+            assert set(out["table_id"]) <= set(ids)
+            for i in ids:
+                pd.testing.assert_frame_equal(
+                    _canonical(out[out["table_id"] == i]), alone[i], check_exact=True,
+                )
+                if n == 0:  # the whole batch in order, also against the oracle
+                    oracle = TableOracle(*cases[i], kg)
+                    oracle.run()
+                    _assert_same(out[out["table_id"] == i], oracle)
