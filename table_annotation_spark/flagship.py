@@ -310,7 +310,7 @@ def run_flagship(
     edges = _sckpt(edges)
     # rebuild degrees ON TOP of the checkpointed edges (synth_kg derives it
     # from the raw union, so checkpointing that plan would recompute edges
-    # from scratch instead of reusing wave-0's materialized blocks)
+    # from scratch instead of reusing the edges checkpoint's blocks)
     degrees = _sckpt(kg_build.degrees(edges))
     src = synth_source(
         spark, sf_dir, max_tables=max_tables, include_orders=include_orders,

@@ -295,11 +295,11 @@ def parse_date(s: str) -> datetime | None:
             return datetime.strptime(s, fmt)
         except ValueError:
             continue
-    try:
-        from dateutil import parser as duparser  # available in this env
+    from dateutil import parser as duparser
 
+    try:
         return duparser.parse(s, fuzzy=False)
-    except Exception:
+    except (ValueError, OverflowError):  # ParserError is a ValueError
         return None
 
 

@@ -3,10 +3,11 @@ dataflow (the reference's annotation/table_annotation.py:51-112).
 
 Two halves:
 
-- ``build_inputs`` — the GLOBAL KG-side joins, as DataFrames in dependency
-  waves w0–w2: the per-table co-occurring entity pairs, the entity types and
-  pid sets, the literal-match kernel over distinct value tuples, and the
-  1/2-hop relations of every distinct co-occurring pair.
+- ``build_inputs`` — the GLOBAL KG-side joins, as lazily checkpointed
+  DataFrames that the kernel job computes: the per-table co-occurring entity
+  pairs, the entity types and pid sets, the literal-match kernel over
+  distinct value tuples, and the 1/2-hop relations of every distinct
+  co-occurring pair.
 - ``annotate_tables`` — everything per table, as ONE pandas kernel call per
   Spark partition (``repartition("table_id").mapInPandas``): context scoring
   (C6/C10, the row pair gates, context entries and relation sets) and passes
@@ -47,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import ckpt, job_group
 from . import annotation_context as ctx
 
 SEMANTIC_W = 1.0   # annotation_models.py:110
@@ -96,17 +98,15 @@ def build_inputs(
     edges: DataFrame,
     degrees: DataFrame,
     multihop: bool = True,
-    timings: dict | None = None,
 ) -> AnnotInputs:
     """Assemble the pass-invariant KG-side inputs (the scale-heavy global
-    joins). Per-table work is left to ``annotate_tables``."""
-    import time as _t
+    joins). Per-table work is left to ``annotate_tables``.
 
-    _marks: list[tuple[str, float]] = [("start", _t.time())]
-
-    def _mark(label: str) -> None:
-        _marks.append((label, _t.time()))
-
+    Each multi-consumer intermediate is a LAZY ``ckpt``: downstream plans see
+    a LogicalRDD leaf, so analyzer cost stays bounded instead of accreting
+    across the input DAG (a lazy ``persist()`` re-analyzes the full tree), and
+    the frame is computed once, inside the first job that reads it, then
+    reused by every other consumer."""
     # ONE upfront exchange on table_id: the per-table pair join below
     # clusters on table_id and reuses it
     cand = cand.select(
@@ -114,21 +114,10 @@ def build_inputs(
         F.col("score").alias("sim"),
     ).repartition("table_id")
 
-    # Construction is INTERLEAVED with wave forcing: Dataset.localCheckpoint
-    # plans eagerly even with eager=False, and physical planning evaluates
-    # any broadcast child on the spot — so a frame's plan must only be built
-    # once every heavy frame its broadcasts read is already materialized,
-    # else the broadcast evaluation recomputes that ancestor serially at
-    # plan-construction time. Wave membership honors the force_parallel
-    # independence contract.
-
-    # wave 0: the shared ancestors. edges arrives as a LAZY checkpoint from
-    # the pipeline — nothing has materialized it yet, so its readers can't
-    # go in the same wave; the per-table co-occurring pair set (C6 domain)
-    # reads only the eager candidates checkpoint, so it rides along. It seeds
-    # the global pair_rel and picks each table's slice of pair_rel for the
-    # kernel. Lookup emits candidates only in entity-class columns, so every
-    # ordered column pair of a row is an entity-entity pair.
+    # the per-table co-occurring pair set (C6 domain): it seeds the global
+    # pair_rel and picks each table's slice of pair_rel for the kernel.
+    # Lookup emits candidates only in entity-class columns, so every ordered
+    # column pair of a row is an entity-entity pair.
     h = cand.select(
         "table_id", "row_idx", F.col("col_idx").alias("head_col"),
         F.col("entity").alias("head_ent"),
@@ -137,25 +126,18 @@ def build_inputs(
         "table_id", "row_idx", F.col("col_idx").alias("tail_col"),
         F.col("entity").alias("tail_ent"),
     )
-    table_pairs = _mat(
+    table_pairs = ckpt(
         h.join(t, ["table_id", "row_idx"])
         .where(F.col("head_col") < F.col("tail_col"))
         .where(F.col("head_ent") != F.col("tail_ent"))
         .select("table_id", "head_ent", "tail_ent")
         .distinct()
     )
-    _force_wave("w0_edges_pairs", [edges, table_pairs], timings)
-    _mark("w0")
 
-    # wave 1: KG-side inputs — all read the now-materialized edges (degrees
-    # is DERIVED from the checkpointed edges; j_lit's unit-symbol broadcast
-    # scans edges at plan time, after wave 0)
-    j_lit = _mat(ctx.literal_match_join(cand, body, col_classes, edges))
+    j_lit = ckpt(ctx.literal_match_join(cand, body, col_classes, edges))
     ents = cand.select("entity").distinct()
-    types = _mat(ctx.entity_types(ents, edges))
-    ent_pids = _mat(ctx.entity_pids(ents, edges))
-    _force_wave("w1_kg_side", [degrees, j_lit, types, ent_pids], timings)
-    _mark("w1")
+    types = ckpt(ctx.entity_types(ents, edges))
+    ent_pids = ckpt(ctx.entity_pids(ents, edges))
 
     # supertypes and type neighbours, once over the candidate type
     # vocabulary; a neighbour only ever counts when it is a level-1/2 type of
@@ -168,22 +150,15 @@ def build_inputs(
         "neighbor", "left_semi",
     )
 
-    # wave 2: pair relations over the distinct co-occurring pair set (its
-    # degree-damping broadcast reads wave-1's degrees) ∥ the C7 match kernel
-    # over wave-1's distinct literal value tuples
-    pair_rel = _mat(
+    # pair relations over the distinct co-occurring pair set, and the C7
+    # match kernel over the distinct literal value tuples
+    pair_rel = ckpt(
         ctx.pair_relations_for_pairs(
             table_pairs.select("head_ent", "tail_ent").distinct(),
             edges, degrees, multihop,
         )
     )
-    lit_keys = _mat(ctx.literal_match_keys(j_lit))
-    _force_wave("w2_pair_rel", [pair_rel, lit_keys], timings)
-    _mark("w2")
-
-    if timings is not None:
-        for (lbl, tm), (_, prev) in zip(_marks[1:], _marks[:-1]):
-            timings[f"bi_seg_{lbl}"] = round(tm - prev, 2)
+    lit_keys = ckpt(ctx.literal_match_keys(j_lit))
 
     return AnnotInputs(
         cand=cand, col_classes=col_classes,
@@ -773,167 +748,6 @@ class AnnotationResult:
     inputs: AnnotInputs
 
 
-def _mat(df: DataFrame) -> DataFrame:
-    """Mark a multi-consumer intermediate: LAZY localCheckpoint.
-
-    Two properties, both needed:
-    - **Logical-plan truncation** — downstream DataFrames see a LogicalRDD
-      leaf, so analyzer/optimizer cost stays bounded instead of accreting
-      across the input DAG (a lazy ``persist()`` does NOT give this: cache
-      substitution happens after analysis, so every withColumn re-analyzes
-      the full tree — measured minutes of CheckAnalysis time).
-    - **No blocking job per intermediate** — eager=False defers execution:
-      the shared RDD is computed ONCE inside the first job that needs it
-      (the RDD DAG dedupes stages), checkpointed at that point, and reused
-      by later jobs.
-
-    Storage level: serialized memory+disk via session.ckpt — see its
-    docstring (measured 10% off the replicate-4 flagship vs deserialized
-    blocks on this memory-path-bound host)."""
-    from ..session import ckpt
-
-    return ckpt(df, eager=False)
-
-
-def _force_wave(name: str, frames: list, timings: dict | None) -> None:
-    """force_parallel + per-wave timing (build_inputs instrumentation)."""
-    import time as _t
-
-    t0 = _t.time()
-    force_parallel(*frames)
-    if timings is not None:
-        timings[f"bi_{name}"] = round(_t.time() - t0, 2)
-
-
-def force_parallel(*dfs: DataFrame | None) -> None:
-    """Materialize a set of INDEPENDENT lazy localCheckpoint frames in ONE
-    parallel union-of-counts job.
-
-    Why: a lazily-checkpointed frame executes the first time an action
-    touches it — and with the forced-broadcast hints on the small dims, that
-    first touch used to happen inside *broadcast evaluation*, where Spark
-    collects each broadcast child serially on a driver thread. One
-    union-of-counts job runs every frame's stages concurrently at full
-    cluster parallelism and checkpoints them at job end; later broadcast
-    evaluations then collect from already-materialized RDDs.
-
-    INDEPENDENCE CONTRACT: frames in one call must not share UNMATERIALIZED
-    ancestors. Concurrent stages of one job race to compute uncached
-    partitions of a shared parent (the block-cache dedupe is best-effort,
-    not a barrier), so passing a frame together with something derived from
-    it duplicates the whole parent computation — measured 937 s vs 731 s on
-    the replicate-4 flagship when the input frames were forced in one flat
-    call. Dependent frames go in SEPARATE calls, in dependency order
-    (``force_waves``). ``None`` entries are skipped.
-
-    The contract is ENFORCED, not just documented: before submitting the
-    union-of-counts job, ``_wave_violations`` walks each member's RDD
-    lineage (driver-side, no job) and flags (a) a member whose lineage
-    contains another member and (b) a checkpoint-marked-but-unmaterialized
-    ancestor shared by ≥2 members. Violations warn by default and raise
-    under ``SPARK_GRAFT_WAVE_ASSERT=1`` (set in tests), so a future edit
-    that moves a frame into its parent's wave fails tests instead of
-    silently recomputing the parent."""
-    import os
-    import warnings
-
-    frames = [d for d in dfs if d is not None]
-    if not frames:
-        return
-    if frames[0].sparkSession.conf.get("spark.graft.forceMaterialize", "true") == "false":
-        return  # fixture scale: per-job latency outweighs the wave win
-    bad = _wave_violations(frames)
-    if bad:
-        msg = "force_parallel independence contract violated: " + "; ".join(bad)
-        if os.environ.get("SPARK_GRAFT_WAVE_ASSERT") == "1":
-            raise AssertionError(msg)
-        warnings.warn(msg, stacklevel=2)
-    probe = frames[0].agg(F.count(F.lit(1)).alias("n"))
-    for d in frames[1:]:
-        probe = probe.unionAll(d.agg(F.count(F.lit(1)).alias("n")))
-    probe.collect()
-
-
-def _wave_violations(frames, max_nodes: int = 5000) -> list[str]:
-    """Driver-side RDD-lineage audit of one force_parallel wave.
-
-    Every engine intermediate reaches a wave as a LAZY localCheckpoint, so
-    its analyzed plan is a LogicalRDD leaf whose RDD already exists (Spark
-    plans the checkpoint RDD at ``Dataset.checkpoint`` time even when
-    eager=False) but whose blocks do not. Two failure shapes:
-
-    - **member-in-member**: frame A's checkpoint RDD lineage passes through
-      frame B's checkpoint RDD — A derives from B, so running them in one
-      job races A's stages against B's own materialization.
-    - **shared unmaterialized checkpoint ancestor**: two members both read
-      an RDD that is checkpoint-MARKED (``checkpointData.isDefined``) but
-      not yet computed — concurrent stages race to compute it twice (the
-      block-cache dedupe is best-effort, not a barrier).
-
-    Plain shared subtrees (exchanges, parquet scans) are fine — exchange
-    reuse dedupes them inside the one probe plan — and ancestors whose
-    checkpoint has completed are fine, so neither is flagged. Pure RDD-DAG
-    walk: no planning, no AQE stage submission, no job."""
-    rdds = []
-    for d in frames:
-        try:
-            plan = d._jdf.queryExecution().analyzed()
-            rdds.append(plan.rdd() if plan.nodeName() == "LogicalRDD" else None)
-        except Exception:
-            rdds.append(None)
-    member_ids = {r.id(): i for i, r in enumerate(rdds) if r is not None}
-    problems: list[str] = []
-    # ancestor checkpoint-marked-unmaterialized RDD id -> set of member idx
-    shared: dict[int, set[int]] = {}
-    for i, root in enumerate(rdds):
-        if root is None:
-            continue
-        stack, seen = [root], set()
-        while stack and len(seen) < max_nodes:
-            cur = stack.pop()
-            try:
-                cid = cur.id()
-            except Exception:
-                continue
-            if cid in seen:
-                continue
-            seen.add(cid)
-            if cid != root.id():
-                j = member_ids.get(cid)
-                if j is not None and j != i:
-                    problems.append(
-                        f"wave member #{i} depends on wave member #{j} "
-                        f"(rdd {root.id()} -> rdd {cid})"
-                    )
-                    continue  # B materializes itself; no need to walk past it
-                try:
-                    if cur.checkpointData().isDefined() and not cur.isCheckpointed():
-                        shared.setdefault(cid, set()).add(i)
-                except Exception:
-                    pass
-            try:
-                deps = cur.dependencies().iterator()
-                while deps.hasNext():
-                    stack.append(deps.next().rdd())
-            except Exception:
-                continue
-    for cid, members in shared.items():
-        if len(members) > 1:
-            problems.append(
-                f"members {sorted(members)} share unmaterialized checkpoint "
-                f"ancestor rdd {cid} — materialize it in an earlier wave"
-            )
-    return problems
-
-
-def force_waves(*waves) -> None:
-    """Sequential dependency waves of force_parallel: each wave's frames may
-    depend on anything in EARLIER waves (already cached) but must be mutually
-    independent within the wave."""
-    for wave in waves:
-        force_parallel(*wave)
-
-
 def annotate(
     cand: DataFrame,
     body: DataFrame,
@@ -948,16 +762,12 @@ def annotate(
     call per partition."""
     import time as _t
 
-    from ..session import ckpt, job_group
-
     timings = timings if timings is not None else {}
     spark = cand.sparkSession
 
     t0 = _t.time()
     with job_group(spark, "annot_build_inputs"):
-        inp = build_inputs(
-            cand, body, col_classes, edges, degrees, multihop, timings=timings
-        )
+        inp = build_inputs(cand, body, col_classes, edges, degrees, multihop)
     timings["build_inputs"] = round(_t.time() - t0, 2)
 
     t0 = _t.time()

@@ -58,23 +58,6 @@ def literal_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def cooccurring_pairs(cand: DataFrame, ecol_pairs: DataFrame) -> DataFrame:
-    """DISTINCT (head_ent, tail_ent) pairs that co-occur on some row of some
-    ordered entity-column pair — the global dedupe that replaces
-    cached_cpa_candidates (annotation_models.py:462-470). head≠tail."""
-    h = cand.select("table_id", "row_idx", F.col("col_idx").alias("head_col"),
-                    F.col("entity").alias("head_ent"))
-    t = cand.select("table_id", "row_idx", F.col("col_idx").alias("tail_col"),
-                    F.col("entity").alias("tail_ent"))
-    return (
-        h.join(t, ["table_id", "row_idx"])
-        .join(ecol_pairs, ["table_id", "head_col", "tail_col"])
-        .where(F.col("head_ent") != F.col("tail_ent"))
-        .select("head_ent", "tail_ent")
-        .distinct()
-    )
-
-
 def direct_relations(pairs: DataFrame, edges: DataFrame) -> DataFrame:
     """C4: (head_ent, tail_ent, rel, prox=1.0) for directly connected pairs
     (annotation_models.py:480-488)."""
@@ -135,22 +118,6 @@ def twohop_relations(
         j.select("head_ent", "tail_ent", rel_id.alias("rel"), prox.alias("prox"))
         .groupBy("head_ent", "tail_ent", "rel")
         .agg(F.min("prox").alias("prox"))
-    )
-
-
-def pair_relations(
-    cand: DataFrame,
-    ecol_pairs: DataFrame,
-    edges: DataFrame,
-    degrees: DataFrame,
-    multihop: bool = True,
-) -> DataFrame:
-    """All relations per co-occurring candidate pair — see
-    ``pair_relations_for_pairs`` (this wrapper derives the pair set itself;
-    build_inputs passes a pair set projected off its materialized row-level
-    pair frame instead, so the row self-join runs once, not twice)."""
-    return pair_relations_for_pairs(
-        cooccurring_pairs(cand, ecol_pairs), edges, degrees, multihop
     )
 
 
@@ -335,22 +302,6 @@ def literal_matches_from(j: DataFrame, matched_keys: DataFrame) -> DataFrame:
         "table_id", "row_idx", "col_idx", "entity", "lit_col", "lit_class",
         "pid", "match_score", "lit_cell",
     )
-
-
-def literal_matches(
-    cand: DataFrame,
-    body: DataFrame,
-    col_classes: DataFrame,
-    edges: DataFrame,
-) -> DataFrame:
-    """C7 one-shot composition (tests / non-wave callers): per (table, row,
-    entity_col, literal_col, entity) matched pids and scores. Literal cols
-    LEFT of the entity column are skipped (annotation_models.py:579-580).
-
-    Returns (table_id, row_idx, col_idx, entity, lit_col, lit_class, pid,
-    match_score, lit_cell)."""
-    j = literal_match_join(cand, body, col_classes, edges)
-    return literal_matches_from(j, literal_match_keys(j))
 
 
 # ------------------------------------------------------------------ types

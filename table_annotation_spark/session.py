@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-
 # only put shuffle files on tmpfs when it currently has this much headroom —
 # a RAM-backed dir that fills mid-shuffle fails the job with ENOSPC
 _TMPFS_MIN_FREE_BYTES = 16 << 30
@@ -50,8 +48,8 @@ def tune_for_input_size(spark: SparkSession, approx_rows: int) -> None:
 
     SPARK_GRAFT_FORCE_LARGE=1 pins the ≥1M-row posture regardless of the
     estimate — the oracle/equivalence tests use it to exercise the
-    large-corpus configuration (AQE on, forced broadcast off, wave
-    materialization on) at small input sizes."""
+    large-corpus configuration (AQE on, forced broadcast off) at small input
+    sizes."""
     if os.environ.get("SPARK_GRAFT_FORCE_LARGE") == "1":
         approx_rows = max(approx_rows, 1_000_000)
     if approx_rows < 1_000_000:
@@ -64,13 +62,8 @@ def tune_for_input_size(spark: SparkSession, approx_rows: int) -> None:
         # "16 beats 64" finding belonged to the serialized-JOB + deser-block
         # regime and no longer holds). Tiny fixture inputs stay at ≤16 so
         # per-task overhead can't dominate kB-scale stages.
-        # SPARK_GRAFT_SHUFFLE_OVERRIDE pins an explicit value for scaling
-        # experiments.
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        override = os.environ.get("SPARK_GRAFT_SHUFFLE_OVERRIDE")
-        if override:
-            parts = int(override)
-        elif approx_rows < 50_000:
+        if approx_rows < 50_000:
             parts = min(16, max(4, approx_rows // 2000))
         else:
             # Partition count derived from INPUT SIZE, capped by core count —
@@ -92,53 +85,30 @@ def tune_for_input_size(spark: SparkSession, approx_rows: int) -> None:
                 max(8, approx_rows // 12_000),
             )
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        # upfront wave-materialization of the annotation input frames only
-        # pays above fixture scale — at kB inputs the extra jobs ARE the
-        # cost (per-job latency dominates)
-        spark.conf.set(
-            "spark.graft.forceMaterialize",
-            "false" if approx_rows < 50_000 else "true",
-        )
         # small corpus: the per-table / per-column-pair dims really are tiny,
         # and lazily-checkpointed frames carry no stats, so the explicit
         # broadcast hints (annotation.bcast) are both safe and necessary
         spark.conf.set("spark.graft.forcedBroadcast", "true")
     else:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-        override = os.environ.get("SPARK_GRAFT_SHUFFLE_OVERRIDE")
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", override)
         # large corpus: frames like tbl (row per table) and cpa_k (row per
         # table×column-pair) grow with the corpus — a forced broadcast hint
         # would bypass the 64 MB autoBroadcast safety and collect O(#tables)
         # rows onto the driver. Let AQE pick the join strategy from runtime
         # sizes instead.
         spark.conf.set("spark.graft.forcedBroadcast", "false")
-        # wave materialization is exactly the ≥1M-row posture it was built
-        # for; set it explicitly — the conf is sticky on a reused session,
-        # so inheriting a prior sub-50k run's "false" would silently disable
-        # it at the scale that needs it
-        spark.conf.set("spark.graft.forceMaterialize", "true")
 
 
 def ckpt(df, eager: bool = False):
-    """localCheckpoint with the engine's storage policy: SERIALIZED
-    memory+disk blocks by default. Checkpointed blocks are unevictable for
-    the run and this host's scaling ceiling is its memory path (60-85%
-    kernel time during shuffle phases), so trading a little decode CPU for
-    3-5× smaller blocks measured 10% off the replicate-4 flagship.
-    SPARK_GRAFT_MAT_STORAGE=deser restores deserialized blocks (the classic
-    choice when RAM is ample). NB Spark 3.4+/4.x naming: MEMORY_AND_DISK is
-    the serialized variant, MEMORY_AND_DISK_DESER the deserialized
-    default."""
+    """localCheckpoint with SERIALIZED memory+disk blocks. Checkpointed
+    blocks are unevictable for the run and the scaling ceiling of a
+    memory-path-bound host is its memory bandwidth, so trading a little
+    decode CPU for 3-5× smaller blocks measured 10% off the replicate-4
+    flagship. NB Spark 3.4+/4.x naming: MEMORY_AND_DISK is the serialized
+    variant, MEMORY_AND_DISK_DESER the deserialized default."""
     from pyspark.storagelevel import StorageLevel
 
-    level = (
-        StorageLevel.MEMORY_AND_DISK_DESER
-        if os.environ.get("SPARK_GRAFT_MAT_STORAGE") == "deser"
-        else StorageLevel.MEMORY_AND_DISK
-    )
-    return df.localCheckpoint(eager=eager, storageLevel=level)
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def free(*dfs) -> int:
@@ -242,7 +212,7 @@ def get_spark(
         .master(master)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or 32),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

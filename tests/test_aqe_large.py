@@ -1,11 +1,11 @@
 """The ≥1M-row ("large corpus") configuration under a correctness gate.
 
-session.tune_for_input_size flips three knobs at 1M estimated input rows:
-AQE on, forced broadcast hints OFF (bcast() becomes a no-op and AQE picks
-join strategies from runtime sizes), wave materialization ON. Until round 4
-that branch had never executed the flagship — the exact posture a 100 TB run
-would use. SPARK_GRAFT_FORCE_LARGE=1 pins the branch at any input size, so
-this test runs the COMPLETE pipeline (extract → preprocess → lookup → 4-pass
+session.tune_for_input_size flips two knobs at 1M estimated input rows:
+AQE on, and forced broadcast hints OFF (bcast() becomes a no-op and AQE picks
+join strategies from runtime sizes). Until round 4 that branch had never
+executed the flagship — the exact posture a 100 TB run would use.
+SPARK_GRAFT_FORCE_LARGE=1 pins the branch at any input size, so this test
+runs the COMPLETE pipeline (extract → preprocess → lookup → 4-pass
 annotation → canonicalize) under the large-corpus config at sf0.001 and
 asserts the emitted triples equal the closed-form expectation the synthetic
 tables encode (the same facts FLAGSHIP_TRIPLES_SQL / FLAGSHIP_LITERALS_SQL
@@ -32,7 +32,6 @@ def large_corpus_conf(spark, monkeypatch):
             "spark.sql.adaptive.enabled",
             "spark.sql.shuffle.partitions",
             "spark.graft.forcedBroadcast",
-            "spark.graft.forceMaterialize",
         )
     }
     yield
@@ -55,7 +54,6 @@ class TestLargeCorpusConfig:
         # the branch actually engaged
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
         assert spark.conf.get("spark.graft.forcedBroadcast") == "false"
-        assert spark.conf.get("spark.graft.forceMaterialize") == "true"
 
         cust = spark.read.parquet(f"{SF}/customer.parquet").select(
             "c_custkey", "c_nationkey"

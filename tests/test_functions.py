@@ -107,6 +107,11 @@ class TestTyping:
     def test_dates_parse(self):
         assert tf.date_similarity("1994-10-14", "14 October 1994")
         assert tf.get_year("1994-10-14") == "1994"
+        # dateutil's two failure modes: ParserError (a ValueError) on text,
+        # OverflowError on an out-of-range integer
+        for bad in ("not a date", "99999999999999999999"):
+            assert tf.parse_date(bad) is None
+            assert tf.date_similarity(bad, "1994-10-14") is False
 
     def test_normalize_label(self):
         assert tf.normalize_label('  "Pulp   Fiction" ') == "pulp fiction"

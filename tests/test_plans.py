@@ -6,7 +6,6 @@ no cartesian products in the blocking join.
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from table_annotation_spark.operators import relational as rel
@@ -136,108 +135,6 @@ class TestCCJobBudget:
         # per-check join+count pattern (which added a multi-stage job per
         # probe on top of this budget)
         assert 7 <= len(jobs) <= 11, f"unexpected CC job count: {len(jobs)}"
-
-
-class TestWaveContract:
-    """force_parallel's independence contract is enforced by an RDD-lineage
-    audit (annotation._wave_violations): a wave member derived from another
-    member, or two members sharing a checkpoint-marked-but-unmaterialized
-    ancestor, fails under SPARK_GRAFT_WAVE_ASSERT=1 instead of silently
-    recomputing the shared parent (the measured 937-vs-731 s regression
-    class)."""
-
-    def _forced(self, spark, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_WAVE_ASSERT", "1")
-        old = spark.conf.get("spark.graft.forceMaterialize", "true")
-        spark.conf.set("spark.graft.forceMaterialize", "true")
-        return old
-
-    def test_dependent_member_in_same_wave_raises(self, spark, monkeypatch):
-        from table_annotation_spark.operators.annotation import force_parallel
-        from table_annotation_spark.session import ckpt
-
-        old = self._forced(spark, monkeypatch)
-        try:
-            parent = ckpt(
-                spark.range(1000).withColumn("v", F.col("id") * 2), eager=False
-            )
-            child = ckpt(parent.groupBy((F.col("v") % 7).alias("k")).count(),
-                         eager=False)
-            with pytest.raises(AssertionError, match="depends on wave member"):
-                force_parallel(parent, child)
-        finally:
-            spark.conf.set("spark.graft.forceMaterialize", old)
-
-    def test_shared_unmaterialized_ancestor_raises(self, spark, monkeypatch):
-        from table_annotation_spark.operators.annotation import force_parallel
-        from table_annotation_spark.session import ckpt
-
-        old = self._forced(spark, monkeypatch)
-        try:
-            shared = ckpt(
-                spark.range(1000).withColumn("v", F.col("id") * 3), eager=False
-            )
-            a = ckpt(shared.where("v % 2 = 0"), eager=False)
-            b = ckpt(shared.where("v % 2 = 1"), eager=False)
-            with pytest.raises(AssertionError, match="share unmaterialized"):
-                force_parallel(a, b)
-        finally:
-            spark.conf.set("spark.graft.forceMaterialize", old)
-
-    def test_materialized_ancestor_is_allowed(self, spark, monkeypatch):
-        from table_annotation_spark.operators.annotation import (
-            force_parallel,
-            force_waves,
-        )
-        from table_annotation_spark.session import ckpt
-
-        old = self._forced(spark, monkeypatch)
-        try:
-            shared = ckpt(
-                spark.range(1000).withColumn("v", F.col("id") * 5), eager=False
-            )
-            a = ckpt(shared.where("v % 2 = 0"), eager=False)
-            b = ckpt(shared.where("v % 2 = 1"), eager=False)
-            # materializing the ancestor in an earlier wave clears the flag
-            force_waves([shared], [a, b])
-        finally:
-            spark.conf.set("spark.graft.forceMaterialize", old)
-
-    def test_build_inputs_waves_honor_contract(self, spark, monkeypatch,
-                                               src_df, kg):
-        """Run the REAL build_inputs waves with materialization forced and
-        the lineage assert armed, over the same lazy-checkpoint input shapes
-        the flagship hands in (lazy edges, degrees derived from the
-        checkpointed edges): the engine's own wave membership must be clean,
-        so a future membership edit fails here."""
-        from table_annotation_spark.operators import lookup as lk
-        from table_annotation_spark.operators.annotation import build_inputs
-        from table_annotation_spark.operators.preprocessing import (
-            body_cells,
-            column_meta,
-            preprocess_cells,
-        )
-        from table_annotation_spark.session import ckpt
-        from table_annotation_spark.sources import kg_build
-        from table_annotation_spark.sources.embedded_tables import extract_cells
-
-        labels, edges = kg
-        edges_c = ckpt(edges, eager=False)
-        degrees_c = ckpt(kg_build.degrees(edges_c), eager=False)
-        prep = preprocess_cells(extract_cells(src_df)).localCheckpoint(eager=True)
-        body = body_cells(prep).localCheckpoint(eager=True)
-        classes = lk.classify_columns(
-            column_meta(prep), body
-        ).localCheckpoint(eager=True)
-        cand, _ = lk.lookup(body, classes, labels, lk.token_idf(labels))
-        cand = cand.localCheckpoint(eager=True)
-
-        old = self._forced(spark, monkeypatch)
-        try:
-            inp = build_inputs(cand, body, classes, edges_c, degrees_c)
-            assert inp.table_pairs is not None
-        finally:
-            spark.conf.set("spark.graft.forceMaterialize", old)
 
 
 class TestRollupPivotShapes:
