@@ -72,11 +72,11 @@ def load_spacy_ner(model: str = "en_core_web_sm"):
     importable, else None. Mirrors spacy_ner_parser.py:30-49: batch via
     nlp.pipe, 1.4·covered ≥ len coverage gate, concept labels suppress
     CARDINAL/ORDINAL/DATE."""
-    try:  # pragma: no cover - model not present in this container
+    try:
         import spacy
 
         nlp = spacy.load(model, disable=["parser", "textcat"])
-    except Exception:
+    except (ImportError, OSError):  # spaCy absent / model not installed
         return None
 
     concepty = {

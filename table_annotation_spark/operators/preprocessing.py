@@ -1,20 +1,21 @@
-"""Stage 2 — preprocess: cell grid → cleaned/oriented cells + table metadata.
+"""Stage 2 — preprocess: source documents → cleaned, oriented cells with
+their table and column metadata (PREP_SCHEMA), in ONE Python pass per
+document.
 
-Plan shape (scale-first):
+``preprocess(src)`` is a single ``mapInPandas`` over the source rows. Each
+document is parsed where it lands (``embedded_tables.document_tables``) and
+each of its grids goes straight through the reference's per-table cascade,
+``table_analysis.analyze_table`` (table_preprocessing.py:29-99): clean →
+type the decision sample's distinct cells → orientation → transpose if
+VERTICAL → column typing → key column → header. The grid never leaves the
+worker that parsed it, so the stage has no shuffle, no join, no distinct
+and no internal checkpoint; typing is bounded by the ≤400-row decision
+sample of each table. The output is denormalized — the table and column
+metadata repeat on every cell (RLE-friendly in parquet) — and built per
+table by list repetition.
 
-1. ``fix_encoding``    — dedupe-compute-rejoin: DISTINCT cell strings through
-   an Arrow pandas UDF (mojibake repair), joined back. The distinct set is
-   orders of magnitude smaller than the cell set (reference analogue
-   parse_table, prp utils.py:221-224 — but GLOBAL across tables, not per-table).
-2. ``type_cells``      — same pattern for primitive typing + datatype.
-3. ``preprocess_cells`` — ONE shuffle on table_id, then per-table decision
-   trees (orientation/header/key) in applyInPandas; emits a denormalized
-   cells+meta DataFrame in a single pass (meta repeats per cell — RLE-friendly
-   in parquet, avoids a second shuffle/join to reattach it).
-
-At 100 TB: stage 1-2 are shuffle-free except the distinct() (partial agg
-map-side); stage 3 is the only full shuffle and it is keyed by table_id which
-is high-cardinality and well distributed (sha256).
+Limit: one document's tables must fit in one Python worker, the same bound
+as extraction.
 """
 
 from __future__ import annotations
@@ -33,8 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.typing_fns import get_string_type, type_cell
-from .table_analysis import analyze_table, is_concept, recover_encoding
+from ..sources.embedded_tables import SOURCE_COLS, document_tables, source_rows
+from .table_analysis import TableAnalysis, analyze_table
 
 PREP_SCHEMA = StructType(
     [
@@ -60,460 +61,64 @@ PREP_SCHEMA = StructType(
 )
 
 
-# ---------------------------------------------------------------- stage 2a
-def _fix_encoding_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for s in it:
-        yield s.map(lambda c: recover_encoding(c).strip() if c is not None else "")
+_NO_TYPE = [{"type": None, "score": None}]
 
 
-def fix_encoding(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
-    """P2 over distinct cells, joined back (broadcast when small; Spark AQE
-    converts automatically since the distinct side is pre-aggregated)."""
-    udf = F.pandas_udf(_fix_encoding_batches, StringType())
-    distinct = cells.select(F.col(cell_col).alias("_raw")).distinct()
-    fixed = distinct.withColumn("_fixed", udf(F.col("_raw")))
-    return (
-        cells.join(fixed, cells[cell_col] == fixed["_raw"], "left")
-        .drop(cell_col, "_raw")
-        .withColumnRenamed("_fixed", cell_col)
-    )
+def _score(x: float | None) -> float | None:
+    return float(x) if x is not None else None
 
 
-def _typing_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for s in it:
-        yield s.map(lambda c: type_cell(c) if c is not None else "")
-
-
-def _datatype_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-    # input: struct<cell, typing>
-    for df in it:
-        yield pd.Series(
-            [
-                ""
-                if t == ""
-                else (get_string_type(c.strip()) if is_concept(t) else t)
-                for c, t in zip(df["cell"], df["typing"])
-            ]
-        )
-
-
-def type_cells(cells: DataFrame, cell_col: str = "cell", ner=None) -> DataFrame:
-    """P7/P8 relationally: DISTINCT cells → typing/datatype UDFs → join back.
-    Adds ``cell_typing`` and ``cell_datatype`` columns. ``ner`` plugs the F10
-    slot (functions/ner.py) into the cascade; None keeps the regex/unit/phone
-    cascade alone."""
-    if ner is not None:
-        from ..functions.ner import typing_with_ner_batches
-
-        typing_udf = F.pandas_udf(typing_with_ner_batches(ner), StringType())
-    else:
-        typing_udf = F.pandas_udf(_typing_batches, StringType())
-    dt_udf = F.pandas_udf(_datatype_batches, StringType())
-    distinct = cells.select(F.col(cell_col).alias("_cell")).distinct()
-    typed = distinct.withColumn("_typing", typing_udf(F.col("_cell"))).withColumn(
-        "_datatype",
-        dt_udf(F.struct(F.col("_cell").alias("cell"), F.col("_typing").alias("typing"))),
-    )
-    return (
-        cells.join(typed, cells[cell_col] == typed["_cell"], "left")
-        .drop("_cell")
-        .withColumnRenamed("_typing", "cell_typing")
-        .withColumnRenamed("_datatype", "cell_datatype")
-    )
-
-
-# ---------------------------------------------------------------- stage 2b
-def _prep_one_table(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(["row_idx", "col_idx"])
-    tid = pdf["table_id"].iloc[0]
-    sha = pdf["content_sha256"].iloc[0] if "content_sha256" in pdf else None
-    # rebuild the grid (cells already encoding-fixed)
-    n_r = int(pdf["row_idx"].max()) + 1
-    n_c = int(pdf["col_idx"].max()) + 1
-    grid = [[""] * n_c for _ in range(n_r)]
-    typing_map: dict[str, set[str]] = {}
-    datatype_map: dict[str, set[str]] = {}
-    for r, c, cell, ct, cdt in zip(
-        pdf["row_idx"], pdf["col_idx"], pdf["cell"],
-        pdf["cell_typing"], pdf["cell_datatype"],
-    ):
-        cell = cell or ""
-        grid[int(r)][int(c)] = cell
-        if ct:
-            typing_map[cell] = {ct}
-        if cdt:
-            datatype_map[cell] = {cdt}
-    ta = analyze_table(grid, typing=typing_map, datatype=datatype_map, table_id=tid)
-    cols = {f.name: [] for f in PREP_SCHEMA.fields}
-    if ta is None:
-        return pd.DataFrame(cols)
+def _emit_table(
+    out: dict[str, list], tid: str, sha: str, ta: TableAnalysis
+) -> None:
+    """Append one analyzed table to the column lists, cell-major in
+    (row_idx, col_idx) order: per-table scalars repeat per cell, per-column
+    values repeat per row."""
     g = ta.grid
-    for ri, row in enumerate(g):
-        for ci, cell in enumerate(row):
-            top_t = ta.col_typing.get(ci, [{"type": None, "score": None}])[0]
-            top_d = ta.col_datatype.get(ci, [{"type": None, "score": None}])[0]
-            cols["table_id"].append(tid)
-            cols["content_sha256"].append(sha)
-            cols["row_idx"].append(ri)
-            cols["col_idx"].append(ci)
-            cols["cell"].append(cell)
-            cols["is_header"].append(bool(ta.has_header and ri == 0))
-            cols["orientation"].append(ta.orientation)
-            cols["orientation_score"].append(float(ta.orientation_score))
-            cols["has_header"].append(bool(ta.has_header))
-            cols["header_score"].append(float(ta.header_score))
-            cols["key_col"].append(ta.key_col)
-            cols["key_score"].append(float(ta.key_score))
-            cols["col_type"].append(top_t["type"])
-            cols["col_type_score"].append(
-                float(top_t["score"]) if top_t["score"] is not None else None
-            )
-            cols["col_datatype"].append(top_d["type"])
-            cols["col_datatype_score"].append(
-                float(top_d["score"]) if top_d["score"] is not None else None
-            )
-            cols["n_rows"].append(len(g))
-            cols["n_cols"].append(len(g[0]) if g else 0)
-    return pd.DataFrame(cols)
-
-
-META_SCHEMA = StructType(
-    [
-        StructField("table_id", StringType(), False),
-        StructField("content_sha256", StringType(), True),
-        StructField("orientation", StringType(), False),
-        StructField("orientation_score", DoubleType(), False),
-        StructField("has_header", BooleanType(), False),
-        StructField("header_score", DoubleType(), False),
-        StructField("key_col", IntegerType(), True),
-        StructField("key_score", DoubleType(), False),
-        StructField("col_idx", IntegerType(), False),
-        StructField("col_type", StringType(), True),
-        StructField("col_type_score", DoubleType(), True),
-        StructField("col_datatype", StringType(), True),
-        StructField("col_datatype_score", DoubleType(), True),
-    ]
-)
-
-
-def _table_meta_from_sample(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Decision pass over ONE table's ≤400-row sample → per-column metadata.
-
-    The grid handed in is already cleaned (P1-P4 run relationally upstream)
-    and ordered by ``sample_rank`` — head rows first, then the lowest-hash
-    rest, exactly the dgrid ``decision_sample`` builds
-    (table_preprocessing.py:50-55). Runs the same decision cascade as
-    ``analyze_table`` (table_preprocessing.py:29-99): orientation → transpose
-    if VERTICAL → per-column typing/datatype → key column → header."""
-    from .table_analysis import (
-        detect_header,
-        detect_key_column,
-        detect_orientation,
-        transpose,
-        typing_per_column,
-    )
-    from .table_analysis import datatype_per_column as dt_per_column
-
-    cols = {f.name: [] for f in META_SCHEMA.fields}
-    if int(pdf["n_kept_rows"].iloc[0]) < 2:
-        return pd.DataFrame(cols)
-    pdf = pdf.sort_values(["sample_rank", "new_c"])
-    tid = pdf["table_id"].iloc[0]
-    sha = pdf["content_sha256"].iloc[0]
-    width = int(pdf["new_c"].max()) + 1
-    n_s = int(pdf["sample_rank"].max()) + 1
-    dgrid = [[""] * width for _ in range(n_s)]
-    typing_map: dict[str, set[str]] = {}
-    datatype_map: dict[str, set[str]] = {}
-    for r, c, cell, ct, cdt in zip(
-        pdf["sample_rank"], pdf["new_c"], pdf["cell"],
-        pdf["cell_typing"], pdf["cell_datatype"],
+    n_r, n_c = len(g), len(g[0])
+    n = n_r * n_c
+    top_t = [ta.col_typing.get(j, _NO_TYPE)[0] for j in range(n_c)]
+    top_d = [ta.col_datatype.get(j, _NO_TYPE)[0] for j in range(n_c)]
+    out["table_id"] += [tid] * n
+    out["content_sha256"] += [sha] * n
+    out["row_idx"] += [r for r in range(n_r) for _ in range(n_c)]
+    out["col_idx"] += list(range(n_c)) * n_r
+    out["cell"] += [c for row in g for c in row]
+    out["is_header"] += [bool(ta.has_header)] * n_c + [False] * (n - n_c)
+    for name, v in (
+        ("orientation", ta.orientation),
+        ("orientation_score", float(ta.orientation_score)),
+        ("has_header", bool(ta.has_header)),
+        ("header_score", float(ta.header_score)),
+        ("key_col", ta.key_col),
+        ("key_score", float(ta.key_score)),
+        ("n_rows", n_r),
+        ("n_cols", n_c),
     ):
-        cell = cell or ""
-        dgrid[int(r)][int(c)] = cell
-        if ct:
-            typing_map[cell] = {ct}
-        if cdt:
-            datatype_map[cell] = {cdt}
-    orientation, o_score = detect_orientation(dgrid, typing_map, datatype_map)
-    if orientation == "VERTICAL":
-        dgrid = transpose(dgrid)
-    body = dgrid[1:] if len(dgrid) > 1 else dgrid
-    col_typing = typing_per_column(body, typing_map, 3)
-    col_datatype = dt_per_column(body, datatype_map, 3)
-    key_col, key_score = detect_key_column(dgrid, o_score, datatype_map)
-    has_header, h_score = detect_header(dgrid, o_score, typing_map)
-    n_out_cols = len(dgrid[0]) if dgrid else 0
-    for j in range(n_out_cols):
-        top_t = col_typing.get(j, [{"type": None, "score": None}])[0]
-        top_d = col_datatype.get(j, [{"type": None, "score": None}])[0]
-        cols["table_id"].append(tid)
-        cols["content_sha256"].append(sha)
-        cols["orientation"].append(orientation)
-        cols["orientation_score"].append(float(o_score))
-        cols["has_header"].append(bool(has_header))
-        cols["header_score"].append(float(h_score))
-        cols["key_col"].append(key_col)
-        cols["key_score"].append(float(key_score))
-        cols["col_idx"].append(j)
-        cols["col_type"].append(top_t["type"])
-        cols["col_type_score"].append(
-            float(top_t["score"]) if top_t["score"] is not None else None
-        )
-        cols["col_datatype"].append(top_d["type"])
-        cols["col_datatype_score"].append(
-            float(top_d["score"]) if top_d["score"] is not None else None
-        )
-    return pd.DataFrame(cols)
+        out[name] += [v] * n
+    out["col_type"] += [t["type"] for t in top_t] * n_r
+    out["col_type_score"] += [_score(t["score"]) for t in top_t] * n_r
+    out["col_datatype"] += [d["type"] for d in top_d] * n_r
+    out["col_datatype_score"] += [_score(d["score"]) for d in top_d] * n_r
 
 
-def preprocess_cells(cells: DataFrame, ner=None) -> DataFrame:
-    """cells(table_id, content_sha256, row_idx, col_idx, cell) → denormalized
-    preprocessed cells + per-table/per-column metadata (PREP_SCHEMA).
-
-    Scale-first restructure of the reference's per-table pass
-    (table_preprocessing.py:29-99): the FULL data path never leaves the JVM —
-    P1-P4 cleaning (empty-row/col drop, pad, re-index) is relational, the P6
-    decision sample (first 10 + lowest-sha256 390 rows, deterministic twin of
-    table_preprocessing.py:50-55's random.shuffle) is a window over per-row
-    hashes, and only the ≤400-row sample per table crosses into Python for
-    the decision cascade — O(sample) Arrow traffic instead of O(cells), and
-    distinct-cell typing runs over sample cells only. The denormalized
-    output is reconstructed with broadcastable metadata joins; VERTICAL
-    transpose is an index swap. Exact-parity twin of `_prep_one_table`
-    (pinned by TestPrepParity).
-
-    At 100 TB: every cell-scale exchange is keyed by (table_id[, row_idx]) —
-    high-cardinality sha256 keys, no skew; Python cost is bounded by
-    #tables × 400 rows regardless of table size."""
-    from pyspark.sql import Window
-
-    from ..operators.table_analysis import MAX_DECISION_ROWS
-    from ..session import bcast, ckpt
-
-    # Stage-internal lazy checkpoints: the plan below fans out from `cells`,
-    # `fixed`, `dense`, `sample` and `meta` (and fix_encoding/type_cells each
-    # scan their input twice: distinct side + join side). Without pinning,
-    # every consumer re-executes the whole upstream subtree — including the
-    # Python csv parse in extract_cells. The caller should `session.free()`
-    # the frames in `result._graft_intermediates` once the result is
-    # materialized (pipeline.run does).
-    intermediates: list = []
-
-    def _pin(df):
-        out = ckpt(df)
-        intermediates.append(out)
-        return out
-
-    cells = _pin(cells)
-    fixed = _pin(fix_encoding(cells))
-    nonempty = F.length("cell") > 0
-
-    # ---- P1/P3: drop all-empty rows, re-rank survivors (utils.py:149-197).
-    # csv/json extraction emits contiguous col_idx 0..len-1 per row, so a
-    # row's length is max(col_idx)+1 and padding is only ever a ragged tail.
-    row_stats = fixed.groupBy("table_id", "row_idx").agg(
-        F.max(F.when(nonempty, 1).otherwise(0)).alias("row_has"),
-        (F.max("col_idx") + 1).cast("int").alias("row_len"),
-        F.first("content_sha256").alias("content_sha256"),
-    )
-    w_r = Window.partitionBy("table_id").orderBy("row_idx")
-    kept_rows = _pin(
-        row_stats.where(F.col("row_has") == 1)
-        .withColumn("new_r", (F.row_number().over(w_r) - 1).cast("int"))
-        .select("table_id", "content_sha256", "row_idx", "new_r", "row_len")
-    )
-    tbl = (
-        kept_rows.groupBy("table_id")
-        .agg(F.count("*").cast("int").alias("n_kept_rows"))
-    )
-
-    # ---- P4: drop columns empty across all kept rows, re-rank survivors.
-    col_stats = (
-        fixed.join(bcast(kept_rows.select("table_id", "row_idx")),
-                   ["table_id", "row_idx"])
-        .groupBy("table_id", "col_idx")
-        .agg(F.max(F.when(nonempty, 1).otherwise(0)).alias("col_has"))
-    )
-    w_c = Window.partitionBy("table_id").orderBy("col_idx")
-    kept_cols = _pin(
-        col_stats.where(F.col("col_has") == 1)
-        .withColumn("new_c", (F.row_number().over(w_c) - 1).cast("int"))
-        .select("table_id", "col_idx", "new_c")
-    )
-    tbl_cols = kept_cols.groupBy("table_id").agg(
-        F.count("*").cast("int").alias("n_kept_cols")
-    )
-
-    # ---- dense cleaned grid: surviving cells + "" padding for ragged tails
-    existing = (
-        fixed.select("table_id", "content_sha256", "row_idx", "col_idx", "cell")
-        .join(bcast(kept_rows.select("table_id", "row_idx", "new_r")),
-              ["table_id", "row_idx"])
-        .join(bcast(kept_cols), ["table_id", "col_idx"])
-        .select("table_id", "content_sha256", "new_r", "new_c", "cell")
-    )
-    pad = (
-        kept_rows.join(kept_cols, "table_id")
-        .where(F.col("col_idx") >= F.col("row_len"))
-        .select("table_id", "content_sha256", "new_r", "new_c",
-                F.lit("").alias("cell"))
-    )
-    dense = _pin(existing.unionByName(pad))
-
-    # ---- P6: deterministic decision sample (first 10 + lowest-hash 390),
-    # stable ties broken by original row order like Python's stable sort.
-    row_str = (
-        dense.groupBy("table_id", "new_r")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("new_c", "cell"))),
-                    lambda s: s.cell,
-                ),
-                "\x1f",
-            ).alias("row_str")
-        )
-        .join(bcast(tbl), "table_id")
-    )
-    head = row_str.where(F.col("new_r") < 10).withColumn(
-        "sample_rank", F.col("new_r")
-    )
-    w_hash = Window.partitionBy("table_id").orderBy("row_hash", "new_r")
-    rest = (
-        row_str.where(F.col("new_r") >= 10)
-        .withColumn(
-            "row_hash",
-            F.sha2(F.concat(F.col("table_id"), F.lit("\x1f"),
-                            F.col("row_str")), 256),
-        )
-        .withColumn("rrank", F.row_number().over(w_hash))
-        .where(
-            (F.col("n_kept_rows") <= MAX_DECISION_ROWS)
-            | (F.col("rrank") <= MAX_DECISION_ROWS - 10)
-        )
-        .withColumn(
-            "sample_rank",
-            F.when(
-                F.col("n_kept_rows") <= MAX_DECISION_ROWS, F.col("new_r")
-            ).otherwise(9 + F.col("rrank")),
-        )
-    )
-    idx = head.select("table_id", "new_r", "sample_rank", "n_kept_rows").unionByName(
-        rest.select("table_id", "new_r", "sample_rank", "n_kept_rows")
-    )
-
-    # ---- distinct-cell typing over the sample only, then the decision pass
-    sample = _pin(
-        dense.join(bcast(idx), ["table_id", "new_r"]).select(
-            "table_id", "content_sha256", "n_kept_rows",
-            F.col("sample_rank").cast("int").alias("sample_rank"),
-            "new_c", "cell",
-        )
-    )
-    sample_typed = type_cells(sample, ner=ner)
-    meta = _pin(
-        sample_typed.groupBy("table_id").applyInPandas(
-            _table_meta_from_sample, schema=META_SCHEMA
-        )
-    )
-
-    # ---- reconstruct the denormalized PREP_SCHEMA output (JVM joins only;
-    # VERTICAL transpose = swap of the dense grid's indices)
-    tmeta = meta.select(
-        "table_id", "orientation", "orientation_score", "has_header",
-        "header_score", "key_col", "key_score",
-    ).distinct()
-    colmeta = meta.select(
-        "table_id", "col_idx",
-        "col_type", "col_type_score", "col_datatype", "col_datatype_score",
-    )
-    vert = F.col("orientation") == "VERTICAL"
-    out = (
-        dense.join(bcast(tbl), "table_id")
-        .join(bcast(tbl_cols), "table_id")
-        .join(bcast(tmeta), "table_id")
-        .withColumn("row_idx", F.when(vert, F.col("new_c")).otherwise(F.col("new_r")))
-        .withColumn("col_idx", F.when(vert, F.col("new_r")).otherwise(F.col("new_c")))
-        .withColumn(
-            "n_rows",
-            F.when(vert, F.col("n_kept_cols")).otherwise(F.col("n_kept_rows")),
-        )
-        .withColumn(
-            "n_cols",
-            F.when(vert, F.col("n_kept_rows")).otherwise(F.col("n_kept_cols")),
-        )
-        .withColumn("is_header", F.col("has_header") & (F.col("row_idx") == 0))
-        .join(bcast(colmeta), ["table_id", "col_idx"], "left")
-    )
-    # root the output at ONE relation (lazy checkpoint): consumers join
-    # multiple frames derived from this result (body × column classes × …)
-    # and Catalyst's self-join dedup needs a MultiInstanceRelation root —
-    # the raw multi-join plan trips "conflicting references" otherwise
-    result = ckpt(out.select(*[f.name for f in PREP_SCHEMA.fields]))
-    result._graft_intermediates = intermediates
-    return result
+def _prep_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        out: dict[str, list] = {f.name: [] for f in PREP_SCHEMA.fields}
+        for doc in source_rows(pdf):
+            for tid, sha, grid in document_tables(*doc):
+                ta = analyze_table(grid, table_id=tid)
+                if ta is not None:  # None: <2 rows survive cleaning
+                    _emit_table(out, tid, sha, ta)
+        if out["table_id"]:
+            yield pd.DataFrame(out)
 
 
-def preprocess_clean_cells(clean: DataFrame, ner=None) -> DataFrame:
-    """PREP_SCHEMA output from ``extract_cells_clean``'s fused cleaned cells.
-
-    The hot path: cleaning and sampling already happened inside the extract
-    scan, so the only work left is distinct-cell typing over the ≤400-row
-    samples, the per-table decision cascade (tiny applyInPandas), and the
-    broadcast metadata joins — ZERO cell-scale shuffles. Exact-parity twin
-    of ``preprocess_cells`` (pinned by TestPrepParity)."""
-    from ..session import bcast, ckpt
-
-    intermediates: list = []
-
-    def _pin(df):
-        out = ckpt(df)
-        intermediates.append(out)
-        return out
-
-    clean = _pin(clean)
-    sample = _pin(
-        clean.where(F.col("sample_rank").isNotNull()).select(
-            "table_id", "content_sha256", "n_kept_rows",
-            F.col("sample_rank").cast("int").alias("sample_rank"),
-            "new_c", "cell",
-        )
-    )
-    sample_typed = type_cells(sample, ner=ner)
-    meta = _pin(
-        sample_typed.groupBy("table_id").applyInPandas(
-            _table_meta_from_sample, schema=META_SCHEMA
-        )
-    )
-    tmeta = meta.select(
-        "table_id", "orientation", "orientation_score", "has_header",
-        "header_score", "key_col", "key_score",
-    ).distinct()
-    colmeta = meta.select(
-        "table_id", "col_idx",
-        "col_type", "col_type_score", "col_datatype", "col_datatype_score",
-    )
-    vert = F.col("orientation") == "VERTICAL"
-    out = (
-        clean.join(bcast(tmeta), "table_id")
-        .withColumn("row_idx", F.when(vert, F.col("new_c")).otherwise(F.col("new_r")))
-        .withColumn("col_idx", F.when(vert, F.col("new_r")).otherwise(F.col("new_c")))
-        .withColumn(
-            "n_rows",
-            F.when(vert, F.col("n_kept_cols")).otherwise(F.col("n_kept_rows")),
-        )
-        .withColumn(
-            "n_cols",
-            F.when(vert, F.col("n_kept_rows")).otherwise(F.col("n_kept_cols")),
-        )
-        .withColumn("is_header", F.col("has_header") & (F.col("row_idx") == 0))
-        .join(bcast(colmeta), ["table_id", "col_idx"], "left")
-    )
-    # single-relation root — see preprocess_cells
-    result = ckpt(out.select(*[f.name for f in PREP_SCHEMA.fields]))
-    result._graft_intermediates = intermediates
-    return result
+def preprocess(src: DataFrame) -> DataFrame:
+    """src(repo, path, commit, lang, content) → PREP_SCHEMA, one row per
+    cell of every cleaned, HORIZONTAL-oriented table. Shuffle-free: a single
+    mapInPandas over the source columns."""
+    return src.select(*SOURCE_COLS).mapInPandas(_prep_batches, schema=PREP_SCHEMA)
 
 
 def table_meta(prep: DataFrame) -> DataFrame:

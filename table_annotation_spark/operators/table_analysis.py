@@ -1,10 +1,10 @@
 """Per-table structural analysis: cleaning, orientation, header, key column.
 
-Pure-Python decision trees over ONE table grid (≤400 rows by construction —
-large tables are sampled upstream). Runs inside groupBy(table_id).applyInPandas
-in the Spark stage (operators/preprocessing.py); each group is tiny, so this
-is not a scale hotspot — the scale-heavy part (distinct-cell typing) happens
-relationally *before* this and is passed in as maps.
+Pure-Python decision trees over ONE table grid. ``analyze_table`` runs once
+per table inside the prep stage's mapInPandas (operators/preprocessing.py),
+in the worker that parsed the document. Every decision — and the
+distinct-cell typing it needs — reads only the ≤400-row decision sample, so
+per-table cost beyond cleaning does not grow with the table.
 
 Reference semantics (re-derived, no code copied):
 - cleaning P1-P5: /root/reference/preprocessing/prp_scripts/utils.py:135-218
@@ -100,8 +100,7 @@ def build_typing_maps(
     single-label (first-match) for reference parity; multi-label engages
     when a multi-label NER (spaCy plug / gazetteer) is configured.
 
-    In the Spark stage these maps arrive pre-computed from the relational
-    distinct-cell typing join; this local builder serves tests/oracle."""
+    ``analyze_table`` calls this over the decision sample of each table."""
     from ..functions.typing_fns import type_cell_multi
 
     typing: dict[str, set[str]] = {}
@@ -465,20 +464,20 @@ def analyze_table(
     table_id: str = "",
 ) -> TableAnalysis | None:
     """Full preprocessing of one table — mirrors table_preprocessing.py:29-99:
-    clean → type distinct cells → orientation → transpose if VERTICAL →
-    primitive typing (A7) → key column → header.
+    clean → sample → type distinct cells → orientation → transpose if
+    VERTICAL → primitive typing (A7) → key column → header.
 
-    ``typing``/``datatype`` maps may be passed in pre-computed (the Spark
-    stage types each distinct cell once GLOBALLY across all tables — a strict
-    improvement over the reference's per-table dedupe, SURVEY §4); when absent
-    they are built locally (test/oracle path). Pre-computed maps must be keyed
-    by *cleaned* cell text."""
+    Every decision reads only the decision sample ``dgrid`` (≤400 rows), so
+    when ``typing``/``datatype`` are absent they are built over the sample's
+    distinct cells — typing stays bounded per table however long the table
+    is. Maps passed in must be keyed by *cleaned* cell text; any superset of
+    the sample's cells gives the same result."""
     grid = clean_grid(raw_grid)
     if not grid or len(grid) < 2:
         return None
-    if typing is None or datatype is None:
-        typing, datatype = build_typing_maps(grid)
     dgrid = decision_sample(grid, table_id)
+    if typing is None or datatype is None:
+        typing, datatype = build_typing_maps(dgrid)
     orientation, o_score = detect_orientation(dgrid, typing, datatype)
     if orientation == "VERTICAL":
         grid = transpose(grid)

@@ -22,7 +22,7 @@ from ..operators import lookup as lk
 from ..operators.annotation import AnnotationResult, annotate
 from ..operators.materialize import canonicalize, emit_triples, with_uris
 from ..session import ckpt as _sckpt
-from ..operators.preprocessing import body_cells, column_meta
+from ..operators.preprocessing import body_cells, column_meta, preprocess
 from ..sources.embedded_tables import extract_manifest
 
 STAGES = ["prep", "candidates", "cea", "cta", "cpa", "triples"]
@@ -108,26 +108,14 @@ class PipelineRun:
         else:
             t0 = time.time()
             with job_group(self.spark, "stage_prep"):
-                from ..operators.preprocessing import preprocess_clean_cells
-                from ..sources.embedded_tables import extract_cells_clean
-
-                lazy_prep = preprocess_clean_cells(extract_cells_clean(src))
-                prep = lazy_prep
-                if not self.checkpoint_dir:
-                    # materialize the stage's internal lazy checkpoint NOW:
-                    # free() below must only run once prep's blocks exist
-                    # (freed intermediates are not recomputable)
-                    prep.count()
-                prep = self._checkpoint("prep", prep)
-                # prep is materialized now — release the stage-internal
-                # checkpoint blocks (clean/sample/meta), which are otherwise
-                # unevictable for the life of the context; when prep went to
-                # parquet, its own blocks are redundant too
-                from ..session import free
-
-                free(*getattr(lazy_prep, "_graft_intermediates", []))
+                # materialize once: lookup and annotation read prep through
+                # several frames (body, column meta, tid map), and none of
+                # them may re-run the document parse
+                prep = preprocess(src)
                 if self.checkpoint_dir:
-                    free(lazy_prep)
+                    prep = self._checkpoint("prep", prep)
+                else:
+                    prep = _sckpt(prep, eager=True)
             self.metrics["prep_sec"] = round(time.time() - t0, 3)
         manifest = extract_manifest(src)
 

@@ -111,31 +111,6 @@ def ckpt(df, eager: bool = False):
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
-def free(*dfs) -> int:
-    """Deterministically drop the persisted blocks of localCheckpoint'd
-    frames. Checkpoint blocks are UNEVICTABLE for the life of the context
-    (the r4 bench artifact showed del+gc release does not reliably engage —
-    kg_lookup_fuzzy 53.7 s vs 21.7 s clean), so stage-internal intermediates
-    must be released explicitly once their consumer is materialized. Only
-    call this when every downstream of ``df`` has itself been checkpointed
-    or collected — freed blocks are NOT recomputable (LocalCheckpointRDD
-    raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Returns the number of frames
-    whose blocks were dropped; unmaterialized/non-checkpoint frames are
-    skipped silently."""
-    n = 0
-    for df in dfs:
-        if df is None:
-            continue
-        try:
-            lp = df._jdf.queryExecution().logical()
-            if lp.getClass().getSimpleName() == "LogicalRDD":
-                lp.rdd().unpersist(False)
-                n += 1
-        except Exception:
-            pass
-    return n
-
-
 def bcast(df):
     """Size-gated broadcast hint for the engine's small-dim joins.
 
@@ -186,16 +161,8 @@ def job_group(spark: SparkSession, name: str):
 def job_counts(spark: SparkSession) -> dict[str, int]:
     """Cumulative per-group job counts for this session (plus ungrouped)."""
     tracker = spark.sparkContext.statusTracker()
-    out = {}
-    for g in JOB_GROUPS:
-        try:
-            out[g] = len(tracker.getJobIdsForGroup(g) or [])
-        except Exception:
-            out[g] = -1
-    try:
-        out["ungrouped"] = len(tracker.getJobIdsForGroup(None) or [])
-    except Exception:
-        out["ungrouped"] = -1
+    out = {g: len(tracker.getJobIdsForGroup(g)) for g in JOB_GROUPS}
+    out["ungrouped"] = len(tracker.getJobIdsForGroup(None))
     return out
 
 
@@ -207,6 +174,14 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
+    # Python workers import this package by name (every mapInPandas /
+    # pandas-UDF function lives in it), but they inherit only the JVM's
+    # environment, not the driver's sys.path: put the package's parent
+    # directory first on theirs, keeping any inherited PYTHONPATH after it
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        p for p in (pkg_parent, os.environ.get("PYTHONPATH", "")) if p
+    )
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -220,6 +195,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -1,15 +1,21 @@
-"""Stage 1 — extract: source-code repo table → exploded cell grid.
+"""Stage 1 — extract: source-code repo table → embedded table grids.
 
 Input (BASELINE.json input_hint): DataFrame(repo, path, commit, lang, content).
-Output: cells DataFrame (table_id, row_idx, col_idx, cell) + a per-table
-manifest carrying content_sha256 (the per-row invariant vs the reference).
 
 Reference analogue: file_loader.txt_to_table — chardet + csv.Sniffer dispatch
 (/root/reference/preprocessing/prp_scripts/file_loader.py:37-69,140-150).
 Here tables are *embedded in a column*, so `spark.read.csv` cannot apply; the
-parse is a mapInPandas (Arrow-batched, one pass, no per-row Python UDF) that
-emits long-form cells. At 100 TB the input is partitioned by (repo) on read;
-parsing is embarrassingly parallel and shuffle-free.
+parse runs inside a mapInPandas (Arrow-batched, one pass, no per-row Python
+UDF). ``document_tables`` turns one source row into its
+``(table_id, content_sha256, grid)`` triples; both consumers iterate it:
+
+- ``extract_cells`` — the raw grid as long-form cells (kg_queries, tests);
+- ``preprocessing.preprocess`` — the pipeline's prep stage, which analyzes
+  each grid where it was parsed.
+
+``extract_manifest`` adds one row per source row (table or skipped). Parsing
+is embarrassingly parallel and shuffle-free; the limit is one document's
+tables per Python worker.
 """
 
 from __future__ import annotations
@@ -55,6 +61,10 @@ MANIFEST_SCHEMA = StructType(
         StructField("n_cols", IntegerType(), False),
     ]
 )
+
+# the only source columns any stage reads (explicit select so a parquet scan
+# prunes the rest)
+SOURCE_COLS = ("repo", "path", "commit", "lang", "content")
 
 _DELIMS = [",", "\t", ";", ":"]
 TABLE_LANGS = {"csv", "tsv", "json"}
@@ -190,26 +200,38 @@ def parse_content_to_grid(path: str, lang: str, content: str) -> list[list[str]]
     return grids[0] if grids else None
 
 
+def document_tables(
+    repo: str | None, path: str | None, commit: str | None,
+    lang: str | None, content: str | None,
+) -> Iterator[tuple[str, str, list[list[str]]]]:
+    """One source row → ``(table_id, content_sha256, raw_grid)`` per embedded
+    table. The one place the table-id rule lives: a single-table document
+    keeps the plain sha256(repo␟path␟commit) id, a multi-table document gets
+    one id per segment, in reading order."""
+    content = content or ""
+    base = "\x1f".join((repo or "", path or "", commit or ""))
+    sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
+    grids = parse_content_to_grids(path or "", (lang or "").lower(), content)
+    for k, grid in enumerate(grids):
+        tid = hashlib.sha256(
+            (base if len(grids) == 1 else f"{base}\x1f{k}").encode()
+        ).hexdigest()
+        yield tid, sha, grid
+
+
+def source_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """``(repo, path, commit, lang, content)`` of every row of a source batch."""
+    return zip(*(pdf[c] for c in SOURCE_COLS))
+
+
 def _extract_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: dict[str, list] = {k.name: [] for k in CELL_SCHEMA.fields}
-        for repo, path, commit, lang, content in zip(
-            pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
-        ):
-            content = content or ""
-            base = "\x1f".join((repo or "", path or "", commit or ""))
-            sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-            grids = parse_content_to_grids(
-                path or "", (lang or "").lower(), content
-            )
-            for k, grid in enumerate(grids):
-                # single-table files keep their plain id (back-compat);
-                # multi-table files get one id per segment, in reading order
-                tid = hashlib.sha256(
-                    (base if len(grids) == 1 else f"{base}\x1f{k}").encode()
-                ).hexdigest()
+        for doc in source_rows(pdf):
+            repo, path, commit = doc[:3]
+            for tid, sha, grid in document_tables(*doc):
                 for ri, row in enumerate(grid):
                     for ci, cell in enumerate(row):
                         out["table_id"].append(tid)
@@ -228,9 +250,7 @@ def _manifest_batches(
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: dict[str, list] = {k.name: [] for k in MANIFEST_SCHEMA.fields}
-        for repo, path, commit, lang, content in zip(
-            pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
-        ):
+        for repo, path, commit, lang, content in source_rows(pdf):
             content = content or ""
             tid = hashlib.sha256(
                 "\x1f".join((repo or "", path or "", commit or "")).encode()
@@ -258,99 +278,12 @@ def _manifest_batches(
 def extract_cells(src: DataFrame) -> DataFrame:
     """src(repo,path,commit,lang,content) → cells(table_id,…,row_idx,col_idx,cell).
 
-    Shuffle-free: pure mapInPandas. Column pruning: only the 5 input columns
-    are read (explicit select so the parquet scan prunes).
+    Shuffle-free: pure mapInPandas over the raw grids, one row per cell.
+    The pipeline's prep stage (``preprocessing.preprocess``) parses the
+    same documents through the same ``document_tables`` generator.
     """
-    return src.select("repo", "path", "commit", "lang", "content").mapInPandas(
+    return src.select(*SOURCE_COLS).mapInPandas(
         _extract_batches, schema=CELL_SCHEMA
-    )
-
-
-CLEAN_CELL_SCHEMA = StructType(
-    [
-        StructField("table_id", StringType(), False),
-        StructField("content_sha256", StringType(), False),
-        StructField("new_r", IntegerType(), False),
-        StructField("new_c", IntegerType(), False),
-        StructField("cell", StringType(), True),
-        StructField("n_kept_rows", IntegerType(), False),
-        StructField("n_kept_cols", IntegerType(), False),
-        StructField("sample_rank", IntegerType(), True),
-    ]
-)
-
-
-def _extract_clean_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..operators.table_analysis import MAX_DECISION_ROWS, clean_grid
-
-    for pdf in batches:
-        out: dict[str, list] = {k.name: [] for k in CLEAN_CELL_SCHEMA.fields}
-        for repo, path, commit, lang, content in zip(
-            pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
-        ):
-            content = content or ""
-            base = "\x1f".join((repo or "", path or "", commit or ""))
-            sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-            grids = parse_content_to_grids(
-                path or "", (lang or "").lower(), content
-            )
-            for k, grid in enumerate(grids):
-                tid = hashlib.sha256(
-                    (base if len(grids) == 1 else f"{base}\x1f{k}").encode()
-                ).hexdigest()
-                g = clean_grid(grid)
-                n_r = len(g)
-                if n_r < 2:  # analyze_table returns None for these
-                    continue
-                n_c = len(g[0])
-                if n_r <= MAX_DECISION_ROWS:
-                    ranks = {i: i for i in range(n_r)}
-                else:
-                    ranks = {i: i for i in range(10)}
-                    rest = sorted(
-                        range(10, n_r),
-                        key=lambda i: hashlib.sha256(
-                            (tid + "\x1f" + "\x1f".join(g[i])).encode("utf-8")
-                        ).hexdigest(),
-                    )
-                    for j, i in enumerate(rest[: MAX_DECISION_ROWS - 10]):
-                        ranks[i] = 10 + j
-                for ri, row in enumerate(g):
-                    sr = ranks.get(ri)
-                    for ci, cell in enumerate(row):
-                        out["table_id"].append(tid)
-                        out["content_sha256"].append(sha)
-                        out["new_r"].append(ri)
-                        out["new_c"].append(ci)
-                        out["cell"].append(cell)
-                        out["n_kept_rows"].append(n_r)
-                        out["n_kept_cols"].append(n_c)
-                        out["sample_rank"].append(sr)
-        yield pd.DataFrame(out)
-
-
-def extract_cells_clean(src: DataFrame) -> DataFrame:
-    """Fused extract + P1-P4 clean + P6 decision-sample marking, one Python
-    pass per document (file_loader.py + table_preprocessing.py:29-55 in a
-    single scan).
-
-    The grid is already resident in Python at parse time, so cleaning
-    (encoding fix, empty-row/col drop, pad, re-index) and the deterministic
-    decision sample (first 10 + lowest-sha256 390 rows) cost no extra
-    shuffles — at 100 TB this eliminates four cell-scale exchanges that the
-    relational twin in ``preprocess_cells`` needs when starting from an
-    already-extracted cell frame. Output coordinates are the CLEANED dense
-    grid (pre-transpose); tables whose cleaned grid has <2 rows are dropped
-    exactly like ``analyze_table``. Parity with the relational path is
-    pinned by TestPrepParity.
-
-    Boundary: one document's table must fit a Python worker (same bound as
-    ``extract_cells``); the decision pass downstream only ever reads the
-    ≤400 sampled rows per table."""
-    return src.select("repo", "path", "commit", "lang", "content").mapInPandas(
-        _extract_clean_batches, schema=CLEAN_CELL_SCHEMA
     )
 
 
@@ -360,7 +293,7 @@ def extract_manifest(src: DataFrame) -> DataFrame:
     Guarantees the per-row sha256(content) invariant is accounted for even
     for non-table files (FIXTURES.md §1.7).
     """
-    return src.select("repo", "path", "commit", "lang", "content").mapInPandas(
+    return src.select(*SOURCE_COLS).mapInPandas(
         _manifest_batches, schema=MANIFEST_SCHEMA
     )
 

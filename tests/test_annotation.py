@@ -21,10 +21,9 @@ from table_annotation_spark.operators.materialize import (
 from table_annotation_spark.operators.preprocessing import (
     body_cells,
     column_meta,
-    preprocess_cells,
+    preprocess,
 )
 from table_annotation_spark.sources import kg_build
-from table_annotation_spark.sources.embedded_tables import extract_cells
 
 MOVIE_TID = fixtures.table_id_of("acme/movies", "data/films.csv", "a" * 40)
 CITY_TID = fixtures.table_id_of("acme/geo", "data/capitals.csv", "b" * 40)
@@ -35,7 +34,7 @@ LIT_TID = fixtures.table_id_of("acme/movies", "data/films_detail.csv", "e" * 40)
 def annotated(spark, src_df, kg):
     labels, edges = kg
     degrees = kg_build.degrees(edges).localCheckpoint(eager=True)
-    prep = preprocess_cells(extract_cells(src_df)).localCheckpoint(eager=True)
+    prep = preprocess(src_df).localCheckpoint(eager=True)
     body = body_cells(prep).localCheckpoint(eager=True)
     classes = lk.classify_columns(column_meta(prep), body).localCheckpoint(eager=True)
     idf = lk.token_idf(labels)

@@ -1,15 +1,20 @@
 """Stages 1-2: embedded-table extraction + preprocessing over the fixtures."""
 
+import json
+
+import pytest
 from pyspark.sql import functions as F
 
 from table_annotation_spark import fixtures
 from table_annotation_spark.operators import table_analysis as ta
 from table_annotation_spark.operators.preprocessing import (
+    PREP_SCHEMA,
     body_cells,
-    preprocess_cells,
+    preprocess,
     table_meta,
 )
 from table_annotation_spark.sources.embedded_tables import (
+    document_tables,
     extract_cells,
     extract_manifest,
     parse_content_to_grid,
@@ -120,7 +125,7 @@ class TestTableAnalysis:
 
 class TestPreprocessStage:
     def test_preprocess_meta(self, spark, src_df):
-        prep = preprocess_cells(extract_cells(src_df)).cache()
+        prep = preprocess(src_df).cache()
         meta = {r["table_id"]: r.asDict() for r in table_meta(prep).collect()}
         movie_tid = fixtures.table_id_of("acme/movies", "data/films.csv", "a" * 40)
         vert_tid = fixtures.table_id_of(
@@ -135,7 +140,7 @@ class TestPreprocessStage:
         assert py_tid not in meta
 
     def test_body_cells_reindexed(self, spark, src_df):
-        prep = preprocess_cells(extract_cells(src_df))
+        prep = preprocess(src_df)
         body = body_cells(prep)
         movie_tid = fixtures.table_id_of("acme/movies", "data/films.csv", "a" * 40)
         rows = body.where(F.col("table_id") == movie_tid).collect()
@@ -145,115 +150,121 @@ class TestPreprocessStage:
         }
 
 
-class TestPrepParity:
-    """The relational preprocess (Spark P1-P4/P6 + sample-only decision UDF)
-    must be an EXACT twin of the reference-shaped per-table Python pass
-    (`_prep_one_table`) — every PREP_SCHEMA column, every table."""
+def reference_prep(rows: list[dict]) -> list[dict]:
+    """Spark-free reference of the prep stage, shaped like the reference's
+    per-table pass (table_preprocessing.py:29-99): parse each document, type
+    the distinct cells of the FULL cleaned grid of each table, analyze it,
+    and append one PREP_SCHEMA row per cell. The engine types only the
+    decision sample and emits whole columns by repetition, so agreement
+    checks both."""
+    out = []
+    none = [{"type": None, "score": None}]
+    for r in rows:
+        for tid, sha, grid in document_tables(
+            r["repo"], r["path"], r["commit"], r["lang"], r["content"]
+        ):
+            typing, datatype = ta.build_typing_maps(ta.clean_grid(grid))
+            a = ta.analyze_table(grid, typing=typing, datatype=datatype, table_id=tid)
+            if a is None:
+                continue
+            g = a.grid
+            for ri, row in enumerate(g):
+                for ci, cell in enumerate(row):
+                    top_t = a.col_typing.get(ci, none)[0]
+                    top_d = a.col_datatype.get(ci, none)[0]
+                    out.append({
+                        "table_id": tid,
+                        "content_sha256": sha,
+                        "row_idx": ri,
+                        "col_idx": ci,
+                        "cell": cell,
+                        "is_header": bool(a.has_header and ri == 0),
+                        "orientation": a.orientation,
+                        "orientation_score": float(a.orientation_score),
+                        "has_header": bool(a.has_header),
+                        "header_score": float(a.header_score),
+                        "key_col": a.key_col,
+                        "key_score": float(a.key_score),
+                        "col_type": top_t["type"],
+                        "col_type_score": (
+                            None if top_t["score"] is None else float(top_t["score"])
+                        ),
+                        "col_datatype": top_d["type"],
+                        "col_datatype_score": (
+                            None if top_d["score"] is None else float(top_d["score"])
+                        ),
+                        "n_rows": len(g),
+                        "n_cols": len(g[0]),
+                    })
+    return out
 
-    def test_relational_equals_pertable(self, spark, src_df):
-        from table_annotation_spark.operators.preprocessing import (
-            PREP_SCHEMA,
-            _prep_one_table,
-            fix_encoding,
-            type_cells,
-        )
 
-        cells = extract_cells(src_df)
-        new = preprocess_cells(cells)
-        typed = type_cells(fix_encoding(cells))
-        old = typed.groupBy("table_id").applyInPandas(
-            _prep_one_table, schema=PREP_SCHEMA
-        )
-        cols = [f.name for f in PREP_SCHEMA.fields]
-        key = ["table_id", "row_idx", "col_idx"]
-        a = sorted(new.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        b = sorted(old.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        assert len(a) == len(b) and len(a) > 0
-        for ra, rb in zip(a, b):
-            assert ra.asDict() == rb.asDict(), (ra, rb)
+def _doc(content, path="t.csv", lang="csv"):
+    return {"repo": "adv/repo", "path": path, "commit": "7" * 40,
+            "lang": lang, "content": content}
 
-    def test_fused_equals_relational(self, spark, src_df):
-        """extract_cells_clean + preprocess_clean_cells (the zero-shuffle hot
-        path) must emit the identical PREP_SCHEMA frame as the relational
-        path over extract_cells."""
-        from table_annotation_spark.operators.preprocessing import (
-            PREP_SCHEMA,
-            preprocess_clean_cells,
-        )
-        from table_annotation_spark.sources.embedded_tables import (
-            extract_cells_clean,
-        )
 
-        fused = preprocess_clean_cells(extract_cells_clean(src_df))
-        rel = preprocess_cells(extract_cells(src_df))
-        cols = [f.name for f in PREP_SCHEMA.fields]
-        key = ["table_id", "row_idx", "col_idx"]
-        a = sorted(fused.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        b = sorted(rel.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        assert len(a) == len(b) and len(a) > 0
-        for ra, rb in zip(a, b):
-            assert ra.asDict() == rb.asDict(), (ra, rb)
+_BIG_CSV = "name,count\n" + "\n".join(f"Name {i},{i * 3}" for i in range(1, 450))
 
-    def test_big_table_sampling_parity(self, spark):
-        """>400-row table: the decision sample (first 10 + lowest-hash 390)
-        must agree between the window-based and the in-Python sampler."""
-        import pandas as pd
+# name → (source rows, whether the stage must emit nothing)
+PREP_CASES = {
+    "fixture_corpus": (fixtures.source_rows(), False),
+    "450_row_document": ([_doc(_BIG_CSV, "data/big.csv")], False),
+    "empty_content": ([_doc("")], True),
+    "whitespace_only": ([_doc("  \n\t\n   ")], True),
+    "header_only_csv": ([_doc("name,country,population\n")], True),
+    "empty_column_and_row": (
+        [_doc("city,,country\nParis,,France\n,,\nRome,,Italy\nOslo,,Norway\n")],
+        False,
+    ),
+    "ragged_rows": (
+        [_doc("a,b,c,d\n1,2\n3,4,5\n6,7,8,9,10\n11\n")], False,
+    ),
+    "mojibake_cell": ([_doc("name;note\nParis;caf\u00c3\u00a9\nRome;ok\n")], False),
+    "json_missing_keys": (
+        [_doc(json.dumps([{"a": 1, "b": "x"}, {"b": "y", "c": 2.5}, {"a": 3}]),
+              "t.json", "json")],
+        False,
+    ),
+    "two_segment_csv": ([_doc("a,b\n1,2\n3,4\n\nx,y,z\n5,6,7\n8,9,10\n")], False),
+    "vertical_table": ([_doc(fixtures.CITY_VERTICAL_CSV)], False),
+}
 
-        from table_annotation_spark.operators.preprocessing import (
-            PREP_SCHEMA,
-            _prep_one_table,
-            fix_encoding,
-            type_cells,
-        )
 
-        rows = []
-        for i in range(450):
-            rows.append(("bigtid", "sha" * 8, i, 0, f"Name {i}" if i else "name"))
-            rows.append(("bigtid", "sha" * 8, i, 1, f"{i * 3}" if i else "count"))
-        cells = spark.createDataFrame(
-            rows, "table_id string, content_sha256 string, row_idx int, col_idx int, cell string"
-        )
-        new = preprocess_cells(cells)
-        typed = type_cells(fix_encoding(cells))
-        old = typed.groupBy("table_id").applyInPandas(
-            _prep_one_table, schema=PREP_SCHEMA
-        )
-        cols = [f.name for f in PREP_SCHEMA.fields]
-        key = ["table_id", "row_idx", "col_idx"]
-        a = sorted(new.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        b = sorted(old.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        assert len(a) == len(b) == 900
-        for ra, rb in zip(a, b):
-            assert ra.asDict() == rb.asDict(), (ra, rb)
+def _key(r):
+    return (r["table_id"], r["row_idx"], r["col_idx"])
 
-    def test_big_table_fused_parity(self, spark):
-        """Fused parse-time sampler ≡ per-table Python sampler on a >400-row
-        document (hash ladder + stable tie order must agree bit-for-bit)."""
-        from table_annotation_spark.operators.preprocessing import (
-            PREP_SCHEMA,
-            _prep_one_table,
-            fix_encoding,
-            preprocess_clean_cells,
-            type_cells,
-        )
-        from table_annotation_spark.sources.embedded_tables import (
-            extract_cells_clean,
-        )
 
-        csv = "name,count\n" + "\n".join(f"Name {i},{i * 3}" for i in range(1, 450))
+class TestPrepReference:
+    """``preprocess(src)`` must emit exactly the reference's PREP_SCHEMA
+    multiset — every column, every table — on the fixtures and on
+    adversarial documents."""
+
+    @pytest.mark.parametrize("case", list(PREP_CASES))
+    def test_engine_equals_reference(self, spark, case):
+        rows, expect_empty = PREP_CASES[case]
         src = spark.createDataFrame(
-            [("big/repo", "data/big.csv", "9" * 40, "csv", csv)],
-            "repo string, path string, commit string, lang string, content string",
+            rows, "repo string, path string, commit string, lang string, content string"
         )
-        fused = preprocess_clean_cells(extract_cells_clean(src))
-        typed = type_cells(fix_encoding(extract_cells(src)))
-        old = typed.groupBy("table_id").applyInPandas(
-            _prep_one_table, schema=PREP_SCHEMA
-        )
-        cols = [f.name for f in PREP_SCHEMA.fields]
-        key = ["table_id", "row_idx", "col_idx"]
-        a = sorted(fused.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        b = sorted(old.select(*cols).collect(), key=lambda r: tuple(r[k] for k in key))
-        assert len(a) == len(b) == 900
-        for ra, rb in zip(a, b):
-            assert ra.asDict() == rb.asDict(), (ra, rb)
+        got = sorted((r.asDict() for r in preprocess(src).collect()), key=_key)
+        want = sorted(reference_prep(rows), key=_key)
+        names = [f.name for f in PREP_SCHEMA.fields]
+        assert all(list(r) == names for r in got + want)
+        assert (len(got) == 0) == expect_empty
+        assert got == want
+
+    def test_adversarial_shapes(self):
+        """What the reference itself decides on the adversarial documents."""
+        def ref(case):
+            return reference_prep(PREP_CASES[case][0])
+
+        cells = {r["cell"] for r in ref("mojibake_cell")}
+        assert "café" in cells and "cafÃ©" not in cells
+        emp = ref("empty_column_and_row")
+        assert {(r["n_rows"], r["n_cols"]) for r in emp} == {(4, 2)}
+        rag = ref("ragged_rows")
+        assert len(rag) == rag[0]["n_rows"] * rag[0]["n_cols"]
+        assert len({r["table_id"] for r in ref("two_segment_csv")}) == 2
+        assert {r["orientation"] for r in ref("vertical_table")} == {"VERTICAL"}
+        js = ref("json_missing_keys")
+        assert js[0]["n_cols"] == 3 and len(js) == 4 * 3

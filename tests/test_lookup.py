@@ -8,15 +8,14 @@ from table_annotation_spark.operators import lookup as lk
 from table_annotation_spark.operators.preprocessing import (
     body_cells,
     column_meta,
-    preprocess_cells,
+    preprocess,
 )
-from table_annotation_spark.sources.embedded_tables import extract_cells
 
 
 @pytest.fixture(scope="module")
 def pipeline(spark, src_df, kg):
     labels, edges = kg
-    prep = preprocess_cells(extract_cells(src_df)).cache()
+    prep = preprocess(src_df).cache()
     body = body_cells(prep).cache()
     cols = column_meta(prep)
     classes = lk.classify_columns(cols, body).cache()

@@ -24,10 +24,9 @@ from table_annotation_spark.operators.annotation import annotate
 from table_annotation_spark.operators.preprocessing import (
     body_cells,
     column_meta,
-    preprocess_cells,
+    preprocess,
 )
 from table_annotation_spark.sources import kg_build
-from table_annotation_spark.sources.embedded_tables import extract_cells
 
 from oracle import KG, TableOracle
 
@@ -36,7 +35,7 @@ from oracle import KG, TableOracle
 def both(spark, src_df, kg):
     labels, edges = kg
     degrees = kg_build.degrees(edges).localCheckpoint(eager=True)
-    prep = preprocess_cells(extract_cells(src_df)).localCheckpoint(eager=True)
+    prep = preprocess(src_df).localCheckpoint(eager=True)
     body = body_cells(prep).localCheckpoint(eager=True)
     classes = lk.classify_columns(column_meta(prep), body).localCheckpoint(eager=True)
     cand, _ = lk.lookup(body, classes, labels, lk.token_idf(labels))

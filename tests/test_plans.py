@@ -318,3 +318,17 @@ class TestKmeansAssign:
             if r["true_label"] == r["assigned_label"]
         )
         assert diag * 2 > n // 2
+
+
+class TestPrepPlan:
+    def test_preprocess_has_no_exchange(self, spark, src_df):
+        """Prep is one Python pass per document: its executed plan must not
+        shuffle (no Exchange of any kind)."""
+        from table_annotation_spark.operators.preprocessing import preprocess
+
+        df = preprocess(src_df)
+        assert df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in executed
+        assert "Exchange" not in executed
+

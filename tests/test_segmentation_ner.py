@@ -93,6 +93,11 @@ class TestNER:
         assert type_cell("ALGERIA") == "UNKNOWN"  # without the slot
         assert type_cell("zzz unknowable") == "UNKNOWN"
 
+    def test_missing_spacy_model_is_none(self):
+        # spaCy absent (ImportError) or the model not installed (OSError):
+        # the slot reports "no NER" instead of raising
+        assert load_spacy_ner("no_such_model") is None
+
     @pytest.mark.skipif(
         load_spacy_ner() is None,
         reason="spaCy model not available in this container",
