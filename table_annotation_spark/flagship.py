@@ -312,9 +312,13 @@ def run_flagship(
     # from the raw union, so checkpointing that plan would recompute edges
     # from scratch instead of reusing the edges checkpoint's blocks)
     degrees = _sckpt(kg_build.degrees(edges))
-    src = synth_source(
-        spark, sf_dir, max_tables=max_tables, include_orders=include_orders,
-        replicate=replicate,
+    # materialized here, so that source synthesis is not timed as prep
+    src = _sckpt(
+        synth_source(
+            spark, sf_dir, max_tables=max_tables,
+            include_orders=include_orders, replicate=replicate,
+        ),
+        eager=True,
     )
     run = PipelineRun(
         spark=spark, labels=labels, edges=edges, degrees=degrees,

@@ -15,7 +15,7 @@ ground truth is independently expressible in ANSI SQL:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..flagship import run_flagship, synth_kg, synth_source
@@ -126,22 +126,17 @@ ORDER BY table_id, row_idx, col_idx
 
 
 def lookup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real lookup scoring path (exact-norm blocking, fuzzy UDF, adaptive
-    threshold, origin/PR/lexical scoring, top-K window) over customer-name
-    mentions vs the synthesized label index. Ground truth: the identity
-    mapping (each customer name resolves to its own entity)."""
+    """The real lookup scoring path (exact-norm blocking, then the
+    per-mention kernel: fuzzy, adaptive threshold, origin/PR/lexical
+    scoring, top-1) over customer-name mentions vs the synthesized label
+    index. Ground truth: the identity mapping (each customer name resolves
+    to its own entity)."""
     labels, _, _ = synth_kg(spark, sf_dir)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     mentions = cust.select(F.lower(F.trim("c_name")).alias("mention_norm")).distinct()
     pairs = lk.candidate_pairs(mentions, labels, max_gram_df=0)
     scored = lk.score_candidates(pairs, lk.token_idf(labels), k=1)
-    w = Window.partitionBy("mention_norm").orderBy(F.desc("score"), F.asc("entity"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == 1)
-        .select("mention_norm", "entity")
-        .orderBy("mention_norm")
-    )
+    return scored.select("mention_norm", "entity").orderBy("mention_norm")
 
 
 LOOKUP_EXACT_SQL = """
@@ -174,13 +169,7 @@ def lookup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_candidates_per_mention=200,
     )
     scored = lk.score_candidates(pairs, lk.token_idf(labels), k=1)
-    w = Window.partitionBy("mention_norm").orderBy(F.desc("score"), F.asc("entity"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == 1)
-        .select("mention_norm", "entity")
-        .orderBy("mention_norm")
-    )
+    return scored.select("mention_norm", "entity").orderBy("mention_norm")
 
 
 LOOKUP_FUZZY_SQL = """

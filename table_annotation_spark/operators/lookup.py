@@ -15,17 +15,25 @@ join between the distinct mention set and ``kg_labels``:
    "USA" cannot explode the gram join (explicit skew control; AQE skew-join
    splitting handles residual imbalance).
 4. **Length band** (es_lookup.py:207-210): 0.25·len ≤ label_len ≤ 4·len.
-5. **Fuzzy re-score** (L5, es_lookup.py:123-174): Arrow pandas UDF over the
-   surviving pairs (mixed indel/token_sort/token_set + partial-exact bypass).
+5. **Fuzzy re-score** (L5, es_lookup.py:123-174): mixed indel/token_sort/
+   token_set plus partial-exact bypass, times the origin factor.
 6. **Adaptive threshold** (L6): fuzzy ≥ max(0.70, best−0.25) per mention.
-7. **Final score** (L7): 0.7·fuzzy·origin + 0.1·PR-term + 0.2·lexical. The ES
-   BM25 component is replaced by a deterministic IDF-weighted token-overlap
-   score (documented deviation; SURVEY §2.4 L7).
-8. **Top-K per mention** (K=20) via window.
+7. **Final score** (L7): 0.7·fuzzy·origin + 0.1·PR-term + 0.2·lexical of
+   each entity's best label. The ES BM25 component is replaced by a
+   deterministic IDF-weighted token-overlap score (documented deviation;
+   SURVEY §2.4 L7).
+8. **Top-K per mention** (K=20) by (score desc, entity asc).
+
+Steps 5-8 are one pandas pass per mention (``_score_mentions``, the shape of
+the reference's per-mention loop, es_lookup.py:123-198) in a ``mapInPandas``.
 """
 
 from __future__ import annotations
 
+import math
+from functools import partial
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -40,6 +48,7 @@ LEX_FACTOR = 0.2
 ORIGIN_WEIGHTS = {"LABEL": 1.0, "MAIN_ALIAS": 0.94, "SUB_ALIAS": 0.88}
 MIN_FUZZY = 0.70            # settings.py:29
 ADAPTIVE_MARGIN = 0.25      # settings.py:30
+MIN_COVERAGE = 0.3          # annotation_models.py:261-277
 DEFAULT_K = 20
 
 CONCEPTY = ("UNKNOWN", "PERSON", "ORG", "GPE", "LOC", "EVENT", "FAC", "NORP",
@@ -125,24 +134,6 @@ def _grams(col, n: int = 3):
             )
         )
     )
-
-
-def _fuzzy_pexact_udf():
-    """ONE Arrow pass computing (fuzzy, pexact) fused, batch-vectorized —
-    ``fuzzy_pexact_batch`` runs the bit-parallel LCS as NumPy uint64 lane
-    math over the whole Arrow batch for the dominant single-token-ASCII
-    shape (bit-equal to the scalar kernel, which still handles multi-token/
-    long/non-ASCII rows), and a single struct UDF halves the Arrow
-    serialization vs two UDFs."""
-
-    @F.pandas_udf("fuzzy double, pexact boolean")
-    def fp(mention: pd.Series, label: pd.Series) -> pd.DataFrame:
-        fuzzies, pexacts = fuzzy_pexact_batch(
-            mention.to_numpy(), label.to_numpy(), MIN_FUZZY
-        )
-        return pd.DataFrame({"fuzzy": fuzzies, "pexact": pexacts})
-
-    return fp
 
 
 def token_idf(labels: DataFrame) -> DataFrame:
@@ -275,120 +266,125 @@ def candidate_pairs(
     )
 
 
+def _log2(x: np.ndarray) -> np.ndarray:
+    """Spark's ``log2``: ln(x)/ln(2), so scores match the JVM bit for bit."""
+    return np.array([math.log(v) for v in x], dtype=np.float64) / math.log(2.0)
+
+
+def _score_mentions(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
+    """L5-L8 for whole mentions: (mention_norm, entity, label, label_norm,
+    origin, pr, lex) pair rows → (mention_norm, entity, label, score), the
+    top-k entities of each mention with their best label. Rows may come in
+    any order; every pair of a mention must be in ``pdf``."""
+    mention = pdf["mention_norm"].to_numpy()
+    fuzzy, pexact = fuzzy_pexact_batch(
+        mention, pdf["label_norm"].to_numpy(), MIN_FUZZY
+    )
+    # the reference multiplies the origin factor in BEFORE the adaptive
+    # threshold (es_lookup.py:156-187), so the per-mention best and the
+    # filter both read the weighted score
+    weight = pdf["origin"].map(ORIGIN_WEIGHTS).fillna(ORIGIN_WEIGHTS["LABEL"])
+    fuzzy_w = fuzzy * weight.to_numpy(dtype=np.float64)
+    best = pd.Series(fuzzy_w).groupby(mention, sort=False).transform("max")
+    keep = (fuzzy_w >= np.maximum(MIN_FUZZY, best.to_numpy() - ADAPTIVE_MARGIN)) | pexact
+    s = pdf.loc[keep, ["mention_norm", "entity", "label", "label_norm", "pr", "lex"]]
+    s = s.assign(fuzzy_w=fuzzy_w[keep])
+    # lexical overlap per (mention, entity, label_norm), summed over every
+    # surviving label row of that surface form
+    s["lex_raw"] = s.groupby(
+        ["mention_norm", "entity", "label_norm"], sort=False
+    )["lex"].transform("sum")
+    # per-entity best label (es_lookup.py:148-152)
+    s = s.sort_values(["fuzzy_w", "lex_raw", "pr", "label"], ascending=False)
+    s = s.drop_duplicates(["mention_norm", "entity"])
+    g = s.groupby("mention_norm", sort=False)
+    max_pr = g["pr"].transform("max").to_numpy()
+    max_lex = g["lex_raw"].transform("max").to_numpy()
+    lex_raw = s["lex_raw"].to_numpy()
+    lex_term = np.divide(lex_raw, max_lex, out=np.zeros_like(lex_raw), where=max_lex > 0)
+    s["score"] = (
+        FUZZY_FACTOR * s["fuzzy_w"].to_numpy()
+        + PR_FACTOR * _log2(s["pr"].to_numpy() + 1.0)
+        / _log2(np.maximum(max_pr, 1e-9) + 1.0)
+        + LEX_FACTOR * lex_term
+    )
+    top = s.sort_values(["score", "entity"], ascending=[False, True])
+    return top.groupby("mention_norm", sort=False).head(k)[
+        ["mention_norm", "entity", "label", "score"]
+    ]
+
+
+def _scored(frames: list, k: int):
+    if frames:
+        out = _score_mentions(pd.concat(frames, ignore_index=True), k)
+        if len(out):
+            yield out
+
+
+def _score_partition(batches, k: int):
+    """mapInPandas body over batches sorted by mention_norm: scores each
+    mention once all its pairs have arrived, holding back only the last
+    mention of a batch, which may continue in the next one."""
+    pending: list = []
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        m = pdf["mention_norm"].to_numpy()
+        other = np.flatnonzero(m != m[-1])
+        cut = int(other[-1]) + 1 if len(other) else 0
+        if cut or (pending and pending[-1]["mention_norm"].iat[0] != m[0]):
+            yield from _scored(pending + [pdf.iloc[:cut]], k)
+            pending = []
+        pending.append(pdf.iloc[cut:])
+    yield from _scored(pending, k)
+
+
 def score_candidates(
     pairs: DataFrame,
     idf: DataFrame,
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """Fuzzy re-score → adaptive threshold → origin factor → per-entity max →
-    final L7 score → top-K. Returns (mention_norm, entity, best_label, score).
+    """Fuzzy re-score → origin factor → adaptive threshold → per-entity best
+    label → final L7 score → top-K, as one pandas pass per mention
+    (``_score_mentions``). Returns (mention_norm, entity, best_label, score).
 
-    The UDF-scored pair set feeds four downstream branches (threshold window,
-    lexical join, per-entity max, final window) — materialize it once so the
-    blocking join + Python scoring don't recompute per branch."""
-    fp = _fuzzy_pexact_udf()
-
-    # the reference multiplies the origin factor in BEFORE the adaptive
-    # threshold (es_lookup.py:156-187: ratio *= factor, then max_ratio and
-    # ratio_threshold are computed over the factored ratios) — so both the
-    # per-mention best and the filter operate on fuzzy_w, not raw fuzzy.
-    origin_w = (
-        F.when(F.col("origin") == "MAIN_ALIAS", ORIGIN_WEIGHTS["MAIN_ALIAS"])
-        .when(F.col("origin") == "SUB_ALIAS", ORIGIN_WEIGHTS["SUB_ALIAS"])
-        .otherwise(ORIGIN_WEIGHTS["LABEL"])
-    )
-    # the Python fuzzy kernel is the one genuinely CPU-bound stage in lookup:
-    # spread it over every core regardless of the (input-sized) global
-    # shuffle-partition setting — the blocking join can emit 100-1000× more
-    # pairs than it has input rows. Partitioning BY mention_norm also feeds
-    # the adaptive-threshold window below without another exchange.
-    par = pairs.sparkSession.sparkContext.defaultParallelism * 2
-    scored = (
-        pairs.repartition(par, "mention_norm")
-        .withColumn("_fp", fp("mention_norm", "label_norm"))
-        .withColumn("fuzzy", F.col("_fp.fuzzy"))
-        .withColumn("pexact", F.col("_fp.pexact"))
-        .drop("_fp")
-        .withColumn("fuzzy_w", F.col("fuzzy") * origin_w)
-        # pruned to what the downstream branches read (origin is folded into
-        # fuzzy_w; m_len/length/raw fuzzy die here) — every retained column
-        # is serialized into the checkpoint blocks at pair scale
-        .select(
-            "mention_norm", "entity", "label", "label_norm", "pr",
-            "pexact", "fuzzy_w",
-        )
-        # lazy: truncate the plan under the UDF without a blocking job; the
-        # four downstream branches share the one checkpointed RDD. The
-        # checkpoint preserves the mention_norm partitioning, which the
-        # threshold window, per-entity aggregate and final windows below all
-        # reuse — zero further exchanges of the pair-scale frame.
-        .transform(_sckpt)
-    )
-
-    w_mention = Window.partitionBy("mention_norm")
-    scored = scored.withColumn("max_fuzzy", F.max("fuzzy_w").over(w_mention)).where(
-        (
-            F.col("fuzzy_w")
-            >= F.greatest(F.lit(MIN_FUZZY), F.col("max_fuzzy") - ADAPTIVE_MARGIN)
-        )
-        | F.col("pexact")
-    )
-
-    # lexical (BM25 stand-in): IDF-weighted token overlap, per-mention max-normalized
-    m_tok = scored.select("mention_norm", "entity", "label_norm").withColumn(
-        "token", F.explode(F.split("label_norm", r"\s+"))
-    )
-    mention_tok = m_tok.withColumn(
-        "m_tokens", F.split("mention_norm", r"\s+")
-    ).where(F.array_contains(F.col("m_tokens"), F.col("token")))
-    lex = (
-        mention_tok.join(bcast(idf), "token", "left")
-        .fillna({"idf": 0.0})
-        .groupBy("mention_norm", "entity", "label_norm")
-        .agg(F.sum("idf").alias("lex_raw"))
-    )
-    # size-gated broadcast: lex is bounded by pairs with ≥1 overlapping
-    # token (tiny on real corpora), and a sort-merge join here would
-    # re-partition the pair-scale frame by (mention, entity, label_norm),
-    # breaking the mention_norm partitioning chain that the aggregate and
-    # windows below reuse (large posture: AQE picks the strategy)
-    scored = scored.join(
-        bcast(lex), ["mention_norm", "entity", "label_norm"], "left"
-    ).fillna({"lex_raw": 0.0})
-
-    # per-entity max over its labels (es_lookup.py:148-152): keep best label
-    per_entity = scored.groupBy("mention_norm", "entity").agg(
-        F.max(F.struct("fuzzy_w", "lex_raw", "pr", "label")).alias("best")
-    ).select(
+    The lexical term is summed JVM-side per pair against a broadcast
+    per-mention token→idf map; the pairs are checkpointed (lazily) because
+    both the map and the scored rows read them."""
+    pairs = _sckpt(pairs)
+    m_tok = pairs.select("mention_norm").distinct().select(
         "mention_norm",
-        "entity",
-        F.col("best.fuzzy_w").alias("fuzzy_w"),
-        F.col("best.lex_raw").alias("lex_raw"),
-        F.col("best.pr").alias("pr"),
-        F.col("best.label").alias("best_label"),
+        F.explode(F.array_distinct(F.split("mention_norm", r"\s+"))).alias("token"),
     )
-
-    w = Window.partitionBy("mention_norm")
-    final = (
-        per_entity.withColumn("max_pr", F.max("pr").over(w))
-        .withColumn("max_lex", F.max("lex_raw").over(w))
-        .withColumn(
-            "score",
-            FUZZY_FACTOR * F.col("fuzzy_w")
-            + PR_FACTOR
-            * F.log2(F.col("pr") + 1.0)
-            / F.log2(F.greatest(F.col("max_pr"), F.lit(1e-9)) + 1.0)
-            + LEX_FACTOR
-            * F.when(F.col("max_lex") > 0, F.col("lex_raw") / F.col("max_lex")).otherwise(0.0),
-        )
+    m_idf = (
+        m_tok.join(bcast(idf), "token")
+        .groupBy("mention_norm")
+        .agg(F.map_from_entries(F.collect_list(F.struct("token", "idf"))).alias("m_idf"))
     )
-    w_rank = Window.partitionBy("mention_norm").orderBy(
-        F.desc("score"), F.asc("entity")
+    lex = F.aggregate(
+        F.split("label_norm", r"\s+"), F.lit(0.0),
+        lambda acc, t: acc + F.coalesce(F.col("m_idf")[t], F.lit(0.0)),
     )
+    # the Python kernel is the CPU-bound part of lookup: spread it over every
+    # core whatever the (input-sized) shuffle-partition setting — blocking
+    # can emit 100-1000× more pairs than it has input rows
+    par = pairs.sparkSession.sparkContext.defaultParallelism * 2
+    schema = "mention_norm string, entity string, label string, score double"
     return (
-        final.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
-        .select("mention_norm", "entity", "best_label", "score")
+        pairs.join(bcast(m_idf), "mention_norm", "left")
+        .select(
+            "mention_norm", "entity", "label", "label_norm", "origin", "pr",
+            lex.alias("lex"),
+        )
+        .repartition(par, "mention_norm")
+        .sortWithinPartitions("mention_norm")
+        .mapInPandas(partial(_score_partition, k=k), schema)
+        # renamed outside the kernel on purpose: this projection drops the
+        # partitioning mapInPandas reports, which names the caller's
+        # mention_norm attribute; a checkpoint keeping it leaves Spark unable
+        # to deduplicate a later self-join with the mentions (lookup's
+        # coverage join fails analysis)
+        .withColumnRenamed("label", "best_label")
     )
 
 
@@ -399,7 +395,6 @@ def lookup(
     idf: DataFrame,
     k: int = DEFAULT_K,
     max_gram_df: int | None = None,
-    min_coverage: float = 0.3,
     multi_resolution: bool = False,
     max_candidates_per_mention: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -454,7 +449,7 @@ def lookup(
             (F.col("n_cov") / F.col("n_rows")).alias("coverage"),
         )
     )
-    kept = cov.where(F.col("coverage") >= min_coverage).select(
+    kept = cov.where(F.col("coverage") >= MIN_COVERAGE).select(
         "table_id", "col_idx", "coverage"
     )
 

@@ -332,3 +332,22 @@ class TestPrepPlan:
         assert "MapInPandas" in executed
         assert "Exchange" not in executed
 
+
+class TestLookupPlan:
+    def test_scoring_is_one_map_in_pandas(self, spark, kg):
+        """Lookup scoring (L5-L8) is one pandas pass per mention: the
+        executed plan has no Window and no Python UDF, and exactly one
+        MapInPandas."""
+        from table_annotation_spark.operators import lookup as lk
+
+        labels, _ = kg
+        m = spark.createDataFrame(
+            [("paris",), ("pulp fiction",), ("titanc",)], ["mention_norm"]
+        )
+        df = lk.score_candidates(lk.candidate_pairs(m, labels), lk.token_idf(labels))
+        assert df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in executed
+        assert "ArrowEvalPython" not in executed
+        assert "BatchEvalPython" not in executed
+        assert executed.count("MapInPandas") == 1
