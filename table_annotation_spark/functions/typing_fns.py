@@ -100,12 +100,6 @@ UNIT_TO_BASE: dict[str, float] = {
     "ha": 1e4, "km2": 1e6, "m2": 1.0,
 }
 
-CONCEPT_TYPINGS = frozenset(
-    {
-        "PERSON", "ORG", "GPE", "LOC", "EVENT", "FAC", "NORP", "LAW",
-        "PRODUCT", "WORK_OF_ART", "LANGUAGE", "UNKNOWN",
-    }
-)
 DATE_TYPINGS = frozenset({"DATE", "TIME"})
 NUMERIC_WITH_UNIT = frozenset(
     {
@@ -233,17 +227,6 @@ def get_string_type(label: str) -> str:
     if label.isupper():
         return "String_Uppercase"
     return "String_Normal"
-
-
-def cell_datatype(cell: str) -> str:
-    """Typing → datatype: concept typings collapse to string classes
-    (utils.py:100-112); others pass through."""
-    t = type_cell(cell)
-    if t == "":
-        return ""
-    if t in CONCEPT_TYPINGS:
-        return get_string_type(cell.strip())
-    return t
 
 
 def float_parse(v: str) -> float | None:

@@ -5,15 +5,17 @@ Two halves:
 
 - ``build_inputs`` — the GLOBAL KG-side joins, as lazily checkpointed
   DataFrames that the kernel job computes: the per-table co-occurring entity
-  pairs, the entity types and pid sets, the literal-match kernel over
-  distinct value tuples, and the 1/2-hop relations of every distinct
-  co-occurring pair.
+  pairs, the entity types, pid sets and literal edges, and the 1/2-hop
+  relations of every distinct co-occurring pair. Every frame here is keyed
+  by entity or entity pair (``table_pairs`` only picks each table's slice).
 - ``annotate_tables`` — everything per table, as ONE pandas kernel call per
-  Spark partition (``repartition("table_id").mapInPandas``): context scoring
-  (C6/C10, the row pair gates, context entries and relation sets) and passes
-  1–4. Nothing in them crosses tables, so each table's candidates and its
-  slice of the KG-side inputs travel to one partition, and the passes run as
-  vectorized pandas (merge / groupby / sort, no per-row Python) over all of
+  Spark partition (``repartition("table_id").mapInPandas``): literal
+  matching (C7, each distinct value tuple scored once per call), context
+  scoring (C6/C10, the row pair gates, context entries and relation sets)
+  and passes 1–4. Nothing in them crosses tables, so each table's
+  candidates and its slice of the KG-side inputs travel to one partition,
+  and the passes run as vectorized pandas (merge / groupby / sort, no
+  per-row Python; only the C7 matcher runs per distinct tuple) over all of
   the partition's tables at once, with ``table_id`` as the leading key of
   every frame, join, group and sort:
 
@@ -34,7 +36,9 @@ so equal vote sequences give bit-equal totals and ties stay ties; with
 its partition.
 
 Limit: one shuffle partition's annotation state (candidates × context
-columns of its tables) must fit in one Python worker — see RUNBOOK.
+columns of its tables, and candidates × their literal edges × the literal
+cells at or right of their column) must fit in one Python worker — see
+RUNBOOK.
 """
 
 from __future__ import annotations
@@ -66,7 +70,7 @@ class AnnotInputs:
     lit_cells: DataFrame = None    # (table_id,row_idx,lit_col,lit_cell)
     table_pairs: DataFrame = None  # (table_id,head_ent,tail_ent) co-occurring on a row
     pair_rel: DataFrame = None     # (head_ent,tail_ent,rel,prox) all co-occurring pairs
-    lit_match: DataFrame = None    # (t,r,col_idx,entity,lit_col,lit_class,pid,match_score,lit_cell)
+    lit_edges: DataFrame = None    # (entity,pid,obj,obj_type,unit_symbol)
     types: DataFrame = None        # (entity,type,level,rank)
     super_t: DataFrame = None      # (type,supertype)
     type_nb: DataFrame = None      # (type,neighbor)
@@ -97,7 +101,6 @@ def build_inputs(
     col_classes: DataFrame,
     edges: DataFrame,
     degrees: DataFrame,
-    multihop: bool = True,
 ) -> AnnotInputs:
     """Assemble the pass-invariant KG-side inputs (the scale-heavy global
     joins). Per-table work is left to ``annotate_tables``.
@@ -134,7 +137,6 @@ def build_inputs(
         .distinct()
     )
 
-    j_lit = ckpt(ctx.literal_match_join(cand, body, col_classes, edges))
     ents = cand.select("entity").distinct()
     types = ckpt(ctx.entity_types(ents, edges))
     ent_pids = ckpt(ctx.entity_pids(ents, edges))
@@ -150,15 +152,12 @@ def build_inputs(
         "neighbor", "left_semi",
     )
 
-    # pair relations over the distinct co-occurring pair set, and the C7
-    # match kernel over the distinct literal value tuples
+    # pair relations over the distinct co-occurring pair set
     pair_rel = ckpt(
         ctx.pair_relations_for_pairs(
-            table_pairs.select("head_ent", "tail_ent").distinct(),
-            edges, degrees, multihop,
+            table_pairs.select("head_ent", "tail_ent").distinct(), edges, degrees,
         )
     )
-    lit_keys = ckpt(ctx.literal_match_keys(j_lit))
 
     return AnnotInputs(
         cand=cand, col_classes=col_classes,
@@ -168,8 +167,8 @@ def build_inputs(
         ),
         lit_cells=_lit_cells(body, col_classes),
         table_pairs=table_pairs, pair_rel=pair_rel,
-        # the rejoin is a broadcast-hash lookup over the row-scale domain
-        lit_match=ctx.literal_matches_from(j_lit, lit_keys),
+        # one consumer (pack_tables), so no checkpoint
+        lit_edges=ctx.entity_literal_edges(ents, edges),
         types=types, super_t=super_t, type_nb=type_nb, ent_pids=ent_pids,
     )
 
@@ -183,8 +182,7 @@ KERNEL_PARTS = {
     "col": ("col_idx", "col_class"),
     "shape": ("n_cols", "n_data_rows"),
     "lit_cell": ("row_idx", "lit_col", "lit_cell"),
-    "lit_match": ("row_idx", "col_idx", "entity", "lit_col", "lit_cell", "rel",
-                  "match_score"),
+    "lit_edge": ("entity", "rel", "obj", "obj_type", "unit_symbol"),
     "pair_rel": ("head_ent", "tail_ent", "rel", "prox"),
     "type": ("entity", "type", "level", "rank"),
     "supertype": ("type", "supertype"),
@@ -193,7 +191,7 @@ KERNEL_PARTS = {
 }
 _INT = ("row_idx", "col_idx", "lit_col", "cell_len", "n_cols", "n_data_rows",
         "level", "rank")
-_DOUBLE = ("sim", "match_score", "prox")
+_DOUBLE = ("sim", "prox")
 _PANDAS_DTYPE = {
     c: "int64" if c in _INT else "float64" if c in _DOUBLE else object
     for part in KERNEL_PARTS.values() for c in part
@@ -228,7 +226,8 @@ def pack_tables(inp: AnnotInputs) -> DataFrame:
         "col": inp.col_classes,
         "shape": inp.tbl,
         "lit_cell": inp.lit_cells,
-        "lit_match": inp.lit_match.withColumnRenamed("pid", "rel"),
+        "lit_edge": tbl_ents.join(inp.lit_edges, "entity")
+        .withColumnRenamed("pid", "rel"),
         "pair_rel": inp.table_pairs.join(inp.pair_rel, ["head_ent", "tail_ent"]),
         "type": tbl_types,
         "supertype": tbl_type_set.join(inp.super_t, "type"),
@@ -249,14 +248,15 @@ def pack_tables(inp: AnnotInputs) -> DataFrame:
 # Every kernel frame carries table_id as its leading key, so one call
 # annotates a batch of tables and each table's sorts and sums run exactly as
 # they would alone. The per-entity frames (types, supertypes, type
-# neighbours, pids) are the same for every table: the batch shares one
-# de-duplicated copy, joined on entity or type alone.
+# neighbours, pids, literal edges) are the same for every table: the batch
+# shares one de-duplicated copy, joined on entity or type alone.
 TID = "table_id"
 PAIR = [TID, "head_col", "tail_col"]
 CELL = [TID, "row_idx", "col_idx"]
 CAND_KEY = CELL + ["entity"]
 ENTRY_KEY = CAND_KEY + ["ctx_col"]
-_SHARED = ("type", "supertype", "type_nb", "pid")
+_SHARED = ("type", "supertype", "type_nb", "pid", "lit_edge")
+LIT_KEY = ["obj", "obj_type", "lit_cell", "lit_class", "unit_symbol"]
 
 
 @dataclass
@@ -358,7 +358,7 @@ def _unpack(pdf: pd.DataFrame) -> _Batch | None:
     cols = p["col"].sort_values([TID, "col_idx"])
     ecols = cols.loc[cols["col_class"] == "entity", [TID, "col_idx"]]
     lcols = cols.loc[cols["col_class"].isin(LIT_CLASSES), [TID, "col_idx"]]
-    lit_match = p["lit_match"]
+    lit_match = _literal_matches(p)
     t = _Batch(
         cand=cand,
         n_rows=shape["n_data_rows"],
@@ -377,6 +377,29 @@ def _unpack(pdf: pd.DataFrame) -> _Batch | None:
     )
     _context(t, p["pair_rel"], lit_match)
     return t
+
+
+def _literal_matches(p: dict) -> pd.DataFrame:
+    """C7 (annotation_models.py:568-676): each candidate × its entity's
+    literal edges × its row's literal cells at or right of its column, kept
+    where the edge matches the cell (match_score > 0). The score is a pure
+    function of the value tuple (LIT_KEY), so each distinct tuple of the
+    batch is scored once. Missing values reach the matcher as "" — but a
+    missing unit symbol as None: NaN is truthy."""
+    cls = _cols(p["col"], lit_col="col_idx", lit_class="col_class")
+    j = (
+        p["cand"][CAND_KEY].merge(p["lit_edge"], on="entity")
+        .merge(p["lit_cell"], on=[TID, "row_idx"])
+    )
+    j = j[j["lit_col"] >= j["col_idx"]].merge(cls, on=[TID, "lit_col"])
+    keys = j[LIT_KEY].fillna("")
+    u = keys.drop_duplicates()
+    u = u.assign(match_score=[
+        ctx._match_literal(o, ot, c, cl, us or None)
+        for o, ot, c, cl, us in u.itertuples(index=False)
+    ])
+    j["match_score"] = keys.merge(u, on=LIT_KEY, how="left")["match_score"].to_numpy()
+    return j[j["match_score"] > 0.0].reset_index(drop=True)
 
 
 def _context(t: _Batch, pair_rel: pd.DataFrame, lit_match: pd.DataFrame) -> None:
@@ -754,7 +777,6 @@ def annotate(
     col_classes: DataFrame,
     edges: DataFrame,
     degrees: DataFrame,
-    multihop: bool = True,
     timings: dict | None = None,
 ) -> AnnotationResult:
     """Full 4-pass annotation (table_annotation.py:51-112): the global
@@ -767,7 +789,7 @@ def annotate(
 
     t0 = _t.time()
     with job_group(spark, "annot_build_inputs"):
-        inp = build_inputs(cand, body, col_classes, edges, degrees, multihop)
+        inp = build_inputs(cand, body, col_classes, edges, degrees)
     timings["build_inputs"] = round(_t.time() - t0, 2)
 
     t0 = _t.time()

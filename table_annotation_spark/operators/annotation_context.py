@@ -1,4 +1,4 @@
-"""Stage 4a — KG context joins: everything the annotation passes need from
+"""Stage 4a — KG context joins: everything the annotation kernel needs from
 the knowledge graph, computed as global DataFrame joins.
 
 The reference materializes a per-candidate subgraph dict in process memory
@@ -7,7 +7,9 @@ and intersects dicts per candidate pair. Here every KG access is a join
 against ``kg_edges`` keyed on entity id, and every memo-dict becomes a
 DISTINCT-then-join — each (head, tail) pair or entity is computed once
 GLOBALLY across all tables (the reference's caches are per-process; ours are
-the dataflow itself).
+the dataflow itself). Only facts keyed by entity or entity pair are computed
+here; everything keyed by table — including the C7 literal matching, whose
+scalar rule ``_match_literal`` lives here — runs in the annotation kernel.
 
 Scale notes (100 TB posture):
 - All joins against kg_edges hit the bucket key (subj) — co-located if the
@@ -20,16 +22,12 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import bcast
-from pyspark.sql.types import DoubleType
-
 from ..functions import typing_fns as tf
 from ..functions.similarity import textual_similarity
+from ..session import bcast
 from ..sources.kg_build import TRANSITIVE_PIDS, TYPE_PIDS
 
 MIXED_DIRECTION_PENALTY = 1.75  # annotation_models.py:524-527
@@ -122,38 +120,19 @@ def twohop_relations(
 
 
 def pair_relations_for_pairs(
-    pairs: DataFrame,
-    edges: DataFrame,
-    degrees: DataFrame,
-    multihop: bool = True,
+    pairs: DataFrame, edges: DataFrame, degrees: DataFrame
 ) -> DataFrame:
     """All relations per DISTINCT (head_ent, tail_ent) pair: direct pairs use
     ONLY their direct relations (the reference's elif at
     annotation_models.py:489); 2-hop applies only to pairs with no direct
     edge."""
     direct = direct_relations(pairs, edges)
-    if not multihop:
-        return direct
     direct_keys = direct.select("head_ent", "tail_ent").distinct()
     nondirect = pairs.join(direct_keys, ["head_ent", "tail_ent"], "left_anti")
     return direct.unionByName(twohop_relations(nondirect, edges, degrees))
 
 
 # ------------------------------------------------------------------ literal
-def _literal_match_udf():
-    @F.pandas_udf(DoubleType())
-    def match(
-        obj: pd.Series, obj_type: pd.Series, cell: pd.Series, col_class: pd.Series,
-        unit_symbol: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for o, ot, c, cls, usym in zip(obj, obj_type, cell, col_class, unit_symbol):
-            out.append(_match_literal(o or "", ot or "", c or "", cls or "", usym))
-        return pd.Series(out)
-
-    return match
-
-
 def _match_literal(
     obj: str, obj_type: str, cell: str, col_class: str, unit_symbol: str | None
 ) -> float:
@@ -211,41 +190,12 @@ def unit_symbols(edges: DataFrame) -> DataFrame:
     )
 
 
-def literal_match_join(
-    cand: DataFrame,
-    body: DataFrame,
-    col_classes: DataFrame,
-    edges: DataFrame,
-) -> DataFrame:
-    """The C7 row-scale domain: candidate × its literal edges × the row's
-    literal cells (lit_col ≥ col). Returns the UNSCORED join — callers run
-    the match kernel over its distinct value tuples (literal_match_keys) and
-    join the scores back (literal_matches_from), so the Python kernel cost is
-    bounded by distinct values, not rows."""
-    # alias-isolate: col_classes shares lineage with body (classify_columns
-    # aggregates body), so rename join keys to fresh attributes before the
-    # equi-join to avoid Catalyst conflicting-attribute errors
-    lit_cols = col_classes.where(
-        F.col("col_class").isin("date", "numeral_unit", "numeral", "textual")
-    ).select(
-        F.col("table_id").alias("lc_tid"),
-        F.col("col_idx").alias("lit_col"),
-        F.col("col_class").alias("lit_class"),
-    )
-    lit_cells = body.join(
-        lit_cols,
-        (F.col("table_id") == F.col("lc_tid")) & (F.col("col_idx") == F.col("lit_col")),
-    ).select(
-        "table_id", "row_idx", "lit_col", "lit_class",
-        F.col("cell").alias("lit_cell"),
-    )
-
-    cand_e = cand.select("table_id", "row_idx", "col_idx", "entity")
+def entity_literal_edges(ents: DataFrame, edges: DataFrame) -> DataFrame:
+    """(entity, pid, obj, obj_type, unit_symbol) — the forward literal edges
+    of the candidate entities, the C7 domain's KG side. A Quantity-<unitQID>
+    object carries its unit's symbol (null when the unit has none); the
+    kernel pairs these edges with each row's literal cells."""
     le = literal_edges(edges)
-    ents = cand_e.select("entity").distinct()
-    cand_edges = ents.join(le, ents["entity"] == le["subj"]).drop("subj")
-    # attach unit symbols for Quantity-<unitQID> edge objects
-    usym = unit_symbols(edges)
     unit_q = F.when(
         F.col("obj_type").startswith("Quantity-"),
         F.regexp_replace(
@@ -254,53 +204,11 @@ def literal_match_join(
             "",
         ),
     )
-    cand_edges = cand_edges.withColumn("unit_qid", unit_q).join(
-        bcast(usym), "unit_qid", "left"
-    )
-
     return (
-        cand_e.join(cand_edges, "entity")
-        .join(lit_cells, ["table_id", "row_idx"])
-        .where(F.col("lit_col") >= F.col("col_idx"))
-    )
-
-
-LIT_KEY_COLS = ["obj", "obj_type", "lit_cell", "lit_class", "unit_symbol"]
-
-
-def literal_match_keys(j: DataFrame) -> DataFrame:
-    """Distinct value tuples of the C7 domain, scored by the match kernel,
-    POSITIVE matches only (dedupe-compute-rejoin — the P7/P8 pattern applied
-    to C7: the match score is a pure function of the value tuple, not of
-    which (table, row) it occurs in, so the Python kernel runs once per
-    distinct tuple; every repeat across rows/replicated tables costs a
-    broadcast-hash lookup instead of a kernel call)."""
-    match = _literal_match_udf()
-    return (
-        j.select(*LIT_KEY_COLS)
-        .distinct()
-        .withColumn(
-            "match_score",
-            match("obj", "obj_type", "lit_cell", "lit_class", "unit_symbol"),
-        )
-        .where(F.col("match_score") > 0.0)
-    )
-
-
-def literal_matches_from(j: DataFrame, matched_keys: DataFrame) -> DataFrame:
-    """Join the scored distinct tuples back onto the row-scale domain.
-    eqNullSafe keys because unit_symbol is nullable; the broadcast side holds
-    only positive matches, so it stays tiny."""
-    mk = bcast(
-        matched_keys.withColumnsRenamed({c: f"_k_{c}" for c in LIT_KEY_COLS})
-    )
-    cond = None
-    for c in LIT_KEY_COLS:
-        eq = j[c].eqNullSafe(mk[f"_k_{c}"])
-        cond = eq if cond is None else (cond & eq)
-    return j.join(mk, cond).select(
-        "table_id", "row_idx", "col_idx", "entity", "lit_col", "lit_class",
-        "pid", "match_score", "lit_cell",
+        ents.join(le, ents["entity"] == le["subj"])
+        .withColumn("unit_qid", unit_q)
+        .join(bcast(unit_symbols(edges)), "unit_qid", "left")
+        .select("entity", "pid", "obj", "obj_type", "unit_symbol")
     )
 
 

@@ -15,30 +15,10 @@ iterations; each iteration is one join + one groupBy).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .annotation import AnnotationResult
-
-
-def _top1(cea: DataFrame) -> DataFrame:
-    """Deterministic top-1 per cell from the kept-ties CEA (reference output
-    takes cea_annot[cell][0], table_annotation.py:115)."""
-    w = Window.partitionBy("table_id", "row_idx", "col_idx").orderBy("rank")
-    return (
-        cea.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") == 1)
-        .drop("_r")
-    )
-
-
-def _top1_cpa(cpa: DataFrame) -> DataFrame:
-    w = Window.partitionBy("table_id", "head_col", "tail_col").orderBy("rank")
-    return (
-        cpa.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") == 1)
-        .drop("_r")
-    )
 
 
 def emit_triples(result: AnnotationResult) -> DataFrame:
@@ -47,8 +27,11 @@ def emit_triples(result: AnnotationResult) -> DataFrame:
     CEA and only literal columns have literal cells, so the tail join alone
     tells entity pairs from literal pairs."""
     inp = result.inputs
-    cea = _top1(result.cea)
-    cpa = _top1_cpa(result.cpa)
+    # rank 1 is the output (the reference's cea_annot[cell][0],
+    # table_annotation.py:115): unique per cell and per column pair, and
+    # always kept — it carries the top score (CEA) or the top ct (CPA)
+    cea = result.cea.where(F.col("rank") == 1)
+    cpa = result.cpa.where(F.col("rank") == 1)
 
     head = cea.select(
         "table_id", "row_idx", F.col("col_idx").alias("head_col"),

@@ -39,10 +39,6 @@ def _norm(c):
     )
 
 
-def _cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for the first N_QUERIES vectors.
     Broadcast the (small) query side; scan the corpus once. Norms are

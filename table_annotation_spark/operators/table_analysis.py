@@ -41,10 +41,6 @@ def is_concept(label: str) -> bool:
     return any(c in label for c in CONCEPT_LIST)
 
 
-def header_related_datatype(t: str) -> bool:
-    return t in ("String_Normal", "String_Uppercase")
-
-
 def key_column_related_datatype(t: str) -> bool:
     return t in ("String_Normal", "String_Uppercase", "String_Number")
 

@@ -52,7 +52,6 @@ class PipelineRun:
     max_gram_df: int | None = None
     multi_resolution: bool = False
     max_candidates_per_mention: int | None = None
-    multihop: bool = True
     metrics: dict = field(default_factory=dict)
 
     # ------------------------------------------------------------ helpers
@@ -181,8 +180,7 @@ class PipelineRun:
             self.metrics["annotate_resumed"] = True
         else:
             result = annotate(
-                cand, body, classes, self.edges, self.degrees,
-                multihop=self.multihop, timings=self.metrics,
+                cand, body, classes, self.edges, self.degrees, timings=self.metrics,
             )
             cea = self._checkpoint("cea", result.cea)
             cta = self._checkpoint("cta", result.cta)

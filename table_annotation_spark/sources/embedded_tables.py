@@ -28,7 +28,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -89,10 +88,6 @@ def _sniff_delimiter(text: str) -> str:
 
 def _is_table(grid: list[list[str]]) -> bool:
     return len(grid) >= 2 and max((len(r) for r in grid), default=0) >= 2
-
-
-def _row_blank(row: list[str]) -> bool:
-    return all((c or "").strip() == "" for c in row)
 
 
 def _split_blank_rows(rows: list[list[str]]) -> list[list[list[str]]]:
@@ -296,11 +291,3 @@ def extract_manifest(src: DataFrame) -> DataFrame:
     return src.select(*SOURCE_COLS).mapInPandas(
         _manifest_batches, schema=MANIFEST_SCHEMA
     )
-
-
-def with_source_ids(src: DataFrame) -> DataFrame:
-    """Adds table_id + content_sha256 columns JVM-side (sha2 codegen, no UDF)."""
-    return src.withColumn(
-        "table_id",
-        F.sha2(F.concat_ws("\x1f", "repo", "path", "commit"), 256),
-    ).withColumn("content_sha256", F.sha2(F.col("content"), 256))

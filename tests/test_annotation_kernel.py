@@ -90,12 +90,14 @@ def _table(grid: list[list[str]], labels: dict, min_sim: float = MIN_SIM):
 
 
 def _packed(grid, classes, cands, kg: KG, table_id="t") -> pd.DataFrame:
-    """One table's kernel input, built from the oracle's KG view."""
+    """One table's kernel input, built from the oracle's KG view: the
+    kernel does its own literal matching (C7) over the candidates' literal
+    edges."""
     helper = TableOracle(grid, classes, cands, kg)
     ecols = sorted(c for c, k in classes.items() if k == "entity")
     lcols = sorted(c for c, k in classes.items() if k in LIT_CLASSES)
     parts: dict[str, list[dict]] = {k: [] for k in (
-        "cand", "col", "shape", "lit_cell", "lit_match", "pair_rel", "type",
+        "cand", "col", "shape", "lit_cell", "lit_edge", "pair_rel", "type",
         "supertype", "type_nb", "pid")}
     parts["shape"].append({"n_cols": len(grid[0]), "n_data_rows": len(grid)})
     parts["col"] += [{"col_idx": c, "col_class": k} for c, k in classes.items()]
@@ -111,18 +113,6 @@ def _packed(grid, classes, cands, kg: KG, table_id="t") -> pd.DataFrame:
             for tc in ecols[i + 1:]:
                 pairs |= {(h, t) for h, _ in cands.get((r, hc), [])
                           for t, _ in cands.get((r, tc), []) if h != t}
-        for ec in ecols:
-            for ent, _ in cands.get((r, ec), []):
-                for lc in (lc for lc in lcols if lc >= ec):
-                    mention = grid[r][lc]
-                    for obj, plist in kg.lit_nbrs.get(ent, {}).items():
-                        for pid, littype in plist:
-                            score = helper._match_literal(obj, littype, mention, classes[lc])
-                            if score > 0.0:
-                                parts["lit_match"].append({
-                                    "row_idx": r, "col_idx": ec, "entity": ent,
-                                    "lit_col": lc, "lit_cell": mention, "rel": pid,
-                                    "match_score": score})
     for h, t in sorted(pairs):
         parts["pair_rel"] += [{"head_ent": h, "tail_ent": t, "rel": rel, "prox": p}
                               for rel, p in helper._pair_relations(h, t).items()]
@@ -133,6 +123,12 @@ def _packed(grid, classes, cands, kg: KG, table_id="t") -> pd.DataFrame:
                               for ty, rk in types.items()]
             vocab |= set(types)
         parts["pid"] += [{"entity": ent, "rel": p} for p in sorted(kg.pids.get(ent, ()))]
+        for obj, plist in kg.lit_nbrs.get(ent, {}).items():
+            for pid, littype in plist:
+                unit = littype.split("-", 1)[1] if littype.startswith("Quantity-") else None
+                parts["lit_edge"].append({
+                    "entity": ent, "rel": pid, "obj": obj, "obj_type": littype,
+                    "unit_symbol": kg.unit_symbol.get(unit)})
     for ty in sorted(vocab):
         parts["supertype"] += [{"type": ty, "supertype": s} for s in kg.supertypes(ty)]
         parts["type_nb"] += [{"type": ty, "neighbor": n} for n in kg.type_graph(ty)]
@@ -288,6 +284,42 @@ def test_entity_literal_pairs_only():
     _assert_same(out, oracle)
     cpa = out[out["kind"] == "cpa"]
     assert set(zip(cpa["head_col"], cpa["tail_col"], cpa["rel"])) >= {(0, 1, "P577")}
+
+
+def test_quantity_with_unit_symbol():
+    """C7's base-unit branch: Quantity-Q11573 edges (unit symbol "m" in the
+    fixture KG) match "<n> m" cells, exactly or within the 0.95 gate. An
+    edge whose unit has no symbol never matches, even against a unit-less
+    cell that "<n> nan" would parse as — whether the missing symbol arrives
+    as None or as NaN."""
+    extra = [
+        {"subj": s, "pred": "P2044", "reverse": False, "obj": o,
+         "obj_kind": "literal", "obj_type": f"Quantity-{u}"}
+        for s, o, u in (("Q90", "35", "Q11573"), ("Q84", "11", "Q11573"),
+                        ("Q1490", "40", "Q11573"), ("Q64", "34", "Q99999"))
+    ]
+    kg = KG(fixtures.mini_kg()[1] + extra)
+    assert "Q99999" not in kg.unit_symbol
+    grid = [["Paris", "35 m"], ["London", "11 m"], ["Tokyo", "41 m"],
+            ["Berlin", "34"], ["Rome", "8848 m"]]
+    classes = {0: "entity", 1: "numeral_unit"}
+    cands = {(r, 0): _candidates(row[0], _labels(), MIN_SIM) for r, row in enumerate(grid)}
+    assert all(cands.values())
+    pdf = _packed(grid, classes, cands, kg)
+    out = annotate_tables(pdf)
+    oracle = TableOracle(grid, classes, cands, kg)
+    oracle.run()
+    _assert_same(out, oracle)
+    assert ("Q1490", "41 m") in oracle.lit_cpa
+    assert not any(ent == "Q64" for ent, _ in oracle.lit_cpa)
+    cpa = out[out["kind"] == "cpa"]
+    assert (0, 1, "P2044") in set(zip(cpa["head_col"], cpa["tail_col"], cpa["rel"]))
+
+    edge = pdf["kind"] == "lit_edge"
+    assert pdf.loc[edge, "unit_symbol"].isna().any()
+    nan = pdf.assign(unit_symbol=pdf["unit_symbol"].where(~edge | pdf["unit_symbol"].notna(),
+                                                         float("nan")))
+    pd.testing.assert_frame_equal(annotate_tables(nan), out, check_exact=True)
 
 
 def test_empty_candidate_set():

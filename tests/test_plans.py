@@ -351,3 +351,41 @@ class TestLookupPlan:
         assert "ArrowEvalPython" not in executed
         assert "BatchEvalPython" not in executed
         assert executed.count("MapInPandas") == 1
+
+
+class TestAnnotationPlan:
+    def test_kernel_input_runs_no_python_udf(self, spark, src_df, kg):
+        """Literal matching (C7) runs inside the annotation kernel: no plan
+        that building and evaluating the packed kernel input executes has a
+        Python UDF node. The KG-side frames are lazy checkpoints whose plans
+        run as their own SQL executions, so every execution since the build
+        started is checked, not only the packed frame's own plan."""
+        from table_annotation_spark.operators import lookup as lk
+        from table_annotation_spark.operators.annotation import build_inputs, pack_tables
+        from table_annotation_spark.operators.preprocessing import (
+            body_cells, column_meta, preprocess,
+        )
+        from table_annotation_spark.sources import kg_build
+
+        def plans():
+            store = spark._jsparkSession.sharedState().statusStore().executionsList()
+            return {store.apply(i).executionId(): store.apply(i).physicalPlanDescription()
+                    for i in range(store.size())}
+
+        labels, edges = kg
+        prep = preprocess(src_df).localCheckpoint(eager=True)
+        body = body_cells(prep).localCheckpoint(eager=True)
+        classes = lk.classify_columns(column_meta(prep), body).localCheckpoint(eager=True)
+        cand, _ = lk.lookup(body, classes, labels, lk.token_idf(labels))
+        cand = cand.localCheckpoint(eager=True)
+        before = set(plans())
+        df = pack_tables(
+            build_inputs(cand, body, classes, edges, kg_build.degrees(edges))
+        )
+        assert df.where("kind = 'lit_edge'").count()
+        assert df.collect()
+        new = [p for i, p in plans().items() if i not in before]
+        assert new
+        for p in new:
+            assert "ArrowEvalPython" not in p
+            assert "BatchEvalPython" not in p
