@@ -205,28 +205,6 @@ def textual_similarity(s1: str, s2: str) -> float:
     return (scores[0] + scores[1]) / 2.0
 
 
-def levenshtein(a: str, b: str) -> int:
-    """Plain Levenshtein (sub cost 1) — used for blocking-recall checks."""
-    la, lb = len(a), len(b)
-    if la == 0:
-        return lb
-    if lb == 0:
-        return la
-    if la > lb:
-        a, b, la, lb = b, a, lb, la
-    prev = list(range(la + 1))
-    for j, ch_b in enumerate(b, 1):
-        cur = [j] + [0] * la
-        for i, ch_a in enumerate(a, 1):
-            cur[i] = min(
-                prev[i] + 1,
-                cur[i - 1] + 1,
-                prev[i - 1] + (ch_a != ch_b),
-            )
-        prev = cur
-    return prev[la]
-
-
 def mixed_fuzzy_score(mention: str, label: str) -> float:
     """The reference's per-hit fuzzy score (lookup/es_lookup.py:123-174):
 

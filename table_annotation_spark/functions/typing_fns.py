@@ -304,20 +304,6 @@ def normalize_label(s: str) -> str:
     return re.sub(r"\s+", " ", s.replace('"', " ")).strip().lower()
 
 
-def is_valid_qid(s: str) -> bool:
-    """^[PQ]\\d+$ — knowledge_bases.py:63-67."""
-    return bool(re.match(r"^[PQ]\d+$", s))
-
-
-def prefix_entity(entity_id: str) -> str:
-    """Q→/entity/, P→/prop/direct/ — knowledge_bases.py:194-203."""
-    if entity_id.startswith("Q"):
-        return "http://www.wikidata.org/entity/" + entity_id
-    if entity_id.startswith("P"):
-        return "http://www.wikidata.org/prop/direct/" + entity_id
-    return entity_id
-
-
 def map_rank(rank: str) -> int:
     """PREFERRED→2, NORMAL→1, else 0 — knowledge_bases.py:182-192."""
     return {"PREFERRED": 2, "NORMAL": 1}.get(rank, 0)

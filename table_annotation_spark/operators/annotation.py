@@ -1,5 +1,6 @@
 """Stage 4 — annotate: CEA / CTA / CPA via the reference's exactly-4-pass
-dataflow (the reference's annotation/table_annotation.py:51-112).
+dataflow (the reference's annotation/table_annotation.py:51-112), and the
+triples assembled from them (table_annotation.py:114-132).
 
 Two halves:
 
@@ -7,17 +8,19 @@ Two halves:
   DataFrames that the kernel job computes: the per-table co-occurring entity
   pairs, the entity types, pid sets and literal edges, and the 1/2-hop
   relations of every distinct co-occurring pair. Every frame here is keyed
-  by entity or entity pair (``table_pairs`` only picks each table's slice).
+  by entity or entity pair (``table_pairs`` only picks each table's slice);
+  each table's slice of them is packed with its candidates and cells into
+  the one kernel input.
 - ``annotate_tables`` — everything per table, as ONE pandas kernel call per
   Spark partition (``repartition("table_id").mapInPandas``): literal
   matching (C7, each distinct value tuple scored once per call), context
-  scoring (C6/C10, the row pair gates, context entries and relation sets)
-  and passes 1–4. Nothing in them crosses tables, so each table's
-  candidates and its slice of the KG-side inputs travel to one partition,
-  and the passes run as vectorized pandas (merge / groupby / sort, no
-  per-row Python; only the C7 matcher runs per distinct tuple) over all of
-  the partition's tables at once, with ``table_id`` as the leading key of
-  every frame, join, group and sort:
+  scoring (C6/C10, the row pair gates, context entries and relation sets),
+  passes 1–4 and the table's triples. Nothing in them crosses tables, so
+  each table's candidates and its slice of the KG-side inputs travel to one
+  partition, and the passes run as vectorized pandas (merge / groupby /
+  sort, no per-row Python; only the C7 matcher runs per distinct tuple) over
+  all of the partition's tables at once, with ``table_id`` as the leading
+  key of every frame, join, group and sort:
 
     pass 1: entity_scores¹ = 0.1·sim (context weights not yet known)
             CEA¹ (all candidates) → CPA¹ (voting, all pairs)
@@ -27,6 +30,8 @@ Two halves:
     pass 4: literal-context restriction (C10 onlyLiteralContext) +
             entity_scores³ (last_step: contextless cells, potential candidates)
             CEA⁴ → CTA⁴ → CPA⁴ (all only_one)
+    triples: rank-1 CPA⁴ × rank-1 CEA⁴ of the head and tail cells
+             (or the tail's literal cell)
 
 Where the reference breaks ties by dict/stable-sort order we add
 deterministic tie-breaks (entity / rel / type ascending; rank 1 = output) —
@@ -62,48 +67,17 @@ LIT_CLASSES = ("date", "numeral_unit", "numeral", "textual")
 
 
 # --------------------------------------------------------------------- inputs
-@dataclass
-class AnnotInputs:
-    cand: DataFrame = None         # (table_id,row_idx,col_idx,cell,entity,sim)
-    col_classes: DataFrame = None  # (table_id,col_idx,col_class)
-    tbl: DataFrame = None          # (table_id,n_cols,n_data_rows)
-    lit_cells: DataFrame = None    # (table_id,row_idx,lit_col,lit_cell)
-    table_pairs: DataFrame = None  # (table_id,head_ent,tail_ent) co-occurring on a row
-    pair_rel: DataFrame = None     # (head_ent,tail_ent,rel,prox) all co-occurring pairs
-    lit_edges: DataFrame = None    # (entity,pid,obj,obj_type,unit_symbol)
-    types: DataFrame = None        # (entity,type,level,rank)
-    super_t: DataFrame = None      # (type,supertype)
-    type_nb: DataFrame = None      # (type,neighbor)
-    ent_pids: DataFrame = None     # (entity,pid)
-
-
-def _lit_cells(body: DataFrame, col_classes: DataFrame) -> DataFrame:
-    """The cells of literal-class columns (no candidates, no KG) — cheap
-    enough to rebuild on resume."""
-    lcols = col_classes.where(F.col("col_class").isin(*LIT_CLASSES))
-    return (
-        body.withColumnRenamed("cell", "lit_cell")
-        .join(lcols.select("table_id", "col_idx"), ["table_id", "col_idx"])
-        .select("table_id", "row_idx", F.col("col_idx").alias("lit_col"), "lit_cell")
-    )
-
-
-def build_light_inputs(body: DataFrame, col_classes: DataFrame) -> AnnotInputs:
-    """Just the input emit_triples() consumes (lit_cells) — used on resume
-    when cea/cta/cpa are already checkpointed and annotate() is skipped
-    entirely."""
-    return AnnotInputs(lit_cells=_lit_cells(body, col_classes))
-
-
 def build_inputs(
     cand: DataFrame,
     body: DataFrame,
     col_classes: DataFrame,
     edges: DataFrame,
     degrees: DataFrame,
-) -> AnnotInputs:
-    """Assemble the pass-invariant KG-side inputs (the scale-heavy global
-    joins). Per-table work is left to ``annotate_tables``.
+) -> DataFrame:
+    """The kernel input: each table's candidates, cells and shape plus its
+    slice of the pass-invariant KG-side inputs (the scale-heavy global
+    joins), as the tagged union the kernel reads (``KERNEL_PARTS``).
+    Per-table work is left to ``annotate_tables``.
 
     Each multi-consumer intermediate is a LAZY ``ckpt``: downstream plans see
     a LogicalRDD leaf, so analyzer cost stays bounded instead of accreting
@@ -159,18 +133,37 @@ def build_inputs(
         )
     )
 
-    return AnnotInputs(
-        cand=cand, col_classes=col_classes,
-        tbl=body.groupBy("table_id").agg(
+    lcols = col_classes.where(F.col("col_class").isin(*LIT_CLASSES))
+    tbl_ents = cand.select("table_id", "entity").distinct()
+    tbl_types = tbl_ents.join(types, "entity")
+    tbl_type_set = tbl_types.select("table_id", "type").distinct()
+    parts = {
+        "cand": cand.withColumn("cell_len", F.length("cell")),
+        "col": col_classes,
+        "shape": body.groupBy("table_id").agg(
             (F.max("col_idx") + 1).alias("n_cols"),
             F.countDistinct("row_idx").alias("n_data_rows"),
         ),
-        lit_cells=_lit_cells(body, col_classes),
-        table_pairs=table_pairs, pair_rel=pair_rel,
-        # one consumer (pack_tables), so no checkpoint
-        lit_edges=ctx.entity_literal_edges(ents, edges),
-        types=types, super_t=super_t, type_nb=type_nb, ent_pids=ent_pids,
-    )
+        "lit_cell": body.withColumnRenamed("cell", "lit_cell")
+        .join(lcols.select("table_id", "col_idx"), ["table_id", "col_idx"])
+        .withColumnRenamed("col_idx", "lit_col"),
+        # one consumer, so no checkpoint
+        "lit_edge": tbl_ents.join(ctx.entity_literal_edges(ents, edges), "entity")
+        .withColumnRenamed("pid", "rel"),
+        "pair_rel": table_pairs.join(pair_rel, ["head_ent", "tail_ent"]),
+        "type": tbl_types,
+        "supertype": tbl_type_set.join(super_t, "type"),
+        "type_nb": tbl_type_set.join(type_nb, "type"),
+        "pid": tbl_ents.join(ent_pids, "entity").withColumnRenamed("pid", "rel"),
+    }
+    frames = [
+        df.select(
+            "table_id", F.lit(kind).alias("kind"),
+            *[F.col(c).cast(_PACK_TYPES[c]) for c in KERNEL_PARTS[kind]],
+        )
+        for kind, df in parts.items()
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 # --------------------------------------------------------------------- packing
@@ -205,6 +198,8 @@ _PACK_TYPES = {
 CEA_COLS = ["row_idx", "col_idx", "entity", "sim", "score", "rank"]
 CTA_COLS = ["col_idx", "type", "score", "coverage", "rank"]
 CPA_COLS = ["head_col", "tail_col", "rel", "score", "coverage", "prox", "rank"]
+TRIPLE_COLS = ["row_idx", "head_col", "tail_col", "subj", "pred", "obj", "obj_kind",
+               "score"]
 _OUT_TYPES = {
     "kind": T.StringType(), "row_idx": T.IntegerType(),
     "col_idx": T.IntegerType(), "head_col": T.IntegerType(),
@@ -212,36 +207,9 @@ _OUT_TYPES = {
     "type": T.StringType(), "rel": T.StringType(), "sim": T.DoubleType(),
     "score": T.DoubleType(), "coverage": T.DoubleType(),
     "prox": T.DoubleType(), "rank": T.IntegerType(),
+    "subj": T.StringType(), "pred": T.StringType(), "obj": T.StringType(),
+    "obj_kind": T.StringType(),
 }
-
-
-def pack_tables(inp: AnnotInputs) -> DataFrame:
-    """Each table's candidates plus its slice of the KG-side inputs, as the
-    tagged union the kernel reads (``KERNEL_PARTS``)."""
-    tbl_ents = inp.cand.select("table_id", "entity").distinct()
-    tbl_types = tbl_ents.join(inp.types, "entity")
-    tbl_type_set = tbl_types.select("table_id", "type").distinct()
-    parts = {
-        "cand": inp.cand.withColumn("cell_len", F.length("cell")),
-        "col": inp.col_classes,
-        "shape": inp.tbl,
-        "lit_cell": inp.lit_cells,
-        "lit_edge": tbl_ents.join(inp.lit_edges, "entity")
-        .withColumnRenamed("pid", "rel"),
-        "pair_rel": inp.table_pairs.join(inp.pair_rel, ["head_ent", "tail_ent"]),
-        "type": tbl_types,
-        "supertype": tbl_type_set.join(inp.super_t, "type"),
-        "type_nb": tbl_type_set.join(inp.type_nb, "type"),
-        "pid": tbl_ents.join(inp.ent_pids, "entity").withColumnRenamed("pid", "rel"),
-    }
-    frames = [
-        df.select(
-            "table_id", F.lit(kind).alias("kind"),
-            *[F.col(c).cast(_PACK_TYPES[c]) for c in KERNEL_PARTS[kind]],
-        )
-        for kind, df in parts.items()
-    ]
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 # --------------------------------------------------------------------- kernel
@@ -712,10 +680,38 @@ def _unrelated_pairs(t: _Batch, cpa: pd.DataFrame) -> pd.DataFrame:
     return _anti(t.el_pairs, best, PAIR)
 
 
+def _triples(t: _Batch, cea: pd.DataFrame, cpa: pd.DataFrame) -> pd.DataFrame:
+    """Output assembly (table_annotation.py:114-132): for every rank-1 CPA
+    pair and row, subject = the head cell's rank-1 CEA, object = the tail
+    cell's rank-1 CEA (entity pairs, score = the lower of the two) or the
+    tail cell's non-empty literal (literal pairs, score = the subject's).
+    Rank 1 is the output (the reference's cea_annot[cell][0]): unique per
+    cell and per column pair. Only entity columns have CEA and only literal
+    columns have literal cells, so the tail merge alone tells the two kinds
+    apart (table_id + TRIPLE_COLS)."""
+    cea = cea[cea["rank"] == 1]
+    cpa = cpa[cpa["rank"] == 1]
+    head = _cols(cpa, head_col="head_col", tail_col="tail_col", pred="rel").merge(
+        _cols(cea, row_idx="row_idx", head_col="col_idx", subj="entity",
+              subj_score="score"), on=[TID, "head_col"],
+    )
+    tail_key = [TID, "row_idx", "tail_col"]
+    ent = head.merge(_cols(cea, row_idx="row_idx", tail_col="col_idx", obj="entity",
+                           obj_score="score"), on=tail_key)
+    lit = head.merge(_cols(t.lit_cells, row_idx="row_idx", tail_col="tail_col",
+                           obj="lit_cell"), on=tail_key)
+    lit = lit[lit["obj"].str.len() > 0]
+    out = pd.concat([
+        ent.assign(obj_kind="entity", score=np.minimum(ent["subj_score"], ent["obj_score"])),
+        lit.assign(obj_kind="literal", score=lit["subj_score"]),
+    ], ignore_index=True)
+    return out[[TID, *TRIPLE_COLS]]
+
+
 def annotate_tables(pdf: pd.DataFrame) -> pd.DataFrame:
     """The kernel: a batch of tables' packed inputs (``KERNEL_PARTS``) →
-    their final CEA / CTA / CPA rows, tagged by ``kind``. Each table's output
-    is the same whichever tables share its batch."""
+    their final CEA / CTA / CPA rows and their triples, tagged by ``kind``.
+    Each table's output is the same whichever tables share its batch."""
     t = _unpack(pdf)
     if t is None:
         return _output([])
@@ -744,7 +740,8 @@ def annotate_tables(pdf: pd.DataFrame) -> pd.DataFrame:
     cea4 = _cea(t, s3, cta=cta3, only_one=True, ctxless=ctxless, potential=potential)
     cta4 = _cta(t, cea4, only_one=True)
     cpa4 = _cpa(t, cea4, only_one=True, unrelated=unrelated)
-    return _output([("cea", cea4), ("cta", cta4), ("cpa", cpa4)])
+    return _output([("cea", cea4), ("cta", cta4), ("cpa", cpa4),
+                    ("triple", _triples(t, cea4, cpa4))])
 
 
 def _output(frames: list) -> pd.DataFrame:
@@ -768,7 +765,7 @@ class AnnotationResult:
     cea: DataFrame   # final only_one CEA (all kept ties, rank 1 = output)
     cta: DataFrame
     cpa: DataFrame
-    inputs: AnnotInputs
+    triples: DataFrame  # one per annotated (column pair, row)
 
 
 def annotate(
@@ -778,10 +775,11 @@ def annotate(
     edges: DataFrame,
     degrees: DataFrame,
     timings: dict | None = None,
-) -> AnnotationResult:
+) -> DataFrame:
     """Full 4-pass annotation (table_annotation.py:51-112): the global
     KG-side inputs, then one job running every table's passes, one kernel
-    call per partition."""
+    call per partition. Returns the kernel's kind-tagged output, eagerly
+    checkpointed; ``split`` views it as an ``AnnotationResult``."""
     import time as _t
 
     timings = timings if timings is not None else {}
@@ -789,26 +787,29 @@ def annotate(
 
     t0 = _t.time()
     with job_group(spark, "annot_build_inputs"):
-        inp = build_inputs(cand, body, col_classes, edges, degrees)
+        packed = build_inputs(cand, body, col_classes, edges, degrees)
     timings["build_inputs"] = round(_t.time() - t0, 2)
 
     t0 = _t.time()
     with job_group(spark, "annot_pass1"):
         schema = T.StructType(
-            [inp.cand.schema["table_id"]]
+            [cand.schema["table_id"]]
             + [T.StructField(c, t) for c, t in _OUT_TYPES.items()]
         )
         out = ckpt(
-            pack_tables(inp).repartition("table_id")
-            .mapInPandas(_annotate_partition, schema),
+            packed.repartition("table_id").mapInPandas(_annotate_partition, schema),
             eager=True,
         )
     timings["annotate_kernel"] = round(_t.time() - t0, 2)
+    return out
 
-    def split(kind: str, cols: list) -> DataFrame:
+
+def split(out: DataFrame) -> AnnotationResult:
+    """The kernel output's per-kind views."""
+    def view(kind: str, cols: list) -> DataFrame:
         return out.where(F.col("kind") == kind).select("table_id", *cols)
 
     return AnnotationResult(
-        cea=split("cea", CEA_COLS), cta=split("cta", CTA_COLS),
-        cpa=split("cpa", CPA_COLS), inputs=inp,
+        cea=view("cea", CEA_COLS), cta=view("cta", CTA_COLS),
+        cpa=view("cpa", CPA_COLS), triples=view("triple", TRIPLE_COLS),
     )

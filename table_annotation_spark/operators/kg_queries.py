@@ -281,8 +281,8 @@ def flagship_literals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ground truth: each customer CSV carries a birthdate column whose value
     equals the customer entity's P569 DateTime edge (flagship._birthdate_col
     — one shared expression), so literal matching scores 1.0, CPA resolves
-    the (customer, birthdate) pair to P569, and emit_triples produces exactly
-    one (customer, P569, birthdate) literal triple per customer. The balance
+    the (customer, birthdate) pair to P569, and the annotation kernel emits
+    exactly one (customer, P569, birthdate) literal triple per customer. The balance
     column intentionally produces NOTHING (Quantity-1 comparison disabled for
     reference parity, annotation_models.py:634-641) — the oracle's absence of
     P2218 rows pins that too."""

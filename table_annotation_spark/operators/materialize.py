@@ -1,11 +1,11 @@
-"""Stage 5 — materialize: CEA × CPA → (subj, pred, obj) triples, canonicalized.
+"""Stage 5 — materialize: the annotated triples, canonicalized.
 
-Reference analogue: the output assembly at
-/root/reference/annotation/table_annotation.py:114-132 (CEA/CPA dicts → URIs).
-The triple emission itself is this engine's "graph materialization"
-(north_star): for every annotated column pair and row, subject = CEA of the
-head cell, predicate = the pair's CPA, object = CEA of the tail cell (entity
-pairs) or the literal cell value (literal pairs).
+The triples (subject = CEA of the head cell, predicate = the pair's CPA,
+object = CEA of the tail cell or the literal cell value) are assembled per
+table inside the annotation kernel (``annotation._triples``), as the
+reference assembles them at the end of its per-table loop
+(annotation/table_annotation.py:114-132, CEA/CPA dicts → URIs). This stage
+is the engine's "graph materialization" (north_star) over them.
 
 Canonicalization: mention-level sha256 dedupe + connected components over the
 (mention ↔ entity) bipartite graph, computed with an iterative hash-min
@@ -17,59 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .annotation import AnnotationResult
-
-
-def emit_triples(result: AnnotationResult) -> DataFrame:
-    """(subj, pred, obj, obj_kind, table_id, row_idx, head_col, tail_col,
-    score) — one triple per annotated (pair, row). Only entity columns have
-    CEA and only literal columns have literal cells, so the tail join alone
-    tells entity pairs from literal pairs."""
-    inp = result.inputs
-    # rank 1 is the output (the reference's cea_annot[cell][0],
-    # table_annotation.py:115): unique per cell and per column pair, and
-    # always kept — it carries the top score (CEA) or the top ct (CPA)
-    cea = result.cea.where(F.col("rank") == 1)
-    cpa = result.cpa.where(F.col("rank") == 1)
-
-    head = cea.select(
-        "table_id", "row_idx", F.col("col_idx").alias("head_col"),
-        F.col("entity").alias("subj"), F.col("score").alias("subj_score"),
-    )
-    tail = cea.select(
-        "table_id", "row_idx", F.col("col_idx").alias("tail_col"),
-        F.col("entity").alias("obj"), F.col("score").alias("obj_score"),
-    )
-
-    ent_pairs = (
-        cpa.join(head, ["table_id", "head_col"])
-        .join(tail, ["table_id", "row_idx", "tail_col"])
-        .select(
-            "table_id", "row_idx", "head_col", "tail_col",
-            "subj", F.col("rel").alias("pred"), "obj",
-            F.lit("entity").alias("obj_kind"),
-            F.least("subj_score", "obj_score").alias("score"),
-        )
-    )
-    lit_pairs = (
-        cpa.join(head, ["table_id", "head_col"])
-        .join(
-            inp.lit_cells.select(
-                "table_id", "row_idx", F.col("lit_col").alias("tail_col"),
-                F.col("lit_cell").alias("obj"),
-            ),
-            ["table_id", "row_idx", "tail_col"],
-        )
-        .where(F.length("obj") > 0)
-        .select(
-            "table_id", "row_idx", "head_col", "tail_col",
-            "subj", F.col("rel").alias("pred"), "obj",
-            F.lit("literal").alias("obj_kind"),
-            F.col("subj_score").alias("score"),
-        )
-    )
-    return ent_pairs.unionByName(lit_pairs)
 
 
 def connected_components(

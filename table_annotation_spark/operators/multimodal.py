@@ -457,32 +457,3 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.select(*cols).mapInPandas(
         run, schema=f"{fields}, resized boolean, width int, height int"
     )
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing for formats without an in-container decoder: passes
-    metadata through, marks the payload as resized (payload transformation
-    stubbed). BMP payloads have a REAL path — see resize_images."""
-    return media.withColumn("width", F.lit(width)).withColumn(
-        "height", F.lit(height)
-    ).withColumn("resized", F.lit(True))
-
-
-def frame_sample_stub(media: DataFrame, every_ms: int) -> DataFrame:
-    """Video frame sampling plumbing: emits one row per sampled timestamp
-    using a JVM-side sequence explode (the real decoder would attach frame
-    bytes per row)."""
-    return (
-        media.where(F.col("kind") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce("duration_ms", F.lit(0)) - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ),
-        )
-        .select("media_id", "frame_ts_ms", "mime")
-    )

@@ -2,10 +2,11 @@
 CEA/CTA/CPA → canonicalized triples; with per-stage checkpoints, lineage and
 metrics (north_star resumability requirement).
 
-Stage layout mirrors SURVEY.md §7; each stage can persist its output to
-parquet under a run directory and later runs resume from the newest completed
-stage (per-partition checkpointing comes free from parquet task atomicity —
-a stage is complete iff its _SUCCESS marker exists).
+Stage layout mirrors SURVEY.md §7; each stage (prep, candidates,
+annotations, triples) can persist its output to parquet under a run
+directory and later runs resume from the newest completed stage
+(per-partition checkpointing comes free from parquet task atomicity — a
+stage is complete iff its _SUCCESS marker exists).
 """
 
 from __future__ import annotations
@@ -19,13 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import lookup as lk
-from ..operators.annotation import AnnotationResult, annotate
-from ..operators.materialize import canonicalize, emit_triples, with_uris
+from ..operators.annotation import annotate, split
+from ..operators.materialize import canonicalize, with_uris
 from ..session import ckpt as _sckpt
 from ..operators.preprocessing import body_cells, column_meta, preprocess
 from ..sources.embedded_tables import extract_manifest
-
-STAGES = ["prep", "candidates", "cea", "cta", "cpa", "triples"]
 
 
 def _localize(df: DataFrame) -> DataFrame:
@@ -166,32 +165,23 @@ class PipelineRun:
             self.metrics["lookup_sec"] = round(time.time() - t0, 3)
 
         t0 = time.time()
-        if all(self._is_done(s) for s in ("cea", "cta", "cpa")):
-            # all annotation passes checkpointed — skip annotate() entirely;
-            # emit_triples only needs the cheap frame inputs (column pairs,
-            # literal cells), rebuilt without any KG join
-            from ..operators.annotation import build_light_inputs
-
-            cea, cta, cpa = self._load("cea"), self._load("cta"), self._load("cpa")
-            result = AnnotationResult(
-                cea=cea, cta=cta, cpa=cpa,
-                inputs=build_light_inputs(body, classes),
-            )
+        # the kernel's kind-tagged output (CEA, CTA, CPA and triples) is the
+        # one annotation checkpoint
+        if self._is_done("annotations"):
+            annotations = self._load("annotations")
             self.metrics["annotate_resumed"] = True
         else:
-            result = annotate(
+            annotations = self._checkpoint("annotations", annotate(
                 cand, body, classes, self.edges, self.degrees, timings=self.metrics,
-            )
-            cea = self._checkpoint("cea", result.cea)
-            cta = self._checkpoint("cta", result.cta)
-            cpa = self._checkpoint("cpa", result.cpa)
+            ))
+        result = split(annotations)
         self.metrics["annotate_sec"] = round(time.time() - t0, 3)
 
         t0 = time.time()
         self.spark.sparkContext.setJobGroup(
             "stage_materialize", "stage_materialize"
         )
-        triples = emit_triples(result)
+        triples = result.triples
         cea_mentions = result.cea.join(
             cand.select("table_id", "row_idx", "col_idx", "entity", "mention_norm"),
             ["table_id", "row_idx", "col_idx", "entity"],
@@ -264,8 +254,8 @@ class PipelineRun:
             "body": _decode_tid(body),
             "classes": _decode_tid(classes),
             "candidates": _decode_tid(cand),
-            "cea": _decode_tid(cea),
-            "cta": _decode_tid(cta),
-            "cpa": _decode_tid(cpa),
+            "cea": _decode_tid(result.cea),
+            "cta": _decode_tid(result.cta),
+            "cpa": _decode_tid(result.cpa),
             "triples": triples_canon,
         }

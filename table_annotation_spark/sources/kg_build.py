@@ -1,5 +1,5 @@
-"""Stage 0 — kg_build: raw KG dumps → kg_labels / kg_edges / kg_degrees /
-kg_type_closure DataFrames.
+"""Stage 0 — kg_build: raw KG dumps → kg_labels / kg_edges / kg_degrees
+DataFrames.
 
 Replaces the reference's two external stores with flat columnar tables:
 - Elasticsearch surface-form index (/root/reference/data/lookup/entity_indexing.py:55-107)
@@ -177,38 +177,3 @@ def degrees(edges: DataFrame) -> DataFrame:
     return edges.groupBy(F.col("subj").alias("entity")).agg(
         F.count(F.lit(1)).alias("degree")
     )
-
-
-def type_closure(edges: DataFrame, levels: int = 3) -> DataFrame:
-    """(entity, type, level) — CTA's 3-level hierarchy
-    (knowledge_bases.py:136-180): level 1 = P31/P106/P39/P105 objects
-    (non-reverse), levels 2..n = P279 ancestors of the previous level.
-
-    Precomputed once per KG build; bounded self-joins (no iteration at query
-    time). At full Wikidata scale this is 2 self-joins of a P279-only slice —
-    small relative to the edge table and heavily reused.
-    """
-    lvl1 = (
-        edges.where((F.col("pred").isin(TYPE_PIDS)) & (~F.col("reverse")) & (F.col("obj_kind") == "entity"))
-        .select(F.col("subj").alias("entity"), F.col("obj").alias("type"))
-        .distinct()
-        .withColumn("level", F.lit(1))
-    )
-    p279 = (
-        edges.where((F.col("pred") == "P279") & (~F.col("reverse")))
-        .select(F.col("subj").alias("child"), F.col("obj").alias("parent"))
-        .distinct()
-    )
-    out = lvl1
-    prev = lvl1
-    for lv in range(2, levels + 1):
-        nxt = (
-            prev.join(p279, prev["type"] == p279["child"])
-            .select("entity", F.col("parent").alias("type"))
-            .distinct()
-            .withColumn("level", F.lit(lv))
-        )
-        out = out.unionByName(nxt)
-        prev = nxt
-    # keep the minimum level per (entity, type)
-    return out.groupBy("entity", "type").agg(F.min("level").alias("level"))

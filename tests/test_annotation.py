@@ -13,11 +13,8 @@ from pyspark.sql import functions as F
 
 from table_annotation_spark import fixtures
 from table_annotation_spark.operators import lookup as lk
-from table_annotation_spark.operators.annotation import annotate
-from table_annotation_spark.operators.materialize import (
-    canonicalize,
-    emit_triples,
-)
+from table_annotation_spark.operators.annotation import annotate, split
+from table_annotation_spark.operators.materialize import canonicalize
 from table_annotation_spark.operators.preprocessing import (
     body_cells,
     column_meta,
@@ -40,7 +37,7 @@ def annotated(spark, src_df, kg):
     idf = lk.token_idf(labels)
     cand, _ = lk.lookup(body, classes, labels, idf)
     cand = cand.localCheckpoint(eager=True)
-    result = annotate(cand, body, classes, edges, degrees)
+    result = split(annotate(cand, body, classes, edges, degrees))
     return {"result": result, "cand": cand, "body": body}
 
 
@@ -127,7 +124,7 @@ class TestCPA:
 
 class TestTriples:
     def test_triples_contain_movie_facts(self, annotated):
-        t = emit_triples(annotated["result"])
+        t = annotated["result"].triples
         cea_m = annotated["result"].cea.join(
             annotated["cand"].select(
                 "table_id", "row_idx", "col_idx", "entity", "mention_norm"
@@ -148,7 +145,7 @@ class TestTriples:
         assert any(s == "Q1" and p == "P577" for (s, p, o) in triples)
 
     def test_canonicalization_stable_ids(self, annotated):
-        t = emit_triples(annotated["result"])
+        t = annotated["result"].triples
         cea_m = annotated["result"].cea.join(
             annotated["cand"].select(
                 "table_id", "row_idx", "col_idx", "entity", "mention_norm"

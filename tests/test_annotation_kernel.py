@@ -6,8 +6,10 @@ from the cell typer, candidates from a fuzzy label match against the
 mini-KG, and the KG-side inputs from ``oracle.KG``. The same inputs are
 packed into the kernel's tagged-union frame and handed to
 ``oracle.TableOracle``; the final CEA tie sets, CTA types and CPA relations
-(with their scores) must be identical. A table's output must also be the
-same whichever other tables share its kernel call.
+(with their scores) must be identical. The kernel's triples must be the
+ones the emission rule gives over its own rank-1 CEA and CPA and the grid's
+literal cells. A table's output must also be the same whichever other
+tables share its kernel call.
 """
 
 from __future__ import annotations
@@ -179,6 +181,34 @@ def _assert_same(out: pd.DataFrame, o: TableOracle) -> None:
         {(h, t, a["rel"]): (a["score"], a["coverage"], a["prox"])
          for (h, t), v in o.cpa.items() for a in v},
     )
+    _assert_triples(out, o)
+
+
+def _assert_triples(out: pd.DataFrame, o: TableOracle) -> None:
+    """The emission rule, row by row: for every rank-1 CPA pair and row with
+    a rank-1 CEA head, the object is the tail's rank-1 CEA (score = the
+    lower of the two) or its non-empty literal cell (score = the head's)."""
+    top = out[out["rank"] == 1]
+    cea = {(int(r.row_idx), int(r.col_idx)): (r.entity, r.score)
+           for r in top[top["kind"] == "cea"].itertuples()}
+    want = {}
+    for p in top[top["kind"] == "cpa"].itertuples():
+        h, t = int(p.head_col), int(p.tail_col)
+        for row in range(o.n_rows):
+            if (row, h) not in cea:
+                continue
+            subj, s_score = cea[(row, h)]
+            if t in o.literal_cols:
+                if o.grid[row][t]:
+                    want[(row, h, t, subj, p.rel, o.grid[row][t], "literal")] = (s_score,)
+            elif (row, t) in cea:
+                obj, o_score = cea[(row, t)]
+                want[(row, h, t, subj, p.rel, obj, "entity")] = (min(s_score, o_score),)
+    tr = out[out["kind"] == "triple"]
+    got = {(int(r.row_idx), int(r.head_col), int(r.tail_col), r.subj, r.pred, r.obj,
+            r.obj_kind): (r.score,) for r in tr.itertuples()}
+    assert len(got) == len(tr)
+    _assert_close(got, want)
 
 
 def _assert_close(got: dict, want: dict) -> None:
@@ -342,18 +372,46 @@ def _no_context_table():
     return (grid, *_table(grid, _labels()))
 
 
+def _gap_table():
+    """Films with their cast and publication date, one empty date cell and
+    one cast cell that has no candidate."""
+    labels = {e: lbs[0] for e, lbs in _labels().items()}
+    grid = [[labels[f], labels[cast], date] for f, (cast, _, date) in sorted(FILMS.items())]
+    grid[1][2] = ""
+    grid[2][1] = "zzz qqq"
+    classes = {0: "entity", 1: "entity", 2: "date"}
+    cands = {(r, c): _candidates(grid[r][c], _labels(), MIN_SIM)
+             for r in range(len(grid)) for c in (0, 1)}
+    return grid, classes, {k: v for k, v in cands.items() if v}
+
+
+def test_gaps_give_no_triple():
+    """An empty literal cell and a tail entity cell without a candidate
+    give no triple; the same rows' other pairs still do."""
+    grid, classes, cands = _gap_table()
+    assert (2, 1) not in cands and len(cands) == 2 * len(grid) - 1
+    out, oracle = _run(grid, classes, cands)
+    _assert_same(out, oracle)
+    tr = out[out["kind"] == "triple"]
+    cells = set(zip(tr["row_idx"], tr["tail_col"]))
+    assert (1, 2) not in cells and (2, 1) not in cells
+    assert {(1, 1), (2, 2)} <= cells
+    assert set(tr["pred"]) == {"P161", "P577"}
+
+
 def _batch_cases() -> list[tuple]:
     """(grid, classes, cands) of every fixture table at both candidate
     floors, the seeded noisy tables and the edge cases: a single-column
     table, entity-to-literal pairs only and an empty candidate set (both
-    fixture tables), and a table with no recorded context."""
+    fixture tables), a table with no recorded context and one with gaps
+    (an empty literal cell, an entity cell without candidates)."""
     cases = []
     for path in sorted(TABLES):
         grid = _grid(TABLES[path])
         cases += [(grid, *_table(grid, _labels(), m)) for m in (MIN_SIM, NOISY_SIM)]
     cases += [_random_table(seed) for seed in range(40)]
     single = [[r[0]] for r in _grid(TABLES["data/capitals.csv"])]
-    cases += [(single, *_table(single, _labels())), _no_context_table()]
+    cases += [(single, *_table(single, _labels())), _no_context_table(), _gap_table()]
     return cases
 
 

@@ -34,10 +34,6 @@ class TestSimilarity:
             "abd", "abc"
         )
 
-    def test_levenshtein(self):
-        assert sim.levenshtein("kitten", "sitting") == 3
-        assert sim.levenshtein("", "ab") == 2
-
     def test_mixed_fuzzy_exact(self):
         assert math.isclose(sim.mixed_fuzzy_score("Paris", "Paris"), 1.0)
 
@@ -115,14 +111,6 @@ class TestTyping:
 
     def test_normalize_label(self):
         assert tf.normalize_label('  "Pulp   Fiction" ') == "pulp fiction"
-
-    def test_qid(self):
-        assert tf.is_valid_qid("Q42")
-        assert not tf.is_valid_qid("X42")
-
-    def test_prefix(self):
-        assert tf.prefix_entity("Q42").endswith("/entity/Q42")
-        assert tf.prefix_entity("P31").endswith("/prop/direct/P31")
 
     def test_rank(self):
         assert tf.map_rank("PREFERRED") == 2

@@ -73,7 +73,11 @@ class TestKgBuild:
         edges = kg_build.edges_from_jsonl(spark, ep)
         deg = {r["entity"]: r["degree"] for r in kg_build.degrees(edges).collect()}
         assert deg["Q1"] >= 2  # P31 fwd + P577 literal
-        closure = kg_build.type_closure(edges, levels=3).collect()
+        # the 3-level type closure that annotation reads
+        from table_annotation_spark.operators.annotation_context import entity_types
+
+        ents = spark.createDataFrame([("Q1",)], ["entity"])
+        closure = entity_types(ents, edges).collect()
         got = {(r["entity"], r["type"], r["level"]) for r in closure}
         assert ("Q1", "Q11424", 1) in got
         assert ("Q1", "Q2431196", 2) in got

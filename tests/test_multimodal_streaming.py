@@ -36,14 +36,6 @@ class TestMultimodal:
         with pytest.raises(Exception, match="empty media payload"):
             mm.extract_features(media_df, on_error="raise").collect()
 
-    def test_frame_sampling(self, spark, media_df):
-        frames = mm.frame_sample_stub(media_df, every_ms=30).collect()
-        assert [r["frame_ts_ms"] for r in frames] == [0, 30, 60, 90]
-
-    def test_resize_stub(self, spark, media_df):
-        out = mm.resize_stub(media_df, 128, 128)
-        assert out.where("width = 128 and height = 128").count() == media_df.count()
-
 
 class TestStreaming:
     def test_windowed_counts_match_batch(self, spark, tmp_path):

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from table_annotation_spark import fixtures
 from table_annotation_spark.operators import lookup as lk
-from table_annotation_spark.operators.annotation import annotate
+from table_annotation_spark.operators.annotation import annotate, split
 from table_annotation_spark.operators.preprocessing import (
     body_cells,
     column_meta,
@@ -40,7 +40,7 @@ def both(spark, src_df, kg):
     classes = lk.classify_columns(column_meta(prep), body).localCheckpoint(eager=True)
     cand, _ = lk.lookup(body, classes, labels, lk.token_idf(labels))
     cand = cand.localCheckpoint(eager=True)
-    result = annotate(cand, body, classes, edges, degrees)
+    result = split(annotate(cand, body, classes, edges, degrees))
 
     # shared inputs → oracle, per table
     body_rows = body.collect()

@@ -361,7 +361,7 @@ class TestAnnotationPlan:
         run as their own SQL executions, so every execution since the build
         started is checked, not only the packed frame's own plan."""
         from table_annotation_spark.operators import lookup as lk
-        from table_annotation_spark.operators.annotation import build_inputs, pack_tables
+        from table_annotation_spark.operators.annotation import build_inputs
         from table_annotation_spark.operators.preprocessing import (
             body_cells, column_meta, preprocess,
         )
@@ -379,9 +379,7 @@ class TestAnnotationPlan:
         cand, _ = lk.lookup(body, classes, labels, lk.token_idf(labels))
         cand = cand.localCheckpoint(eager=True)
         before = set(plans())
-        df = pack_tables(
-            build_inputs(cand, body, classes, edges, kg_build.degrees(edges))
-        )
+        df = build_inputs(cand, body, classes, edges, kg_build.degrees(edges))
         assert df.where("kind = 'lit_edge'").count()
         assert df.collect()
         new = [p for i, p in plans().items() if i not in before]

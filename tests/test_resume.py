@@ -43,7 +43,7 @@ class TestResume:
         assert len(t1) > 0
 
         # simulate a crash after lookup: drop the downstream stage outputs
-        for stage in ("cea", "cta", "cpa", "triples"):
+        for stage in ("annotations", "triples"):
             shutil.rmtree(os.path.join(env["ck"], stage), ignore_errors=True)
 
         run2, t2 = _run(env)
@@ -54,18 +54,18 @@ class TestResume:
         assert t1 == t2
 
     def test_resume_skips_annotation_passes(self, env, monkeypatch):
-        """When cea+cta+cpa checkpoints are all complete, annotate() must not
-        run at all on resume — only triples are re-derived."""
+        """When the annotations checkpoint is complete, annotate() must not
+        run at all on resume — only the canonical triples are re-derived."""
         os.makedirs(env["ck"], exist_ok=True)
         run1, t1 = _run(env)
 
-        # simulate a crash after the annotation passes: only triples missing
+        # simulate a crash after annotation: only triples missing
         shutil.rmtree(os.path.join(env["ck"], "triples"), ignore_errors=True)
 
         import table_annotation_spark.plans.pipeline as pl
 
         def _boom(*a, **k):  # pragma: no cover - must never fire
-            raise AssertionError("annotate() was called despite completed passes")
+            raise AssertionError("annotate() was called despite a completed annotations stage")
 
         monkeypatch.setattr(pl, "annotate", _boom)
         run2, t2 = _run(env)
@@ -79,5 +79,5 @@ class TestResume:
             m = json.load(fh)
         assert "total_sec" in m and m["total_sec"] > 0
         # lineage: every stage wrote a parquet with _SUCCESS
-        for stage in ("prep", "candidates", "cea", "cta", "cpa", "triples"):
+        for stage in ("prep", "candidates", "annotations", "triples"):
             assert os.path.exists(os.path.join(env["ck"], stage, "_SUCCESS"))
